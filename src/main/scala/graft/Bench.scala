@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver runs this per-round with
   * SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 and reads the single JSON
   * line. Each query is forced with a count(); a warmup pass on the
@@ -11,23 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM (not ICU) case mapping under UTF8_BINARY: Spark 4.1's ICU
-      // Lower/Upper path degrades 10-100x under many-core concurrency
-      // (contended interpreted path in CollationSupport.execBinaryICU);
-      // the JVM mapping is identical for the Latin-1 range and matches
-      // the DuckDB oracle's simple case folding.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("graft-bench")
 
     // warmup: JVM + codegen + parquet footer reads, plus the shared
     // adapter-store cache and word index — the reference's baseline is

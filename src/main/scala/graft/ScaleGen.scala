@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver's test tables: replicate each
@@ -42,15 +42,7 @@ object ScaleGen {
     // generator wall time. Empty/absent = all tables.
     val tableFilter = args.lift(3).map(_.split(",").map(_.trim).toSet)
     def wanted(t: String): Boolean = tableFilter.forall(_.contains(t))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("graft-scalegen")
 
     def load(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
     def roundUp10(v: Long): Long = (v / 10 + 1) * 10

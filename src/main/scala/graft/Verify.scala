@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args: @unchecked
     // optional 3rd arg: comma-separated query-name filter (debug aid)
     val only: Option[Set[String]] = rest.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which the vectorized
-      // reader rejects; read as Long nanos (queries normalize).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM case mapping (see Bench.scala): ASCII/Latin-1-identical to
-      // ICU, without Spark 4.1's contended ICU hot path
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -48,21 +48,6 @@ object Analytics {
     }
   }
 
-  /** broadcast bound in ROWS, derived from the session's broadcast
-    * byte threshold at ~16 bytes per (id, label) pair — past it the
-    * same plan runs as a shuffle join. A threshold of -1 is the user
-    * DISABLING broadcasts; honoring it means returning 0 here (every
-    * frontier takes the shuffle path), not substituting a default —
-    * an explicit broadcast() hint would override the very opt-out.
-    */
-  private def broadcastMaxRows(df: DataFrame): Long = {
-    val thresh = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
-    val bytes = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(thresh)
-    if (bytes <= 0) 0L else math.max(bytes / 16L, 1L)
-  }
-
   /** current nodes/links → GraphX graph (node id = vertex id) */
   def toGraphX(store: GraphStore): Graph[Long, Long] = {
     val nodeDf = store.nodes.select(col("id"))
@@ -92,104 +77,6 @@ object Analytics {
       .toDF("id", "component")
   }
 
-  /** Connected components as a pure DataFrame delta iteration —
-    * min-label propagation with an active frontier (semi-naive
-    * evaluation, the dataflow form of Pregel's vote-to-halt):
-    *
-    *  - labels start as comp(v) = v
-    *  - each round, only vertices whose label CHANGED last round push
-    *    it to their neighbors; candidate updates that lower a label
-    *    become the next frontier
-    *  - terminate when the frontier is empty
-    *
-    * Per round the work is one broadcast map-side join of the (small,
-    * shrinking) frontier against the cached symmetric adjacency, one
-    * aggregation over the candidate updates, and one broadcast merge
-    * into the label table — no full-graph shuffle after round one, so
-    * rounds get cheaper as the computation converges. At cluster scale
-    * the frontier broadcast is replaced by a shuffle join on the same
-    * plan shape when the frontier is large (Catalyst/AQE picks the
-    * strategy from runtime sizes); the adjacency stays cache-partitioned
-    * either way.
-    */
-  /** symmetric (node, nbr) adjacency in ONE scan of the edge plan —
-    * a union of two selects would execute the (possibly expensive)
-    * edge subplan twice. Cached; plan-equal across kHop/components so
-    * Spark's cache manager shares the materialization.
-    */
-  private[graft] def symmetricAdjacency(edges: DataFrame): DataFrame =
-    edges.select(explode(array(
-        struct(col("left").as("node"), col("right").as("nbr")),
-        struct(col("right").as("node"), col("left").as("nbr")))).as("e"))
-      .select(col("e.node").as("node"), col("e.nbr").as("nbr"))
-      .coalesce(sizedPartitions(edges)).cache()
-
-  def connectedComponentsDF(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val sym = symmetricAdjacency(edges)
-    try {
-      // broadcast the frontier only while it provably fits — past that,
-      // the same plan runs as a shuffle join (AQE may still downgrade it)
-      val broadcastMax = broadcastMaxRows(edges)
-      def hinted(df: DataFrame, rows: Long): DataFrame =
-        if (rows <= broadcastMax) broadcast(df) else df
-      var labels = nodes.select(col("id"), col("id").as("component"))
-        .localCheckpoint()
-      var frontier = labels // round 1: everyone is active
-      var active = frontier.count()
-      while (active > 0) {
-        // push the frontier's labels across edges; keep the min per target
-        val candidates = sym
-          .join(hinted(frontier.withColumnRenamed("id", "node"), active), "node")
-          .groupBy(col("nbr").as("id"))
-          .agg(min(col("component")).as("cand"))
-        // merge: a candidate below the current label updates it and
-        // re-activates the vertex. One materialization per round; the
-        // frontier and next labels are map-side projections of it.
-        val merged = labels
-          .join(hinted(candidates, active), Seq("id"), "left_outer")
-          .select(col("id"), col("component"), col("cand"))
-          .localCheckpoint()
-        frontier = merged.filter(col("cand") < col("component"))
-          .select(col("id"), col("cand").as("component"))
-        active = frontier.count()
-        labels = merged
-          .select(col("id"),
-            when(col("cand") < col("component"), col("cand"))
-              .otherwise(col("component")).as("component"))
-      }
-      labels
-    } finally {
-      // the adjacency cache only serves the rounds above — the
-      // returned labels derive from the per-round localCheckpoints, so
-      // release it on EVERY exit (a failed round must not leave the
-      // cache pinned) instead of holding one adjacency per distinct
-      // edge plan for the session's lifetime (the capBuckets/
-      // prEdgeMemo leak class)
-      sym.unpersist(false)
-    }
-  }
-
-  /** Connected components by union-find contraction — the fastest of
-    * the three variants and the one the bench runs.
-    *
-    * Level k: each partition runs an in-memory disjoint-set union over
-    * its edge block with union-by-min (the smaller root wins), then
-    * emits one (node → root) spanning-forest pair per distinct node it
-    * saw. That contracts a block of E edges to ≤ V_block pairs while
-    * preserving "root = min id seen so far", so unioning pairs across
-    * levels keeps converging on the global min of each component.
-    * Levels repeat with the partition count divided by `fanIn` until
-    * one block remains; the last block's DSU yields the final labels.
-    *
-    * Work is O(E α(V)) total across ~log_fanIn(P) rounds — no
-    * per-round full-graph shuffle, no diameter dependence (label
-    * propagation pays a round per hop the min label must travel; this
-    * pays a round per contraction level). At cluster scale the first
-    * level runs on every input split in parallel and each level
-    * shrinks data ~E/V-fold, the same shape as GraphFrames' big-star
-    * contraction. mapPartitions is warranted here: DSU is genuinely
-    * per-partition imperative state with no declarative equivalent.
-    */
   /** Forest-row count above which [[connectedComponentsDSU]] hands the
     * contracted forest to [[starComponents]] instead of fanning in to
     * one partition. The dispatch is a MEMORY bound, not a wall-clock
@@ -343,19 +230,6 @@ object Analytics {
         e.select(col("v").as("id"), col("v").as("component")).distinct())
   }
 
-  /** forest size after the first per-partition DSU contraction of a
-    * (left, right) edge table — the value the starRows dispatch in
-    * [[connectedComponentsDSU]] compares to its threshold (probe /
-    * capacity-planning helper)
-    */
-  private[graft] def firstContractionCount(edges: DataFrame): Long = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    dsuContract(edges.toDF("left", "right")
-      .select(col("left").as("a"), col("right").as("b"))
-      .as[(Long, Long)]).count()
-  }
-
   // one DSU pass over each partition of (a,b) pairs → (node, root)
   private def dsuContract(pairs: Dataset[(Long, Long)])
       : Dataset[(Long, Long)] = {
@@ -385,18 +259,37 @@ object Analytics {
       }
   }
 
+  /** Connected components by union-find contraction — the path every
+    * gate runs; GraphX [[connectedComponents]] is the reference it is
+    * tested against.
+    *
+    * Level k: each partition runs an in-memory disjoint-set union over
+    * its edge block with union-by-min (the smaller root wins), then
+    * emits one (node → root) spanning-forest pair per distinct node it
+    * saw. That contracts a block of E edges to ≤ V_block pairs while
+    * preserving "root = min id seen so far", so unioning pairs across
+    * levels keeps converging on the global min of each component.
+    * Levels repeat with the partition count divided by `fanIn` until
+    * one block remains; the last block's DSU yields the final labels.
+    *
+    * Work is O(E α(V)) total across ~log_fanIn(P) rounds — no
+    * per-round full-graph shuffle, no diameter dependence (label
+    * propagation pays a round per hop the min label must travel; this
+    * pays a round per contraction level). At cluster scale the first
+    * level runs on every input split in parallel and each level
+    * shrinks data ~E/V-fold, the same shape as GraphFrames' big-star
+    * contraction. mapPartitions is warranted here: DSU is genuinely
+    * per-partition imperative state with no declarative equivalent.
+    */
   def connectedComponentsDSU(nodes: DataFrame, edges: DataFrame,
       fanIn: Int = 16): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    def contract(pairs: Dataset[(Long, Long)]): Dataset[(Long, Long)] =
-      dsuContract(pairs)
-
     // materialize the first contraction: the edge plan may be
     // arbitrarily expensive (e.g. a similarity self-join feeding
     // dedup clustering), and both the level loop below and the final
     // label join would otherwise re-evaluate it once per reference
-    var forest = contract(edges.select(col("left").as("a"), col("right").as("b"))
+    var forest = dsuContract(edges.select(col("left").as("a"), col("right").as("b"))
       .as[(Long, Long)]).localCheckpoint()
     // DISPATCH: the fan-in tail below ends in ONE task whose hash map
     // holds every surviving node — a MEMORY bound, not a time
@@ -431,7 +324,7 @@ object Analytics {
         while (parts > 1) {
           parts = if (forestRows <= directRows) 1
                   else math.max(1, parts / fanIn)
-          forest = contract(forest.repartition(parts)).localCheckpoint()
+          forest = dsuContract(forest.repartition(parts)).localCheckpoint()
         }
         forest.toDF("id", "component")
       }
@@ -441,9 +334,9 @@ object Analytics {
   }
 
   /** store-level components over current nodes/links via union-find
-    * contraction (see connectedComponentsDSU). The GraphX Pregel and
-    * DataFrame delta-iteration variants above remain for pipelines
-    * that want a vertex-program or pure-Catalyst formulation.
+    * contraction (see connectedComponentsDSU). The GraphX Pregel
+    * variant above remains for pipelines that want a vertex-program
+    * formulation.
     */
   def connectedComponentsStore(store: GraphStore): DataFrame =
     connectedComponentsDSU(

@@ -105,8 +105,7 @@ object Dedup {
     def size: Int = map.synchronized(map.size())
   }
 
-  private[graft] def memoCap: Int =
-    sys.props.get("graft.memoCap").map(_.toInt).getOrElse(32)
+  private[graft] final val memoCap = 32
 
   /** Memo key for an operator input: the analyzed plan's semantic hash
     * FOLDED WITH a fingerprint of the plan's file-based leaves. The
@@ -169,14 +168,12 @@ object Dedup {
   /** Driver-heap budget for memoized single-path Bloom filters. The
     * entry-count LRU alone bounds the wrong resource — 32 entries of
     * caller-sized filters can pin multi-GB of driver heap — so this
-    * memo evicts by TOTAL BYTES (default 512 MB; each entry is already
+    * memo evicts by TOTAL BYTES (512 MB; each entry is already
     * individually capped by [[maxSingleBloomBits]]).
     */
-  private[graft] def bloomMemoBytes: Long =
-    sys.props.get("graft.bloom.memoBytes").map(_.toLong)
-      .getOrElse(512L << 20)
+  private[graft] final val bloomMemoBytes = 512L << 20
 
-  private[graft] final class ByteBoundedMemo[K](maxBytes: => Long) {
+  private[graft] final class ByteBoundedMemo[K](maxBytes: Long) {
     private var total = 0L
     private val map = new java.util.LinkedHashMap[K,
       org.apache.spark.util.sketch.BloomFilter](16, 0.75f, true)

@@ -205,7 +205,11 @@ object TextAnalysis {
     // counts instead was measured and rejected: the cache pins
     // corpus- or vocabulary-sized blocks per parameterization for a
     // one-exchange saving — the ADVICE.md capBuckets failure class.)
-    val tot = tok.agg(count(lit(1)).cast("double").as("total"))
+    // A corpus with no tokens has no model: nullif makes its zero total
+    // null, so every score is null as in the oracle (whose sum over no
+    // rows is null), without leaning on ln's null for an input of 0.
+    val tot = tok.agg(nullif(count(lit(1)).cast("double"), lit(0.0))
+      .as("total"))
     // top-V as orderBy+limit — Catalyst's TakeOrdered heap (per-
     // partition top-V, then a topV-bounded merge), NOT a global
     // row_number window, whose single-partition sort of the distinct-

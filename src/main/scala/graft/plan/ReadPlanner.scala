@@ -646,8 +646,7 @@ object ReadPlanner {
             // check-cost-vs-next-cost call the reference's and-
             // iterator producer choice makes. The probe count is a
             // limit over the cached index: bounded work either way.
-            val routeMax =
-              sys.props.get("graft.routeMax").map(_.toLong).getOrElse(1L << 19)
+            val routeMax = 1L << 19
             val selective =
               cand.limit((routeMax + 1).toInt).count() <= routeMax
             if (selective)

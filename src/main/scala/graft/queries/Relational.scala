@@ -165,7 +165,8 @@ object Relational extends QueryPack {
         // two-sided shuffle): per custkey, fold the two existence flags
         // map-side and keep O-and-not-F. EXCEPT's null-safe set
         // semantics (null = null, output distinct) are exactly
-        // groupBy's null grouping over distinct keys.
+        // groupBy's null grouping over distinct keys (RelationalSpec
+        // checks both folds against DataFrame except/intersect).
         statusFlagFold(o, col("__has_o") && !col("__has_f"))
       },
       Some("""SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
@@ -443,7 +444,7 @@ object Relational extends QueryPack {
     * map-side aggregation of the O/F existence flags; `keep` selects
     * the set operation (EXCEPT = O∧¬F, INTERSECT = O∧F)
     */
-  private def statusFlagFold(orders: DataFrame,
+  private[graft] def statusFlagFold(orders: DataFrame,
       keep: org.apache.spark.sql.Column): DataFrame =
     orders.filter(col("o_orderstatus").isin("O", "F"))
       .groupBy(col("o_custkey"))

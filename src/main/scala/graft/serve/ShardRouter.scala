@@ -71,7 +71,8 @@ object ShardRouter {
     * result pattern, and the merge's sort directions. Cached per query
     * string in [[StatementCache]] — on the point-read hot path the
     * locality analysis + vetting below costs ~2.4µs against a ~2.9µs
-    * per-shard probe (ServeProfile).
+    * per-shard probe (`perfbench/run.py --workload serve --trace 1`
+    * reports the probe as `serve.probe_us`).
     */
   final case class RoutedPlan(shardC: Constraint, flat: Seq[graft.gql.Pattern],
       sorted: Boolean, dirs: Array[Boolean],

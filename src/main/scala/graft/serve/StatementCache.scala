@@ -7,7 +7,8 @@ import graft.gql.{Constraint, Parser, Pattern}
 /** Prepared-statement cache for the serving tier: raw query text →
   * parsed AST + vetted serving plans.
   *
-  * Profiled on the qps benchmark class (ServeProfile, sf0.1): parsing
+  * Profiled on the qps benchmark class (sf0.1, a serving profiler
+  * since removed): parsing
   * a ~70-char read costs ~17µs against a ~7µs snapshot probe — a
   * steady-state server answering repeated query shapes (the
   * reference's serving regime, doc/a-brief-tour-of-graphd.md:197-204)
@@ -18,15 +19,14 @@ import graft.gql.{Constraint, Parser, Pattern}
   *
   * Bounded by EPOCH FLUSH rather than LRU: hits are lock-free
   * (ConcurrentHashMap.get); when the map passes `cap`
-  * (graft.serve.stmtCacheCap, default 64k) the whole epoch drops. A
+  * ([[cap]], 64k entries) the whole epoch drops. A
   * serving tier prefers a rare re-parse burst over taking an eviction
   * lock on every hit — with 32 clients at ~1M q/s a synchronized LRU
   * would serialize the hot path on exactly the queries it exists to
   * speed up.
   */
 private[graft] object StatementCache {
-  private def cap: Int =
-    sys.props.get("graft.serve.stmtCacheCap").map(_.toInt).getOrElse(1 << 16)
+  private final val cap = 1 << 16
 
   /** one parse, every serving plan derived from it:
     *  - `single`: the snapshot tier's flattened result pattern (None =

@@ -28,18 +28,11 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(comp(6L) == 6L)
   }
 
-  test("delta-iteration and union-find components agree with GraphX") {
-    import org.apache.spark.sql.functions.col
+  test("union-find components agree with GraphX") {
     val gx = Analytics.connectedComponents(fx).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nodes = fx.nodes.select(col("id"))
-    val edges = fx.links.filter(col("right").isNotNull)
-      .select(col("left"), col("right"))
-    val delta = Analytics.connectedComponentsDF(nodes, edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dsu = Analytics.connectedComponentsStore(fx).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(delta == gx)
     assert(dsu == gx)
   }
 

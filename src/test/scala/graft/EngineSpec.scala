@@ -281,4 +281,18 @@ class EngineSpec extends AnyFunSuite {
     assert(rows.head.getString(0) == "bottle of beer on the wall")
     assert(rows.head.getLong(1) == 3L)
   }
+
+  test("isa hop restricts by pointed-to node") {
+    val fx = GraphStore.fromSeq(spark, Seq(
+      node(1, name = Some("status_t")),   // type node for orders? not needed
+      node(2, value = Some("F")), node(3, value = Some("O")), // "orders"
+      node(4, value = Some("c1")), node(5, value = Some("c2")), // "customers"
+      link(10, left = 2, right = Some(4), typeguid = Some(1)), // F order -> c1
+      link(11, left = 3, right = Some(5), typeguid = Some(1)))) // O order -> c2
+    val ast = Parser.parseRead(
+      """read (node value~="c*" result=((value))
+        |  (<-right type="status_t" left->(value="F")))""".stripMargin)
+    val rows = ReadPlanner.plan(fx, ast).collect().map(_.getString(0)).toSeq
+    assert(rows == Seq("c1"))
+  }
 }

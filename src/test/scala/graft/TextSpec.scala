@@ -128,6 +128,17 @@ class TextSpec extends AnyFunSuite {
     assert(Guid.serialOf("123").contains(123L))
     assert(Guid.serialOf("zz").isEmpty)
   }
+
+  test("unigram log-prob scores a token-less corpus null, not infinite") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // every document tokenizes to nothing: the corpus total is zero
+    val blank = Seq((1L, "   "), (2L, "")).toDF("doc_id", "text")
+    val got = graft.operators.TextAnalysis
+      .unigramLogProbScore(blank, "doc_id", "text").collect()
+    assert(got.map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    assert(got.forall(_.isNullAt(1)), got.mkString(", "))
+  }
 }
 
 /** Property-style tests (seeded exhaustive samples): comparator keys

@@ -88,29 +88,37 @@ class VecMathSpec extends AnyFunSuite {
     }
   }
 
-  test("union-find components agree with delta iteration on random graphs") {
+  test("union-find components agree with GraphX on random graphs") {
     import spark.implicits._
     import graft.graph.Analytics
+    import graft.model.Primitive.{link, node}
+    import graft.store.GraphStore
     val rng = new scala.util.Random(11)
     for (trial <- 1 to 3) {
       val nV = 60 + trial * 40
       val nE = nV * 2
-      val edges = (1 to nE).map(_ =>
+      val pairs = (1 to nE).map(_ =>
         (1L + rng.nextInt(nV), 1L + rng.nextInt(nV)))
-        .toDF("left", "right")
+      val edges = pairs.toDF("left", "right")
       val nodes = (1 to nV).map(_.toLong).toDF("id")
+      // GraphX reference on a store of the same vertices and edges;
+      // link ids sit above every vertex id
+      val store = GraphStore.fromSeq(spark,
+        (1 to nV).map(v => node(v.toLong)) ++
+          pairs.zipWithIndex.map { case ((l, r), i) =>
+            link(nV + 1L + i, left = l, right = Some(r)) })
+      val gx = Analytics.connectedComponents(store)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val dsu = Analytics.connectedComponentsDSU(nodes, edges, fanIn = 2)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val delta = Analytics.connectedComponentsDF(nodes, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(dsu == delta, s"trial $trial")
-      // third algorithm, same answer: star alternation on the same
-      // random multigraph (self-loops/parallels included by chance)
+      assert(dsu == gx, s"trial $trial")
+      // star alternation on the same random multigraph
+      // (self-loops/parallels included by chance)
       System.setProperty("graft.cc.starRows", "0")
       try {
         val star = Analytics.connectedComponentsDSU(nodes, edges, fanIn = 2)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(star == delta, s"star trial $trial")
+        assert(star == gx, s"star trial $trial")
       } finally System.clearProperty("graft.cc.starRows")
     }
   }
