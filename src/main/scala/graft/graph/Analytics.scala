@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Memo
 import graft.store.GraphStore
 
 /** Graph analytics over the primitives graph (the capability layer the
@@ -362,15 +363,13 @@ object Analytics {
     * GraphX's internal formulation is not — so this variant is the one
     * wired into the DuckDB oracle gate.
     */
-  /** the weighted-edge table's memo: same BoundedMemo/CacheRefs
-    * lifecycle as the co-occurrence/LSH/triangle memos — repeat calls
+  /** the weighted-edge table's memo, keyed per regime: repeat calls
     * (bench reps, chained consumers) share one materialization and
-    * skip the materializing count, and LRU eviction unpersists the
-    * cache instead of the raw .cache() accumulating one pinned edge
-    * table per distinct store forever
+    * skip the materializing count, and LRU eviction releases the cache
+    * instead of the raw .cache() accumulating one pinned edge table per
+    * distinct store forever
     */
-  private val prEdgeMemo = new graft.operators.Dedup.BoundedMemo[
-    (Long, Int, Boolean)](graft.operators.Dedup.memoCap)
+  private val prEdgeMemo = Memo.frames[(Long, Int, Boolean)]
 
   /** Edge-count bound for PageRank's per-round rank attach. At or
     * under it each round BROADCASTS the rank vector (in-sum rows ≤
@@ -411,21 +410,12 @@ object Analytics {
     // regime: cache hash(src) — the per-round rank join rides the
     // cached layout instead (one V-row exchange of the rank side), and
     // the aggregate pays one narrow contribution exchange.
-    val eRows = graft.operators.Dedup.memoizedCount(edges)
+    val eRows = Memo.count(edges)
     val useBroadcast = eRows <= prBroadcastMaxRows
     val partCol = if (useBroadcast) "dst" else "src"
     val parts = sizedPartitions(edges)
-    val edgeKey = graft.operators.Dedup.planKey(edges)
-    // a regime flip over the SAME data (prBroadcastMaxRows sysprop
-    // change — same planKey, same memoized count, different dispatch)
-    // must not pin TWO full E-row edge caches; release the
-    // opposite-regime entry proactively instead of waiting for LRU
-    // eviction of the biggest cached structure in the module. (Data
-    // growth mints a NEW planKey — the old data's entry then ages out
-    // through LRU like every other memo's stale-data entries.)
-    prEdgeMemo.remove((edgeKey, parts, !useBroadcast))
     val cedges = prEdgeMemo.getOrElseUpdate(
-      (edgeKey, parts, useBroadcast), {
+      (Memo.planKey(edges), parts, useBroadcast), {
         val ce = edges
           .join(edges.groupBy("src").agg(count(lit(1)).as("od")), "src")
           .repartition(parts, col(partCol))
@@ -440,8 +430,8 @@ object Analytics {
         // plans against the known layout. The count is work round 1
         // pays anyway — moved, not added (a memo hit skips it).
         ce.count()
-        graft.operators.Dedup.Memoized(ce, Seq(ce))
-      })
+        Memo.Frame(ce, Seq(ce))
+      }).df
     // Iterate over the in-sum table only — vertices with no in-edges
     // hold the constant rank `reset` after round 1 and never need to be
     // materialized per round: r(s) = reset + (1-reset)·in_sum(s), with
@@ -525,13 +515,12 @@ object Analytics {
     * cap^2/2 per key, the same skew guard the LSH candidate
     * generation uses.
     */
-  private val cooccurMemo = new graft.operators.Dedup.BoundedMemo[
-    (Long, String, String, Int)](graft.operators.Dedup.memoCap)
+  private val cooccurMemo = Memo.frames[(Long, String, String, Int)]
 
   def cooccurrenceEdges(links: DataFrame, keyCol: String, memberCol: String,
       maxPerKey: Int = 256): DataFrame =
     cooccurMemo.getOrElseUpdate(
-      (graft.operators.Dedup.planKey(links), keyCol, memberCol, maxPerKey), {
+      (Memo.planKey(links), keyCol, memberCol, maxPerKey), {
         val base = links.select(col(keyCol).as("k"), col(memberCol).as("m"))
           .distinct()
         // CACHED: the pair self-join reads the capped membership from
@@ -548,8 +537,8 @@ object Analytics {
         val r = capped.toDF("k", "b")
         val out = l.join(r, l("k") === r("k") && col("a") < col("b"))
           .select(col("a"), col("b")).distinct().cache()
-        graft.operators.Dedup.Memoized(out, Seq(capped, out))
-      })
+        Memo.Frame(out, Seq(capped, out))
+      }).df
 
   /** Global triangle count by DEGREE-ORDERED ORIENTATION — the
     * standard scalable formulation: orient every undirected edge from
@@ -561,18 +550,17 @@ object Analytics {
     * two equi-join shuffles over the edge list, no adjacency
     * collection anywhere.
     */
-  private val triMemo = new graft.operators.Dedup.BoundedMemo[(Long, String)](
-    graft.operators.Dedup.memoCap)
+  private val triMemo = Memo.frames[(Long, String)]
 
   def triangleCount(edges: DataFrame): DataFrame =
     triMemo.getOrElseUpdate(
       // schema rides in the key like the sibling memos — the bare
       // 32-bit plan hash alone is too collision-prone to be a cache key
-      (graft.operators.Dedup.planKey(edges),
+      (Memo.planKey(edges),
         edges.columns.mkString(",")),
-      triangleOnce(edges))
+      triangleOnce(edges)).df
 
-  private def triangleOnce(edges: DataFrame): graft.operators.Dedup.Memoized = {
+  private def triangleOnce(edges: DataFrame): Memo.Frame = {
     // canonicalize to a < b (either input orientation), drop loops.
     // CACHED: the edge set feeds the degree table, the orientation
     // join, and the wedge-closing join — uncached, Catalyst replicates
@@ -609,6 +597,6 @@ object Analytics {
     val out = wedges
       .join(e, wedges("v1") === e("a") && wedges("v2") === e("b"))
       .agg(count(lit(1)).as("triangles"))
-    graft.operators.Dedup.Memoized(out, Seq(e, oriented))
+    Memo.Frame(out, Seq(e, oriented))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** Deduplication operators for training-data pipelines, each designed
   * for the 100 TB regime:
   *
@@ -25,120 +27,6 @@ import org.apache.spark.sql.functions._
   * deterministic across runs and engines.
   */
 object Dedup {
-
-  /** A memoized operator result plus every DataFrame it `.cache()`d —
-    * eviction must unpersist the INNER caches (shingle sets, verify
-    * inputs) too, or a long-lived service leaks storage one dedup
-    * parameterization at a time.
-    */
-  private[graft] final case class Memoized(df: DataFrame,
-      cached: Seq[DataFrame])
-
-  /** Refcounts over the cached DataFrames every memo holds, keyed by
-    * the ANALYZED plan's semantic hash — Spark's cache manager shares
-    * one materialization between plan-equal DataFrames, so two memo
-    * entries (even across different memos: the jaccard and LSH memos
-    * both cache the same shingle set) can hold the same cache block.
-    * Eviction must only unpersist when the LAST holder releases, or
-    * one memo's eviction silently degrades the survivors to full
-    * recomputation.
-    */
-  private[graft] object CacheRefs {
-    private val counts =
-      new java.util.concurrent.ConcurrentHashMap[Int, Integer]
-    private def key(df: DataFrame): Int =
-      df.queryExecution.analyzed.semanticHash()
-    def retain(df: DataFrame): Unit =
-      counts.merge(key(df), 1, (a, b) => a + b)
-    def release(df: DataFrame): Unit = {
-      val left = counts.merge(key(df), -1, (a, b) => a + b)
-      if (left <= 0) { counts.remove(key(df)); df.unpersist(false) }
-    }
-  }
-
-  /** Size-capped LRU memo for cached operator DataFrames. Within the
-    * cap, repeated same-parameter calls share one materialization (the
-    * reason the memos exist); past it, the least-recently-used entry's
-    * cache blocks are released — and unpersisted only when no other
-    * live memo entry anywhere still holds a plan-equal cache
-    * ([[CacheRefs]]).
-    */
-  private[graft] final class BoundedMemo[K](cap: Int)
-      extends BoundedMemoBase[K, Memoized](cap) {
-    override protected def onEvict(v: Memoized): Unit =
-      v.cached.foreach(CacheRefs.release)
-    override protected def onInsert(v: Memoized): Unit =
-      v.cached.foreach(CacheRefs.retain)
-    def getOrElseUpdate(k: K, v: => Memoized): DataFrame =
-      getOrElseUpdateValue(k, v).df
-  }
-
-  /** The shared bounded-LRU mechanism under every operator memo —
-    * value-type generic so plain-value memos (the IVF centroid table)
-    * use the exact same eviction/synchronization instead of a drifting
-    * copy.
-    */
-  private[graft] class BoundedMemoBase[K, V](cap: Int) {
-    protected def onEvict(v: V): Unit = ()
-    protected def onInsert(v: V): Unit = ()
-    private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        if (this.size() > cap) { onEvict(e.getValue); true } else false
-    }
-    def getOrElseUpdateValue(k: K, v: => V): V = map.synchronized {
-      val cur = map.get(k)
-      if (cur != null) cur
-      else {
-        val nv = v
-        onInsert(nv)
-        map.put(k, nv)
-        nv
-      }
-    }
-    /** proactive eviction — releases the entry's caches through the
-      * same onEvict path as LRU displacement (no-op when absent)
-      */
-    def remove(k: K): Unit = map.synchronized {
-      val v = map.remove(k)
-      if (v != null) onEvict(v)
-    }
-    def size: Int = map.synchronized(map.size())
-  }
-
-  private[graft] final val memoCap = 32
-
-  /** Memo key for an operator input: the analyzed plan's semantic hash
-    * FOLDED WITH a fingerprint of the plan's file-based leaves. The
-    * 32-bit plan hash alone cannot see data changes — rewriting a table
-    * at the same path yields a plan-equal DataFrame over new bytes, and
-    * a memo keyed on the plan would serve yesterday's result. Parquet
-    * (and every Spark file sink) mints unique part-file names per
-    * write, so hashing the input-file listing (already cached on the
-    * driver's FileIndex — no extra IO) catches same-path rewrites;
-    * in-memory leaves carry their rows inside the plan hash itself.
-    */
-  private[graft] def planKey(df: DataFrame): Long = {
-    var h = df.queryExecution.analyzed.semanticHash().toLong
-    val files = df.inputFiles
-    java.util.Arrays.sort(files, java.util.Comparator.naturalOrder[String]())
-    var i = 0
-    while (i < files.length) {
-      h = h * 1000003L + files(i).hashCode
-      i += 1
-    }
-    h * 31L + files.length
-  }
-
-  /** Corpus-count memo shared by every operator whose sizing decision
-    * needs |corpus| (LSH auto-bits, Bloom capacity): keyed on
-    * [[planKey]] so the count shares the lifecycle of any index built
-    * over the same input, and a repeat call costs zero jobs instead of
-    * a full corpus scan.
-    */
-  private val countMemo = new BoundedMemoBase[Long, java.lang.Long](memoCap)
-  private[graft] def memoizedCount(df: DataFrame): Long =
-    countMemo.getOrElseUpdateValue(
-      planKey(df), java.lang.Long.valueOf(df.count())).longValue
 
   /** Bits the sketch needs — BloomFilter's own optimal-m formula,
     * -n·ln(p)/ln(2)², computed here so the size GATE can run before any
@@ -173,50 +61,19 @@ object Dedup {
     */
   private[graft] final val bloomMemoBytes = 512L << 20
 
-  private[graft] final class ByteBoundedMemo[K](maxBytes: Long) {
-    private var total = 0L
-    private val map = new java.util.LinkedHashMap[K,
-      org.apache.spark.util.sketch.BloomFilter](16, 0.75f, true)
-    def getOrElseUpdateValue(k: K,
-        v: => org.apache.spark.util.sketch.BloomFilter)
-        : org.apache.spark.util.sketch.BloomFilter = synchronized {
-      val cur = map.get(k)
-      if (cur != null) cur
-      else {
-        val nv = v
-        map.put(k, nv)
-        total += nv.bitSize() / 8
-        // evict eldest-first (access order puts the fresh entry last,
-        // so it survives unless it alone exceeds the budget)
-        val it = map.entrySet().iterator()
-        while (total > maxBytes && map.size() > 1 && it.hasNext) {
-          val e = it.next()
-          total -= e.getValue.bitSize() / 8
-          it.remove()
-        }
-        nv
-      }
-    }
-    def size: Int = synchronized(map.size())
-    def totalBytes: Long = synchronized(total)
-  }
-
   /** history Bloom filters for [[incrementalNew]]'s single-filter path
     * — ~1.2 MB per million items at fpp 0.01, bounded by total bytes
     * ([[bloomMemoBytes]]), each entry gated by [[maxSingleBloomBits]]
     */
-  private val bloomMemo =
-    new ByteBoundedMemo[(Long, Long, Double)](bloomMemoBytes)
+  private val bloomMemo = new Memo[(Long, Long, Double),
+    org.apache.spark.util.sketch.BloomFilter](bloomMemoBytes, _.bitSize / 8)
 
-  /** persisted bucket-filter tables for the partitioned path, keyed on
-    * (history planKey, numBuckets, fpp); eviction unpersists
+  /** bucket-filter tables for the partitioned path, keyed on (history
+    * planKey, numBuckets, fpp); localCheckpointed, so eviction only
+    * drops the reference ([[buildBucketFilters]])
     */
-  private[graft] val bucketBloomMemo = new BoundedMemoBase[(Long, Int, Double),
-      org.apache.spark.sql.Dataset[(Int, Array[Byte])]](memoCap) {
-    override protected def onEvict(
-        v: org.apache.spark.sql.Dataset[(Int, Array[Byte])]): Unit =
-      v.unpersist(false)
-  }
+  private[graft] val bucketBloomMemo = new Memo[(Long, Int, Double),
+      org.apache.spark.sql.Dataset[(Int, Array[Byte])]](Memo.cap)
 
   /** how many times the partitioned-sketch path engaged (test probe) */
   private[graft] val partitionedBloomBuilds =
@@ -238,7 +95,7 @@ object Dedup {
     */
   private[graft] def singleSketch(hFp: DataFrame, items: Long,
       fpp: Double): org.apache.spark.util.sketch.BloomFilter =
-    bloomMemo.getOrElseUpdateValue((planKey(hFp), items, fpp), {
+    bloomMemo.getOrElseUpdate((Memo.planKey(hFp), items, fpp), {
       historySketchBuilds.incrementAndGet()
       hFp.stat.bloomFilter("fp", items, fpp)
     })
@@ -466,7 +323,7 @@ object Dedup {
       idCol: String, expectedItems: Long = -1L, fpp: Double = 0.01)
       : DataFrame = {
     val items = if (expectedItems > 0) expectedItems
-      else math.max(memoizedCount(hFp), 1L)
+      else math.max(Memo.count(hFp), 1L)
     if (bloomBits(items, fpp) <= maxSingleBloomBits) {
       // the filter is memoized on (history planKey, items, fpp): the
       // operator's natural shape is many batches against one immutable
@@ -478,8 +335,8 @@ object Dedup {
       partitionedBloomBuilds.incrementAndGet()
       val numBuckets = bloomNumBuckets(items, fpp)
       val perBucket = math.max(items / numBuckets, 1L)
-      val filters = bucketBloomMemo.getOrElseUpdateValue(
-        (planKey(hFp), numBuckets, fpp),
+      val filters = bucketBloomMemo.getOrElseUpdate(
+        (Memo.planKey(hFp), numBuckets, fpp),
         buildBucketFilters(hFp, numBuckets, perBucket, fpp,
           fullHistory = true))
       probeSplitBuckets(bFp, hFp, idCol, filters, numBuckets)
@@ -594,18 +451,17 @@ object Dedup {
   // operator, and returning the SAME DataFrame instance guarantees the
   // cached materialization is reused (plan-canonicalization equality
   // across separately-built self-join plans is not reliable)
-  private val pairMemo =
-    new BoundedMemo[(Long, String, String, Int, Double, Int)](memoCap)
+  private val pairMemo = Memo.frames[(Long, String, String, Int, Double, Int)]
 
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8, maxDf: Int = 1000): DataFrame =
     pairMemo.getOrElseUpdate(
-      (planKey(df), idCol, textCol, n,
+      (Memo.planKey(df), idCol, textCol, n,
         threshold, maxDf),
-      ngramJaccardPairsUncached(df, idCol, textCol, n, threshold, maxDf))
+      ngramJaccardPairsUncached(df, idCol, textCol, n, threshold, maxDf)).df
 
   private def ngramJaccardPairsUncached(df: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double, maxDf: Int): Memoized = {
+      textCol: String, n: Int, threshold: Double, maxDf: Int): Memo.Frame = {
     val sh = shingleSet(df, idCol, textCol, n).cache()
     val dfTab = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     val capped = sh.join(dfTab.filter(col("df") <= maxDf), "sh")
@@ -636,7 +492,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .cache()
-    Memoized(out, Seq(sh, out))
+    Memo.Frame(out, Seq(sh, out))
   }
 
   /** MinHash signature: k independent hash functions realized as
@@ -657,20 +513,20 @@ object Dedup {
     * band slice), then verify candidates with exact Jaccard.
     */
   private val lshMemo =
-    new BoundedMemo[(Long, String, String, Int, Int, Int, Double, Int)](memoCap)
+    Memo.frames[(Long, String, String, Int, Int, Int, Double, Int)]
 
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, maxBucket: Int = 100000): DataFrame =
     lshMemo.getOrElseUpdate(
-      (planKey(df), idCol, textCol, n, k,
+      (Memo.planKey(df), idCol, textCol, n, k,
         bands, threshold, maxBucket),
       minhashLshPairsUncached(df, idCol, textCol, n, k, bands, threshold,
-        maxBucket))
+        maxBucket)).df
 
   private def minhashLshPairsUncached(df: DataFrame, idCol: String,
       textCol: String, n: Int, k: Int, bands: Int,
-      threshold: Double, maxBucket: Int): Memoized = {
+      threshold: Double, maxBucket: Int): Memo.Frame = {
     val sig = minhashSignatures(df, idCol, textCol, n, k)
     val rowsPerBand = k / bands
     val banded0 = sig.select(col("id"),
@@ -688,9 +544,9 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
 
-    val (verified, sh) = verifyJaccardTracked(df, idCol, textCol, cand, n, threshold)
-    val out = verified.cache()
-    Memoized(out, Seq(sh, out))
+    val verified = verifyJaccardTracked(df, idCol, textCol, cand, n, threshold)
+    val out = verified.df.cache()
+    Memo.Frame(out, verified.cached :+ out)
   }
 
   /** Hot-bucket cap for LSH candidate generation: a bucket of B
@@ -773,22 +629,18 @@ object Dedup {
     * candidate generators, so the shingle cache it pins is released on
     * LRU eviction instead of leaking per direct call
     */
-  private val verifyMemo =
-    new BoundedMemo[(Long, Long, String, String, Int, Double)](memoCap)
+  private val verifyMemo = Memo.frames[(Long, Long, String, String, Int, Double)]
   def verifyJaccard(df: DataFrame, idCol: String, textCol: String,
       cand: DataFrame, n: Int, threshold: Double): DataFrame =
     verifyMemo.getOrElseUpdate(
-      (planKey(df), planKey(cand),
-        idCol, textCol, n, threshold), {
-        val (out, sh) = verifyJaccardTracked(df, idCol, textCol, cand,
-          n, threshold)
-        Memoized(out, Seq(sh))
-      })
+      (Memo.planKey(df), Memo.planKey(cand),
+        idCol, textCol, n, threshold),
+      verifyJaccardTracked(df, idCol, textCol, cand, n, threshold)).df
 
   /** verification plus the shingle cache it pinned (for memo eviction) */
   private def verifyJaccardTracked(df: DataFrame, idCol: String,
       textCol: String, cand: DataFrame, n: Int,
-      threshold: Double): (DataFrame, DataFrame) = {
+      threshold: Double): Memo.Frame = {
     val sh = shingleSet(df, idCol, textCol, n).cache()
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val inter = cand
@@ -803,7 +655,7 @@ object Dedup {
         round(col("inter") / (col("na") + col("nb") - col("inter")), 3))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    (out, sh)
+    Memo.Frame(out, Seq(sh))
   }
 
   /** Near-duplicate clustering: pairs → connected components → one
@@ -850,14 +702,14 @@ object Dedup {
     * one of d+1 (guaranteed recall; the pigeonhole trick behind
     * chunked simhash search). maxDist=3 gives 4 chunks of 15 bits.
     */
-  private val simhashMemo = new BoundedMemo[(Long, String, String, Int)](memoCap)
+  private val simhashMemo = Memo.frames[(Long, String, String, Int)]
 
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame =
     simhashMemo.getOrElseUpdate(
-      (planKey(df), idCol, textCol, maxDist),
+      (Memo.planKey(df), idCol, textCol, maxDist),
       { val out = simhashPairsUncached(df, idCol, textCol, maxDist).cache()
-        Memoized(out, Seq(out)) })
+        Memo.Frame(out, Seq(out)) }).df
 
   private def simhashPairsUncached(df: DataFrame, idCol: String,
       textCol: String, maxDist: Int): DataFrame = {

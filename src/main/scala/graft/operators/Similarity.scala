@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Scale design:
@@ -93,20 +95,19 @@ object Similarity {
     * touching the same (df, params) shares one materialization via
     * plan-equality (renames happen outside the cached plan).
     */
-  private val sigMemo =
-    new Dedup.BoundedMemo[(Long, String, String, Int, Int, Int)](Dedup.memoCap)
+  private val sigMemo = Memo.frames[(Long, String, String, Int, Int, Int)]
 
   private[graft] def probeSigs(df: DataFrame, idCol: String, vecCol: String,
       bits: Int, nProbes: Int, dims: Int): DataFrame =
     sigMemo.getOrElseUpdate(
-      (Dedup.planKey(df), idCol, vecCol, bits,
+      (Memo.planKey(df), idCol, vecCol, bits,
         nProbes, dims),
       { val out = df.select(col(idCol).cast("long").as("id"),
             posexplode(array((0 until nProbes).map(p =>
               rhpSignature(col(vecCol), bits, dims, seed = 42 + p)): _*))
               .as(Seq("probe", "sig")))
           .cache()
-        Dedup.Memoized(out, Seq(out)) })
+        Memo.Frame(out, Seq(out)) }).df
 
   /** Approximate top-k: candidates share an exact signature bucket in
     * at least one of `nProbes` independent hyperplane sets; candidates
@@ -190,14 +191,13 @@ object Similarity {
     * identical deterministic result. Same bounded-LRU mechanism as
     * every other operator memo (plain-value instantiation).
     */
-  private val centroidMemo = new Dedup.BoundedMemoBase[
-    (Long, String, String, Int, Int, Int), Array[(Int, Array[Double])]](
-    Dedup.memoCap)
+  private val centroidMemo = new Memo[(Long, String, String, Int, Int, Int),
+    Array[(Int, Array[Double])]](Memo.cap)
 
   def ivfCentroids(df: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int, sampleN: Int = 1 << 17): Array[(Int, Array[Double])] =
-    centroidMemo.getOrElseUpdateValue(
-      (Dedup.planKey(df), idCol, vecCol,
+    centroidMemo.getOrElseUpdate(
+      (Memo.planKey(df), idCol, vecCol,
         nlist, iters, sampleN),
       trainCentroids(df, idCol, vecCol, nlist, iters, sampleN))
 
@@ -205,35 +205,37 @@ object Similarity {
       nlist: Int, iters: Int, sampleN: Int): Array[(Int, Array[Double])] = {
     import graft.functions.GraphdFunctions.vec_nearest
     val train = trainSample(df, idCol, vecCol, sampleN).cache()
-    // init: ids < nlist (nlist rows — the only other driver landing)
-    var cents: Array[(Int, Array[Double])] = train
-      .filter(col("id") < nlist).collect()
-      .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(cents.nonEmpty,
-      s"IVF init: training sample has no ids < nlist=$nlist — the " +
-        "id<nlist init convention needs a dense near-zero id space")
-    for (_ <- 1 to iters) {
-      // ORDER-INDEPENDENT mean: a plain double avg's partial-sum order
-      // varies with partitioning/scheduling, so a mean landing within
-      // an ulp of a 5e-7 rounding boundary would flake run to run.
-      // Decimal addition is exact, so the sum (and thus the rounded
-      // mean) is identical under any aggregation order.
-      val means = train
-        .select(element_at(vec_nearest(col("vec"), cents, 1), 1).as("cid"),
-          posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy("cid", "d")
-        .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1)))
-          .cast("double").as("m"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-      cents = means.groupBy(_._1).toArray.sortBy(_._1).map { case (cid, ds) =>
-        (cid, ds.sortBy(_._2).map(t =>
-          BigDecimal(t._3).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble))
+    // released on every exit: the init require throws past it
+    try {
+      // init: ids < nlist (nlist rows — the only other driver landing)
+      var cents: Array[(Int, Array[Double])] = train
+        .filter(col("id") < nlist).collect()
+        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
+        .sortBy(_._1)
+      require(cents.nonEmpty,
+        s"IVF init: training sample has no ids < nlist=$nlist — the " +
+          "id<nlist init convention needs a dense near-zero id space")
+      for (_ <- 1 to iters) {
+        // ORDER-INDEPENDENT mean: a plain double avg's partial-sum order
+        // varies with partitioning/scheduling, so a mean landing within
+        // an ulp of a 5e-7 rounding boundary would flake run to run.
+        // Decimal addition is exact, so the sum (and thus the rounded
+        // mean) is identical under any aggregation order.
+        val means = train
+          .select(element_at(vec_nearest(col("vec"), cents, 1), 1).as("cid"),
+            posexplode(col("vec")).as(Seq("d", "x")))
+          .groupBy("cid", "d")
+          .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1)))
+            .cast("double").as("m"))
+          .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+        cents = means.groupBy(_._1).toArray.sortBy(_._1).map { case (cid, ds) =>
+          (cid, ds.sortBy(_._2).map(t =>
+            BigDecimal(t._3).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+              .toDouble))
+        }
       }
-    }
-    train.unpersist()
-    cents
+      cents
+    } finally train.unpersist()
   }
 
   /** the `n` nearest centroid ids (L2 asc, cid-asc tiebreak) for a
@@ -255,8 +257,7 @@ object Similarity {
     * of all of it, and unlike multi-probe LSH each vector lives in
     * exactly ONE list, so no candidate dedup pass is needed.
     */
-  private val invMemo =
-    new Dedup.BoundedMemo[(Long, String, String, Int, Int, Int)](Dedup.memoCap)
+  private val invMemo = Memo.frames[(Long, String, String, Int, Int, Int)]
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
@@ -270,15 +271,15 @@ object Similarity {
     // (corpus, params) and cached: the index is the serving structure
     // probes hit repeatedly (at 100 TB it persists, partitioned by cid)
     val inv = invMemo.getOrElseUpdate(
-      (Dedup.planKey(corpus), idCol, vecCol,
+      (Memo.planKey(corpus), idCol, vecCol,
         nlist, iters, sampleN), {
         val built = corpus.select(
           element_at(nearestCids(col(vecCol), cents, 1), 1).as("cid"),
           col(idCol).cast("long").as("n_id"),
           col(vecCol).as("n_vec"), norm(col(vecCol)).as("n_norm"))
           .cache()
-        Dedup.Memoized(built, Seq(built))
-      })
+        Memo.Frame(built, Seq(built))
+      }).df
     // nprobe nearest lists per query, again a projection
     val probes = queries.select(col(idCol).cast("long").as("q_id"),
       col(vecCol).as("q_vec"), norm(col(vecCol)).as("q_norm"),
@@ -316,17 +317,6 @@ object Similarity {
     * ladder's maxBits): past this, maxBucket capping is the guard. */
   val AutoSigWidth = 24
 
-  /** Corpus-count memo: the auto-sizing count shares the signature
-    * index's lifecycle. Without it every cosineNearDupPairs call pays a
-    * full corpus scan BEFORE any real work — a driver-blocking COUNT
-    * job per invocation at 100 TB even when the signatures themselves
-    * are cache-hits — and a same-path table rewrite could size buckets
-    * from different data than the cached signatures. planKey folds the
-    * input-file fingerprint, closing both holes with one key.
-    */
-  private[graft] def memoizedCount(df: DataFrame): Long =
-    Dedup.memoizedCount(df)
-
   /** embedding-cosine near-duplicate pairs above a threshold, via LSH
     * buckets (the embedding flavor of Dedup). `bits <= 0` (the
     * default) auto-sizes the bucket key to the corpus via autoSigBits:
@@ -344,7 +334,7 @@ object Similarity {
     val sigs0 =
       if (bits > 0) probeSigs(df, idCol, vecCol, bits, nProbes, dims)
       else {
-        val useBits = autoSigBits(memoizedCount(df))
+        val useBits = autoSigBits(Memo.count(df))
         // mask OUTSIDE the memoized full-width index: every corpus
         // size shares one cached signature materialization
         probeSigs(df, idCol, vecCol, AutoSigWidth, nProbes, dims)
@@ -438,15 +428,15 @@ object Similarity {
     * SURVIVING j values, not necessarily 0..ksub-1, and the per-
     * subspace codebook carries (j, centroid) pairs in j order.
     */
-  private val pqMemo = new Dedup.BoundedMemoBase[
+  private val pqMemo = new Memo[
     (Long, String, String, Int, Int, Int, Int, Int),
-    Array[Array[(Int, Array[Double])]]](Dedup.memoCap)
+    Array[Array[(Int, Array[Double])]]](Memo.cap)
 
   def pqCodebooks(df: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, iters: Int, dims: Int,
       sampleN: Int = 1 << 17): Array[Array[(Int, Array[Double])]] =
-    pqMemo.getOrElseUpdateValue(
-      (Dedup.planKey(df), idCol, vecCol, m, ksub, iters, dims, sampleN),
+    pqMemo.getOrElseUpdate(
+      (Memo.planKey(df), idCol, vecCol, m, ksub, iters, dims, sampleN),
       trainPqCodebooks(df, idCol, vecCol, m, ksub, iters, dims, sampleN))
 
   private def trainPqCodebooks(df: DataFrame, idCol: String,
@@ -463,52 +453,54 @@ object Similarity {
         posexplode(array((0 until m).map(i =>
           slice(col("vec"), i * dsub + 1, dsub)): _*)).as(Seq("m", "sv")))
       .cache()
-    var cbs: Array[Array[(Int, Array[Double])]] = {
-      val init = sub.filter(col("id") < ksub).collect()
-        .map(r => (r.getInt(1), r.getLong(0).toInt, r.getSeq[Double](2).toArray))
-      // fail BEFORE the Lloyd rounds, not after them: the id<ksub init
-      // convention (shared with ivfCentroids, and what the SQL oracle
-      // replays) assumes the sample's id space starts near 0 — a
-      // sparse/offset id space would otherwise train for `iters`
-      // rounds on zero centroids and die in the post-training require
-      require(init.nonEmpty,
-        s"PQ init: training sample has no ids < ksub=$ksub — the " +
-          "id<ksub init convention needs a dense near-zero id space " +
-          "(remap ids or lower ksub)")
-      (0 until m).toArray.map(i =>
-        init.filter(_._1 == i).map(t => (t._2, t._3)).sortBy(_._1))
-    }
-    for (_ <- 1 to iters) {
-      val cbDf = broadcast(cbs.zipWithIndex.flatMap { case (cb, i) =>
-        cb.map { case (j, v) => (i, j, v.toSeq) }
-      }.toSeq.toDF("m", "j", "cvec"))
-      val w = Window.partitionBy(col("id"), col("m"))
-        .orderBy(col("d2").asc, col("j").asc)
-      val assigned = sub.join(cbDf, "m")
-        .withColumn("d2", l2sq(col("sv"), col("cvec")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-      // ORDER-INDEPENDENT decimal mean, 6dp-rounded — see
-      // trainCentroids for why (engine- and partitioning-portable)
-      val means = assigned
-        .select(col("m"), col("j"), posexplode(col("sv")).as(Seq("d", "x")))
-        .groupBy(col("m"), col("j"), col("d"))
-        .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1)))
-          .cast("double").as("mu"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-      cbs = (0 until m).toArray.map { i =>
-        means.filter(_._1 == i).groupBy(_._2).toArray.sortBy(_._1).map {
-          case (j, ds) => (j, ds.sortBy(_._3).map(t =>
-            BigDecimal(t._4).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-              .toDouble))
+    // released on every exit: the init require throws past it
+    try {
+      var cbs: Array[Array[(Int, Array[Double])]] = {
+        val init = sub.filter(col("id") < ksub).collect()
+          .map(r => (r.getInt(1), r.getLong(0).toInt, r.getSeq[Double](2).toArray))
+        // fail BEFORE the Lloyd rounds, not after them: the id<ksub init
+        // convention (shared with ivfCentroids, and what the SQL oracle
+        // replays) assumes the sample's id space starts near 0 — a
+        // sparse/offset id space would otherwise train for `iters`
+        // rounds on zero centroids and die in the post-training require
+        require(init.nonEmpty,
+          s"PQ init: training sample has no ids < ksub=$ksub — the " +
+            "id<ksub init convention needs a dense near-zero id space " +
+            "(remap ids or lower ksub)")
+        (0 until m).toArray.map(i =>
+          init.filter(_._1 == i).map(t => (t._2, t._3)).sortBy(_._1))
+      }
+      for (_ <- 1 to iters) {
+        val cbDf = broadcast(cbs.zipWithIndex.flatMap { case (cb, i) =>
+          cb.map { case (j, v) => (i, j, v.toSeq) }
+        }.toSeq.toDF("m", "j", "cvec"))
+        val w = Window.partitionBy(col("id"), col("m"))
+          .orderBy(col("d2").asc, col("j").asc)
+        val assigned = sub.join(cbDf, "m")
+          .withColumn("d2", l2sq(col("sv"), col("cvec")))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+        // ORDER-INDEPENDENT decimal mean, 6dp-rounded — see
+        // trainCentroids for why (engine- and partitioning-portable)
+        val means = assigned
+          .select(col("m"), col("j"), posexplode(col("sv")).as(Seq("d", "x")))
+          .groupBy(col("m"), col("j"), col("d"))
+          .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1)))
+            .cast("double").as("mu"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+        cbs = (0 until m).toArray.map { i =>
+          means.filter(_._1 == i).groupBy(_._2).toArray.sortBy(_._1).map {
+            case (j, ds) => (j, ds.sortBy(_._3).map(t =>
+              BigDecimal(t._4).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+                .toDouble))
+          }
         }
       }
-    }
-    sub.unpersist()
-    cbs.zipWithIndex.foreach { case (cb, i) =>
-      require(cb.nonEmpty, s"PQ subspace $i lost every codebook entry") }
-    cbs
+      cbs.zipWithIndex.foreach { case (cb, i) =>
+        require(cb.nonEmpty, s"PQ subspace $i lost every codebook entry") }
+      cbs
+    } finally sub.unpersist()
   }
 
   /** PQ encode as a compiled column: for each subspace, an ordered
@@ -603,8 +595,8 @@ object Similarity {
     * scores are ordered folds rounded to 6dp, ranks tiebreak on n_id —
     * so a SQL oracle reproduces the output byte-for-byte.
     */
-  private val pqInvMemo = new Dedup.BoundedMemo[
-    (Long, String, String, Int, Int, Int, Int, Int, Int, Int)](Dedup.memoCap)
+  private val pqInvMemo =
+    Memo.frames[(Long, String, String, Int, Int, Int, Int, Int, Int, Int)]
 
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
@@ -622,7 +614,7 @@ object Similarity {
     // index; serving one sampleN's codes against another's codebooks
     // mis-routes and mis-scores)
     val inv = pqInvMemo.getOrElseUpdate(
-      (Dedup.planKey(corpus), idCol, vecCol, nlist, iters, m, ksub,
+      (Memo.planKey(corpus), idCol, vecCol, nlist, iters, m, ksub,
         pqIters, dims, sampleN), {
         val built = corpus.select(
           element_at(nearestCids(col(vecCol), cents, 1), 1).as("cid"),
@@ -630,8 +622,8 @@ object Similarity {
           pqEncode(col(vecCol), cbs, dims).as("code"),
           norm(col(vecCol)).as("n_norm"))
           .cache()
-        Dedup.Memoized(built, Seq(built))
-      })
+        Memo.Frame(built, Seq(built))
+      }).df
     val probes = queries.select(col(idCol).cast("long").as("q_id"),
       col(vecCol).as("q_vec"), norm(col(vecCol)).as("q_norm"),
       pqAdcLut(col(vecCol), cbs, dims).as("q_lut"),

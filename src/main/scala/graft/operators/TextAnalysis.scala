@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language id, fingerprinting.
   *
@@ -246,15 +248,14 @@ object TextAnalysis {
     * consumer (it is a trivial per-row expression, and keeping floats
     * out of the table keeps it engine-portable).
     */
-  private val tfidfMemo = new graft.operators.Dedup.BoundedMemo[
-    (Long, String, String)](graft.operators.Dedup.memoCap)
+  private val tfidfMemo = Memo.frames[(Long, String, String)]
 
   def tfidfStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     tfidfMemo.getOrElseUpdate(
-      (graft.operators.Dedup.planKey(docs), idCol, textCol), {
+      (Memo.planKey(docs), idCol, textCol), {
         // corpus count through the shared memo: a repeat call (bench
         // reps, chained consumers) costs zero jobs instead of a scan
-        val n = graft.operators.Dedup.memoizedCount(docs)
+        val n = Memo.count(docs)
         val tok = docs.select(col(idCol),
             explode(tokens(lower(col(textCol)))).as("token"))
           .filter(col("token") =!= "")
@@ -279,8 +280,8 @@ object TextAnalysis {
         val out = tf.join(df_, "token")
           .select(col(idCol), col("token"), col("tf"), col("df"),
             lit(n).as("n_docs"))
-        graft.operators.Dedup.Memoized(out, Seq(tf))
-      })
+        Memo.Frame(out, Seq(tf))
+      }).df
 
   /** the standard smoothed tf-idf weight over a [[tfidfStats]] row —
     * the consumer-side expression kept out of the gated table

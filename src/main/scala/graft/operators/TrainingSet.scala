@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** Training-set assembly operators: the last pipeline stage before a
   * tokenized corpus ships to a trainer — packing documents into
   * fixed-length training sequences, and the deterministic global
@@ -37,22 +39,21 @@ object TrainingSet {
     * result is byte-identical to the global-window formulation.
     */
   /** bounded memo over the packing manifests: the cached id-ordered
-    * projection releases (and unpersists, once unshared) on LRU
-    * eviction instead of leaking one corpus-sized cache per call
+    * projection is released (once unshared) on LRU eviction instead of
+    * leaking one corpus-sized cache per call
     */
-  private val packMemo =
-    new Dedup.BoundedMemo[(Long, String, String, Int)](Dedup.memoCap)
+  private val packMemo = Memo.frames[(Long, String, String, Int)]
 
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
       seqLen: Int): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive: $seqLen")
     packMemo.getOrElseUpdate(
-      (Dedup.planKey(docs), idCol, textCol, seqLen),
-      packOnce(docs, idCol, textCol, seqLen))
+      (Memo.planKey(docs), idCol, textCol, seqLen),
+      packOnce(docs, idCol, textCol, seqLen)).df
   }
 
   private def packOnce(docs: DataFrame, idCol: String, textCol: String,
-      seqLen: Int): Dedup.Memoized = {
+      seqLen: Int): Memo.Frame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -117,7 +118,7 @@ object TrainingSet {
         }
       }
     }.toDF("doc_id", "n_tokens", "seq_id", "seq_offset")
-    Dedup.Memoized(out, Seq(base.toDF()))
+    Memo.Frame(out, Seq(base.toDF()))
   }
 
   /** Fixed-width token-length bucket accounting — the padding-

@@ -288,7 +288,7 @@ object Replica {
         if (sketch.isEmpty) {
           // the one full-history pass: (re)start only
           val items = if (expectedItems > 0) expectedItems
-            else math.max(2L * Dedup.memoizedCount(hFp), 1024L)
+            else math.max(2L * graft.Memo.count(hFp), 1024L)
           // CLONE the memoized filter before growing it: the memo
           // instance is shared with batch callers (and other streams),
           // and an in-place merge racing another plan's serialization

@@ -66,6 +66,22 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(bcast(3L) > bcast(1L)) // sanity: same ordering as pageRank
   }
 
+  test("a regime flip keeps a built PageRank of the other regime on its cache") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, round}
+    def ranks(df: DataFrame): Map[Long, Double] =
+      df.select(col("id"), round(col("pagerank"), 6).as("pr")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val bcast = Analytics.pageRankDF(fx, iters = 5) // built, not run
+    System.setProperty("graft.pr.broadcastMaxRows", "0")
+    val shuffled = try ranks(Analytics.pageRankDF(fx, iters = 5))
+    finally System.clearProperty("graft.pr.broadcastMaxRows")
+    assert(bcast.queryExecution.executedPlan.toString
+      .contains("InMemoryTableScan"),
+      "the shuffle-regime build released the broadcast regime's edge cache")
+    assert(ranks(bcast) == shuffled)
+  }
+
   test("analytics partition counts derive from data size, not constants") {
     import spark.implicits._
     val floor = math.max(1, spark.sparkContext.defaultParallelism / 4)

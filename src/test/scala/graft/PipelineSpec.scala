@@ -228,14 +228,14 @@ class PipelineSpec extends AnyFunSuite {
 
   test("memo eviction unpersists cached plans; storage returns to baseline") {
     import org.apache.spark.storage.StorageLevel
-    val memo = new Dedup.BoundedMemo[Int](2)
+    val memo = new Memo[Int, Memo.Frame](2, caches = _.cached)
     val dfs = (0 until 3).map { i =>
       val d = Seq((i.toLong, s"text $i")).toDF("doc_id", "text").cache()
       d.count() // materialize the cache block
       d
     }
     dfs.zipWithIndex.foreach { case (d, i) =>
-      memo.getOrElseUpdate(i, Dedup.Memoized(d, Seq(d)))
+      memo.getOrElseUpdate(i, Memo.Frame(d, Seq(d)))
     }
     assert(memo.size == 2)
     // the eldest entry's cache blocks are gone; the survivors' remain
@@ -246,19 +246,25 @@ class PipelineSpec extends AnyFunSuite {
     dfs.foreach(_.unpersist())
   }
 
-  test("memo remove releases the entry's caches; absent key is a no-op") {
+  test("memo refcount: a shared cache survives until its last holder evicts") {
     import org.apache.spark.storage.StorageLevel
-    val memo = new Dedup.BoundedMemo[Int](4)
-    val d = Seq((1L, "text")).toDF("doc_id", "text").cache()
+    def shared() = Seq((1L, "row shared by two memos")).toDF("doc_id", "text")
+      .cache()
+    val d = shared()
     d.count()
-    memo.getOrElseUpdate(7, Dedup.Memoized(d, Seq(d)))
-    memo.remove(99) // absent: must not throw or touch live entries
-    assert(memo.size == 1)
-    assert(d.storageLevel != StorageLevel.NONE)
-    memo.remove(7) // present: evicts through onEvict → unpersist
-    assert(memo.size == 0)
+    val a = new Memo[Int, Memo.Frame](1, caches = _.cached)
+    val b = new Memo[Int, Memo.Frame](1, caches = _.cached)
+    // plan-equal instances share one cache block and one refcount
+    a.getOrElseUpdate(0, Memo.Frame(d, Seq(d)))
+    b.getOrElseUpdate(0, { val d2 = shared(); Memo.Frame(d2, Seq(d2)) })
+    a.getOrElseUpdate(1, Memo.Frame(d.limit(0), Nil))
+    assert(a.size == 1)
+    assert(d.storageLevel != StorageLevel.NONE,
+      "evicted from one memo while the other still holds it")
+    b.getOrElseUpdate(1, Memo.Frame(d.limit(0), Nil))
+    assert(b.size == 1)
     assert(d.storageLevel == StorageLevel.NONE,
-      "removed entry's caches must be released")
+      "last holder evicted: the cache must be released")
   }
 
   test("capBuckets: hinted and unhinted regimes agree; hot bucket drops") {
@@ -1057,6 +1063,14 @@ class PipelineSpec extends AnyFunSuite {
       assert(out2 == Set(21L))
       assert(Dedup.bucketBloomMemo.size == memoBefore + 1,
         "repeat batch rebuilt the bucket sketch instead of reusing it")
+      // bucket tables are localCheckpointed, never registered with the
+      // cache manager: evicting one from the memo has nothing to unpersist
+      val tbl = Dedup.buildBucketFilters(Seq("a", "b").toDF("fp"), 2, 1L,
+        0.01, fullHistory = false)
+      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      assert(cm.lookupCachedData(
+        tbl.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
     } finally {
       System.clearProperty("graft.bloom.maxSingleBits")
       System.clearProperty("graft.bloom.bucketBits")
@@ -1067,14 +1081,15 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.util.sketch.BloomFilter
     def mk(n: Long) = BloomFilter.create(n, 0.01)
     val perFilterBytes = mk(10000L).bitSize() / 8 // ~12 KB each
-    val memo = new Dedup.ByteBoundedMemo[Int](perFilterBytes * 3 + 16)
-    (0 until 8).foreach(i => memo.getOrElseUpdateValue(i, mk(10000L)))
-    assert(memo.totalBytes <= perFilterBytes * 3 + 16,
-      s"memo holds ${memo.totalBytes} bytes over its budget")
+    val memo = new Memo[Int, BloomFilter](perFilterBytes * 3 + 16,
+      _.bitSize / 8)
+    (0 until 8).foreach(i => memo.getOrElseUpdate(i, mk(10000L)))
+    assert(memo.total <= perFilterBytes * 3 + 16,
+      s"memo holds ${memo.total} bytes over its budget")
     assert(memo.size < 8 && memo.size >= 1)
     // the most recent entry survived (access-ordered eviction)
     val f7 = mk(1L)
-    assert(memo.getOrElseUpdateValue(7, f7) ne f7)
+    assert(memo.getOrElseUpdate(7, f7) ne f7)
   }
 
   test("frameChunks survives a corrupt chunk size near 2^31") {

@@ -102,4 +102,25 @@ class PqSpec extends AnyFunSuite {
       assert(exact.head.getDouble(3) == gotTop.head.getDouble(3))
     }
   }
+
+  test("IVF and PQ training release their cache when the id-space check fails") {
+    import spark.implicits._
+    // ids start at 1000: no id falls under nlist or ksub, so both
+    // trainers reject the sample after caching it
+    val offset = (1000L until 1016L)
+      .map(i => (i, Array.tabulate(8)(d => ((i + d) % 7).toFloat)))
+      .toDF("vec_id", "embedding")
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    intercept[IllegalArgumentException] {
+      Similarity.ivfCentroids(offset, "vec_id", "embedding", nlist = 4,
+        iters = 1)
+    }
+    assert(persisted == before, "IVF training sample left cached")
+    intercept[IllegalArgumentException] {
+      Similarity.pqCodebooks(offset, "vec_id", "embedding", m = 2, ksub = 4,
+        iters = 1, dims = 8)
+    }
+    assert(persisted == before, "PQ training relation left cached")
+  }
 }
