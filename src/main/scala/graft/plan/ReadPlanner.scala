@@ -1,12 +1,14 @@
 package graft.plan
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.GraphdFunctions.{gmatch, sort_key}
 import graft.gql._
 import graft.model.Guid
-import graft.store.GraphStore
+import graft.serve.PointServer
+import graft.store.{GraphStore, TypeVocab}
 
 /** Constraint tree → DataFrame plan (SURVEY.md §3.1 Spark mapping).
   *
@@ -72,6 +74,75 @@ object ReadPlanner {
     }
     rejectWriteOnly(root)
     val rootN = normalizeVars(root)
+    fromSnapshot(store, rootN).getOrElse(planCatalyst(store, rootN))
+  }
+
+  /** The point-read route. On a store that carries the driver-resident
+    * mirror, a read [[PointServer]] can serve is answered from the
+    * store's snapshot ([[GraphStore.pointIndex]]) as a local DataFrame,
+    * so `collect()` runs no Spark job — the reference likewise answers
+    * simple reads in-process from memory-resident indexes
+    * (doc/a-brief-tour-of-graphd.md:197-204). Persisted and `fromDf`
+    * stores, `asof`, cursors, contents, variables, a result whose
+    * Catalyst type has no name here, and session replay's id-ordered
+    * reads (`Cursor.refIterCursor` set) take the Catalyst plan.
+    * ServeSpec gates both as answering alike.
+    */
+  private def fromSnapshot(store: GraphStore, c: Constraint): Option[DataFrame] =
+    if (store.localRows.isEmpty || Cursor.refIterCursor.isDefined ||
+        !PointServer.servableFor(c)) None
+    else for {
+      flat <- PointServer.flatFor(c)
+      schema <- snapshotSchema(flat)
+      ix <- store.pointIndex
+      served <- PointServer.serve(ix, c)
+    } yield {
+      val rows = new java.util.ArrayList[Row](served.rows.length)
+      served.rows.foreach(r => rows.add(Row.fromSeq(r.toSeq)))
+      store.spark.createDataFrame(rows, schema)
+    }
+
+  /** the Catalyst plan's schema for a servable flattened result: names
+    * as [[resultFields]] gives them, types and nullability as
+    * [[fieldExpr]] types them over the primitive columns
+    */
+  private def snapshotSchema(flat: Seq[Pattern]): Option[StructType] =
+    if (flat == Seq(CountPat))
+      Some(StructType(Seq(StructField("count", LongType, nullable = false))))
+    else {
+      val types = flat.map(snapshotType)
+      Option.when(flat.nonEmpty && types.forall(_.isDefined)) {
+        val names = uniqueNames(flat.zipWithIndex.map { case (p, i) => patName(p, i) })
+        StructType(names.zip(types.flatten).map { case (n, (t, nullable)) =>
+          StructField(n, t, nullable)
+        })
+      }
+    }
+
+  /** (type, nullable) of a result leaf the route can name; None keeps
+    * the read on the Catalyst plan
+    */
+  private def snapshotType(p: Pattern): Option[(DataType, Boolean)] = p match {
+    case FieldPat("guid" | "timestamp") => Some((LongType, false))
+    case FieldPat("typeguid" | "left" | "right" | "scope") => Some((LongType, true))
+    case FieldPat("name" | "value" | "type") => Some((StringType, true))
+    case FieldPat("datatype" | "valuetype") => Some((ByteType, false))
+    case FieldPat("live") => Some((BooleanType, false))
+    case FieldPat("meta") | LiteralPat(_, _) => Some((StringType, false))
+    case NonePat | CountPat => Some((NullType, true))
+    case PickPat(items) =>
+      // coalesce: one common type, nullable only if every item is
+      val ts = items.map(snapshotType)
+      if (ts.exists(_.isEmpty)) None
+      else ts.flatten.map(_._1).filter(_ != NullType).distinct match {
+        case Seq() => Some((NullType, true))
+        case Seq(t) => Some((t, ts.flatten.forall(_._2)))
+        case _ => None
+      }
+    case _ => None
+  }
+
+  private def planCatalyst(store: GraphStore, rootN: Constraint): DataFrame = {
     var st = rootN.asof.map(store.asOf).getOrElse(store)
     rootN.asofTs.foreach(ts => st = st.asOfTimestamp(ts))
     // cursor="tok" resumes a prior id-ordered page: pin the snapshot
@@ -1167,13 +1238,16 @@ object ReadPlanner {
       case (IteratorPat | EstimatePat, _) => Nil
       case (p, idx) => Seq(patName(p, idx) -> fieldExpr(store, p, c))
     }
-    // a pattern can name the same leaf twice (sort13: ($x1 ($x1 value)))
-    // — struct fields must stay unique or getField turns ambiguous;
-    // consumers are positional, so suffixing repeats is invisible
+    uniqueNames(fields.map(_._1)).zip(fields.map(_._2))
+  }
+
+  /** a pattern can name the same leaf twice (sort13: ($x1 ($x1 value)))
+    * — struct fields must stay unique or getField turns ambiguous;
+    * consumers are positional, so suffixing repeats is invisible
+    */
+  private def uniqueNames(names: Seq[String]): Seq[String] = {
     val seen = scala.collection.mutable.Set.empty[String]
-    fields.zipWithIndex.map { case ((n, e), i) =>
-      (if (seen.add(n)) n else s"${n}__dup$i") -> e
-    }
+    names.zipWithIndex.map { case (n, i) => if (seen.add(n)) n else s"${n}__dup$i" }
   }
 
   private def flatten(p: Pattern): Seq[Pattern] = p match {
@@ -1207,7 +1281,7 @@ object ReadPlanner {
       // a typeguid whose node has no resolvable name displays as
       // "#<guid>" (rerestore golden) — emitted here as a marker the
       // session renderer rewrites into the wire guid space
-      val unnamed = concat(lit("#\u0000"), col("typeguid").cast("string"))
+      val unnamed = concat(lit(TypeVocab.unnamed), col("typeguid").cast("string"))
       val tn = store.typeNamesById
       if (tn.isEmpty)
         when(col("typeguid").isNull, lit(null).cast("string"))

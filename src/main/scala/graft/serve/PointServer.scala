@@ -2,7 +2,8 @@ package graft.serve
 
 import graft.functions.GraphdText
 import graft.gql._
-import graft.store.GraphStore
+import graft.model.Primitive
+import graft.store.{GraphStore, TypeVocab}
 
 /** Point-read serving tier.
   *
@@ -33,6 +34,11 @@ import graft.store.GraphStore
   * Catalyst plan. Correctness is gated by ServeSpec: every servable
   * query must answer identically through both paths.
   *
+  * Callers: the serving entry points below and [[ShardRouter]], and
+  * `ReadPlanner.plan`, which answers servable reads on a store that
+  * carries the driver-resident mirror from the store's own snapshot
+  * ([[GraphStore.pointIndex]]) instead of running a Spark job.
+  *
   * Scale: one snapshot holds one shard's hot set (the reference itself
   * caps a database at 16G primitives, libaddb/addb-istore.h:22). At
   * 100 TB the same structure shards by id-range/type across serving
@@ -56,7 +62,8 @@ object PointServer {
       val byRight: java.util.HashMap[Long, Array[Int]],
       val byScope: java.util.HashMap[Long, Array[Int]],
       val words: java.util.TreeMap[String, Array[Int]],
-      val typeIdsByName: Map[String, Seq[Long]],
+      /** `type=` resolution and the `type` result */
+      val types: TypeVocab,
       /** home-shard predicate: a sharded snapshot holds FOREIGN rows
         * for locality (links live in their endpoints' shards too, so
         * 1-hop child checks never leave the shard) but only answers
@@ -65,26 +72,48 @@ object PointServer {
       val home: Long => Boolean = _ => true) {
     def size: Int = ids.length
     def posOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-    def withTypes(t: Map[String, Seq[Long]]): Index =
+    def withTypes(t: TypeVocab): Index =
       new Index(ids, typeguid, name, value, left, right, scope, datatype,
         timestamp, byType, byLeft, byRight, byScope, words, t, home)
     def withHome(h: Long => Boolean): Index =
       new Index(ids, typeguid, name, value, left, right, scope, datatype,
-        timestamp, byType, byLeft, byRight, byScope, words, typeIdsByName, h)
+        timestamp, byType, byLeft, byRight, byScope, words, types, h)
   }
 
-  /** Build the snapshot from the store's current view — one collect of
-    * the columns the serving paths need (the materialized-view refresh;
-    * on a cluster this is the per-shard executor-side build).
+  /** Build the snapshot from the store's current view. A store that
+    * carries the driver-resident mirror hands over its own snapshot
+    * ([[GraphStore.pointIndex]], no Spark job); any other store pays
+    * one collect of the columns the serving paths need (the
+    * materialized-view refresh; on a cluster this is the per-shard
+    * executor-side build).
     */
-  def build(store: GraphStore): Index = {
+  def build(store: GraphStore): Index = store.pointIndex.getOrElse {
     import org.apache.spark.sql.functions.col
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    // the current view is newest and live; the version columns the
+    // snapshot does not carry take their defaults
     val rows = store.current
       .select(col("id"), col("typeguid"), col("name"), col("value"),
         col("left"), col("right"), col("scope"), col("datatype"),
         col("timestamp"))
-      .orderBy(col("id"))
       .collect()
+      .map(r => Primitive(r.getLong(0), opt(r, 1), Option(r.getString(2)),
+        if (r.isNullAt(7)) 0 else r.getByte(7), Option(r.getString(3)),
+        opt(r, 6), live = true, archival = false, txstart = false,
+        if (r.isNullAt(8)) 0L else r.getLong(8), opt(r, 4), opt(r, 5),
+        prev = None, lineage = r.getLong(0)))
+      .toIndexedSeq
+    of(rows, TypeVocab.of(rows))
+  }
+
+  /** The row-array core: the snapshot of current primitives (any
+    * order) resolving types through `types` — the collect above, or a
+    * mirror-backed store's own [[GraphStore.pointIndex]].
+    */
+  private[graft] def of(rows0: IndexedSeq[Primitive], types: TypeVocab): Index = {
+    val inOrder = rows0.iterator.zip(rows0.iterator.drop(1)).forall(p => p._1.id < p._2.id)
+    val rows = if (inOrder) rows0 else rows0.sortBy(_.id)
     val n = rows.length
     val ids = new Array[Long](n)
     val tg = new Array[Long](n); val lf = new Array[Long](n)
@@ -92,17 +121,16 @@ object PointServer {
     val nm = new Array[String](n); val vl = new Array[String](n)
     val dt = new Array[Byte](n); val ts = new Array[Long](n)
     var i = 0
-    while (i < n) {
-      val r = rows(i)
-      ids(i) = r.getLong(0)
-      tg(i) = if (r.isNullAt(1)) -1L else r.getLong(1)
-      nm(i) = if (r.isNullAt(2)) null else r.getString(2)
-      vl(i) = if (r.isNullAt(3)) null else r.getString(3)
-      lf(i) = if (r.isNullAt(4)) -1L else r.getLong(4)
-      rt(i) = if (r.isNullAt(5)) -1L else r.getLong(5)
-      sc(i) = if (r.isNullAt(6)) -1L else r.getLong(6)
-      dt(i) = if (r.isNullAt(7)) 0 else r.getByte(7)
-      ts(i) = if (r.isNullAt(8)) 0L else r.getLong(8)
+    rows.foreach { p =>
+      ids(i) = p.id
+      tg(i) = p.typeguid.getOrElse(-1L)
+      nm(i) = p.name.orNull
+      vl(i) = p.value.orNull
+      lf(i) = p.left.getOrElse(-1L)
+      rt(i) = p.right.getOrElse(-1L)
+      sc(i) = p.scope.getOrElse(-1L)
+      dt(i) = p.datatype
+      ts(i) = p.timestamp
       i += 1
     }
     def postings(keyAt: Int => Long): java.util.HashMap[Long, Array[Int]] = {
@@ -137,29 +165,9 @@ object PointServer {
     }
     val words = new java.util.TreeMap[String, Array[Int]]()
     wacc.forEach((w, b) => words.put(w, b.result()))
-    // type vocabulary: named nodes, plus has_key naming links of a
-    // reference-bootstrapped store (value names the node on the right)
-    val tnames = scala.collection.mutable.Map.empty[String, List[Long]]
-    var hasKey = -1L
-    i = 0
-    while (i < n) {
-      if (lf(i) < 0 && nm(i) != null) {
-        tnames(nm(i)) = ids(i) :: tnames.getOrElse(nm(i), Nil)
-        if (hasKey < 0 && nm(i) == "HAS_KEY") hasKey = ids(i)
-      }
-      i += 1
-    }
-    if (hasKey >= 0) {
-      i = 0
-      while (i < n) {
-        if (tg(i) == hasKey && lf(i) >= 0 && rt(i) >= 0 && vl(i) != null)
-          tnames(vl(i)) = rt(i) :: tnames.getOrElse(vl(i), Nil)
-        i += 1
-      }
-    }
     new Index(ids, tg, nm, vl, lf, rt, sc, dt, ts,
       postings(j => tg(j)), postings(j => lf(j)), postings(j => rt(j)),
-      postings(j => sc(j)), words, tnames.view.mapValues(_.reverse.toSeq).toMap)
+      postings(j => sc(j)), words, types)
   }
 
   /** A servable read answered from the snapshot: column names + rows.
@@ -225,16 +233,27 @@ object PointServer {
     r
   }
 
-  /** query-level servability, index-independent (router pre-check) */
-  private[serve] def servableFor(c: Constraint): Boolean = servableRoot(c)
-
-  /** flattened result pattern if every pat is servable (router
-    * pre-check; shared with the single-snapshot entry)
+  /** query-level servability, index-independent (router and
+    * ReadPlanner pre-check)
     */
-  private[serve] def flatFor(c: Constraint): Option[Seq[Pattern]] = {
+  private[graft] def servableFor(c: Constraint): Boolean = servableRoot(c)
+
+  /** flattened result pattern if every pat is servable (router and
+    * ReadPlanner pre-check; shared with the single-snapshot entry)
+    */
+  private[graft] def flatFor(c: Constraint): Option[Seq[Pattern]] = {
     val pat = c.result.getOrElse(ListPat(Seq(FieldPat("guid"), FieldPat("value"))))
     val flat = flatten(pat)
-    if (flat.exists(p => !servablePat(p))) None else Some(flat)
+    // the Catalyst plan renders a link's meta against the root's own
+    // linkage ("<-" under a `(<- ...)` root); fieldOf renders "->"
+    def meta(p: Pattern): Boolean = p match {
+      case FieldPat("meta") => true
+      case PickPat(items) => items.exists(meta)
+      case _ => false
+    }
+    val rightLinked = c.effectiveLinkage.contains(ChildPointsToParent("right"))
+    if (flat.exists(p => !servablePat(p) || (rightLinked && meta(p)))) None
+    else Some(flat)
   }
 
   /** the per-shard entry: query-level servability and result-pattern
@@ -575,7 +594,7 @@ object PointServer {
     // type postings (VIP/typeguid gmap analog); a pred admitting the
     // typeless primitive (null / empty list) can't produce soundly
     c.typePreds.filterNot(v => v.isEmpty || v.contains(None)).foreach { vals =>
-      val tids = vals.flatten.flatMap(n => ix.typeIdsByName.getOrElse(n, Nil))
+      val tids = vals.flatten.flatMap(ix.types.idsOf)
       offer(mergePostings(tids.map { id =>
         val a = ix.byType.get(id); if (a == null) Array.empty[Int] else a
       }))
@@ -673,7 +692,7 @@ object PointServer {
       if (pr.include != in) return false
     }
     c.typePreds.foreach { vals =>
-      val tids = vals.flatten.flatMap(n => ix.typeIdsByName.getOrElse(n, Nil))
+      val tids = vals.flatten.flatMap(ix.types.idsOf)
       val hasNull = vals.contains(None) || vals.isEmpty
       val tg = ix.typeguid(p)
       if (!((hasNull && tg < 0) || tids.contains(tg))) return false
@@ -840,11 +859,7 @@ object PointServer {
       if (ix.left(pos) < 0 && ix.right(pos) < 0) "node" else "->"
     case FieldPat("type") =>
       val tg = ix.typeguid(pos)
-      if (tg < 0) null
-      else {
-        val tp = ix.posOf(tg)
-        if (tp < 0) null else ix.name(tp)
-      }
+      if (tg < 0) null else ix.types.display(tg)
     case LiteralPat(s, _) => s
     case NonePat => null
     case PickPat(items) =>

@@ -39,7 +39,7 @@ object ShardRouter {
     */
   def build(store: GraphStore, n: Int): Shards = {
     require(n >= 1)
-    val globalTypes = PointServer.build(store).typeIdsByName
+    val globalTypes = PointServer.build(store).types
     // shard the globally-resolved CURRENT view: version currency is a
     // per-lineage property and lineage members hash to different
     // shards, so newest/live resolution must happen before the split

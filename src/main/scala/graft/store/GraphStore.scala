@@ -232,37 +232,46 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
       .distinct()
       .cache()
 
+  /** the mirror's type vocabulary, one pass over the current view and
+    * no Spark job; the point snapshot serves `type=` and the `type`
+    * result from this same object
+    */
+  private[graft] lazy val localTypes: Option[TypeVocab] =
+    currentLocal.map(TypeVocab.of)
+
+  /** The point-read snapshot ([[graft.serve.PointServer.Index]]) of the
+    * mirror's current view, built on first use with no Spark job; None
+    * on a store without a mirror. Every write returns a new store, so a
+    * run of writes with no read between them builds none.
+    */
+  lazy val pointIndex: Option[graft.serve.PointServer.Index] =
+    for (rows <- currentLocal; types <- localTypes)
+      yield graft.serve.PointServer.of(rows, types)
+
   /** Memoized type-name → type-node-id resolution — the reference
     * resolves type names to typeguids once per request in its semantic
     * phase and caches server-side (graphd/graphd-read.c:28-37); without
     * the memo every read pays a driver-side collect job just to find
-    * the type node.
+    * the type node. A mirror-backed store answers from its vocabulary.
     */
   private val typeIdCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-  def resolveTypeIds(names: Seq[String]): Seq[Long] =
-    names.flatMap(n => typeIdCache.getOrElseUpdate(n, currentLocal match {
-      case Some(rows) =>
-        val named = rows.filter(p => p.left.isEmpty && p.name.contains(n))
-          .map(_.id)
-        val viaLinks = hasKeyId.toSeq.flatMap(hk =>
-          rows.filter(p => p.typeguid.contains(hk) && p.left.isDefined &&
-              p.right.isDefined && p.value.exists(_.equalsIgnoreCase(n)))
-            .flatMap(_.right))
-        (named ++ viaLinks).distinct
-      case None =>
-        val named = current.filter(col("left").isNull && col("name") === n)
-          .select("id").collect().map(_.getLong(0)).toSeq
-        // reference physical type registry (graphd-type.c:518
-        // graphd_type_guid_from_name): a live has_key naming link whose
-        // value is the name (case-insensitive) names the node it points
-        // at with its right
-        val viaLinks = hasKeyId.toSeq.flatMap { hk =>
-          current.filter(col("typeguid") === hk && col("left").isNotNull &&
-              col("right").isNotNull && lower(col("value")) === n.toLowerCase)
-            .select("right").collect().map(_.getLong(0)).toSeq
-        }
-        (named ++ viaLinks).distinct
+  def resolveTypeIds(names: Seq[String]): Seq[Long] = localTypes match {
+    case Some(types) => names.flatMap(types.idsOf)
+    case None => names.flatMap(n => typeIdCache.getOrElseUpdate(n, {
+      val named = current.filter(col("left").isNull && col("name") === n)
+        .select("id").collect().map(_.getLong(0)).toSeq
+      // reference physical type registry (graphd-type.c:518
+      // graphd_type_guid_from_name): a live has_key naming link whose
+      // value is the name (case-insensitive) names the node it points
+      // at with its right
+      val viaLinks = hasKeyId.toSeq.flatMap { hk =>
+        current.filter(col("typeguid") === hk && col("left").isNotNull &&
+            col("right").isNotNull && lower(col("value")) === n.toLowerCase)
+          .select("right").collect().map(_.getLong(0)).toSeq
+      }
+      (named ++ viaLinks).distinct
     }))
+  }
 
   /** every id sharing a lineage with any of the given ids — backs
     * `field~=G` generation-relaxed linkage matching (guidlist3)
@@ -283,16 +292,13 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
     }
   }
 
-  /** the HAS_KEY attribute node of a reference-bootstrapped store */
-  private lazy val hasKeyId: Option[Long] = currentLocal match {
-    case Some(rows) =>
-      rows.filter(p => p.left.isEmpty && p.name.contains("HAS_KEY"))
-        .sortBy(_.id).headOption.map(_.id)
-    case None =>
-      current.filter(col("left").isNull && col("name") === "HAS_KEY")
-        .select("id").orderBy(col("id")).limit(1).collect()
-        .headOption.map(_.getLong(0))
-  }
+  /** the HAS_KEY attribute node of a reference-bootstrapped store
+    * (distributed path; the mirror's is inside [[TypeVocab]])
+    */
+  private lazy val hasKeyId: Option[Long] =
+    current.filter(col("left").isNull && col("name") === "HAS_KEY")
+      .select("id").orderBy(col("id")).limit(1).collect()
+      .headOption.map(_.getLong(0))
 
   /** id → name over named nodes — the type vocabulary. Backs the
     * `type` result pattern, which echoes the type node's NAME (the
@@ -301,36 +307,25 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
     * reference-bootstrapped store names its (unnamed) type nodes
     * through has_key naming links instead.
     */
-  lazy val typeNamesById: Seq[(Long, String)] = {
-    val named = currentLocal match {
-      case Some(rows) => rows.collect {
-        case p if p.left.isEmpty && p.name.isDefined => p.id -> p.name.get
-      }
-      case None => current.filter(col("left").isNull && col("name").isNotNull)
+  lazy val typeNamesById: Seq[(Long, String)] = localTypes match {
+    case Some(types) => types.namesById.toSeq
+    case None =>
+      val named = current.filter(col("left").isNull && col("name").isNotNull)
         .select("id", "name").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toSeq
-    }
-    // naming links WIN over node names: the reference's reverse lookup
-    // goes through has_key links, so HAS_KEY itself displays as
-    // "has_key" (the anchor's value), not its node name (onerestore)
-    val viaLinks = hasKeyId.toSeq.flatMap { hk =>
-      currentLocal match {
-        case Some(rows) => rows.collect {
-          case p if p.typeguid.contains(hk) && p.left.isDefined &&
-            p.right.isDefined && p.value.isDefined =>
-            (p.id, p.right.get, p.value.get)
-        }.sortBy(_._1).map(t => t._2 -> t._3)
-        case None =>
-          current.filter(col("typeguid") === hk && col("left").isNotNull &&
-              col("right").isNotNull && col("value").isNotNull)
-            .select("id", "right", "value").collect()
-            .sortBy(_.getLong(0))
-            .map(r => r.getLong(1) -> r.getString(2)).toSeq
+      // naming links WIN over node names: the reference's reverse lookup
+      // goes through has_key links, so HAS_KEY itself displays as
+      // "has_key" (the anchor's value), not its node name (onerestore)
+      val viaLinks = hasKeyId.toSeq.flatMap { hk =>
+        current.filter(col("typeguid") === hk && col("left").isNotNull &&
+            col("right").isNotNull && col("value").isNotNull)
+          .select("id", "right", "value").collect()
+          .sortBy(_.getLong(0))
+          .map(r => r.getLong(1) -> r.getString(2)).toSeq
       }
-    }
-    val linked = viaLinks.groupBy(_._1).view.mapValues(_.head._2)
-    val covered = linked.keySet
-    linked.toSeq ++ named.filterNot(p => covered(p._1))
+      val linked = viaLinks.groupBy(_._1).view.mapValues(_.head._2)
+      val covered = linked.keySet
+      linked.toSeq ++ named.filterNot(p => covered(p._1))
   }
 
   /** One-row store status — the reference's `status` request
@@ -440,6 +435,63 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
         .sortBy(key)
         .saveAsTable(table)
     }
+}
+
+/** The type vocabulary of a current view, in both directions: type
+  * name → type-node ids (`type=`) and type-node id → display name (the
+  * `type` result). A named node is a type under its exact name. On a
+  * reference-bootstrapped store a live has_key naming link also names
+  * the node on its right by its value, matched case-insensitively
+  * (graphd-type.c:518 graphd_type_guid_from_name); for display the
+  * link wins over the node's own name, the oldest link first, so
+  * HAS_KEY itself displays as "has_key" (onerestore). One
+  * implementation serves the store's mirror and the point snapshot.
+  */
+final class TypeVocab private (named: Map[String, Seq[Long]],
+    keyed: Map[String, Seq[Long]], val namesById: Map[Long, String]) {
+  def idsOf(name: String): Seq[Long] =
+    if (keyed.isEmpty) named.getOrElse(name, Nil)
+    else (named.getOrElse(name, Nil) ++
+      keyed.getOrElse(name.toLowerCase, Nil)).distinct
+
+  /** the `type` result for a typeguid: its name, or the "#<guid>"
+    * marker for an unnamed or absent type node (rerestore golden) —
+    * the session renderer rewrites it into the wire guid space
+    */
+  def display(typeguid: Long): String =
+    namesById.getOrElse(typeguid, TypeVocab.unnamed + typeguid)
+}
+
+object TypeVocab {
+  val unnamed = "#\u0000"
+
+  /** over current primitives, in any order */
+  def of(rows: Iterable[Primitive]): TypeVocab = {
+    val named = scala.collection.mutable.HashMap.empty[String, List[Long]]
+    val names = scala.collection.mutable.HashMap.empty[Long, String]
+    var hasKey = -1L
+    rows.foreach { p =>
+      if (p.left.isEmpty) p.name.foreach { nm =>
+        named(nm) = p.id :: named.getOrElse(nm, Nil)
+        names(p.id) = nm
+        if (nm == "HAS_KEY" && (hasKey < 0 || p.id < hasKey)) hasKey = p.id
+      }
+    }
+    val keyed = scala.collection.mutable.HashMap.empty[String, List[Long]]
+    val oldestLink = scala.collection.mutable.HashMap.empty[Long, (Long, String)]
+    if (hasKey >= 0) rows.foreach { p =>
+      (p.left, p.right, p.value) match {
+        case (Some(_), Some(r), Some(v)) if p.typeguid.contains(hasKey) =>
+          keyed(v.toLowerCase) = r :: keyed.getOrElse(v.toLowerCase, Nil)
+          if (oldestLink.get(r).forall(_._1 > p.id)) oldestLink(r) = (p.id, v)
+        case _ =>
+      }
+    }
+    def sortedIds(m: scala.collection.mutable.HashMap[String, List[Long]]) =
+      m.view.mapValues(_.distinct.sorted: Seq[Long]).toMap
+    new TypeVocab(sortedIds(named), sortedIds(keyed),
+      (names ++ oldestLink.view.mapValues(_._2)).toMap)
+  }
 }
 
 /** Single-writer guard for store directories — the library analog of

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.Primitive
 import graft.model.Primitive.{link, node}
 import graft.plan.ReadPlanner
 import graft.serve.PointServer
@@ -13,14 +14,28 @@ import graft.store.GraphStore
   * match code, but candidate generation, bounds probes, and projection
   * are independent implementations — this spec is what makes the fast
   * path safe to put in front of the engine.
+  *
+  * `ReadPlanner.plan` itself answers servable reads on a mirror-backed
+  * store from the store's snapshot, so the Catalyst side always plans
+  * on the store without its mirror, and every query also runs through
+  * the routed `ReadPlanner.plan`, held to the same Catalyst answer.
   */
 class ServeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** a mirror-backed store, its snapshot, and the same rows without
+    * the mirror (always the Catalyst plan)
+    */
+  final class Fixture(prims: Seq[Primitive]) {
+    lazy val store: GraphStore =
+      GraphStore.fromSeq(spark, prims).copy(versioned = false)
+    lazy val catalyst: GraphStore = store.copy(localRows = None)
+    lazy val ix: PointServer.Index = PointServer.build(store)
+  }
+
   // people/books/authorship: the reference's benchmark query class
   // ("all people who are authors whose names contain 'herman'")
-  lazy val store: GraphStore = {
-    val prims =
+  lazy val main = new Fixture(
       Seq(node(1, name = Some("person")), node(2, name = Some("book")),
         node(3, name = Some("wrote"))) ++
         Seq("Herman Melville", "Herman Hesse", "Toni Morrison",
@@ -44,29 +59,81 @@ class ServeSpec extends AnyFunSuite {
           node(46, value = Some("0.50")), node(47, value = Some(" .50")),
           // scope-linked primitives (PDB_LINKAGE_SCOPE coverage)
           node(51, value = Some("note-a")).copy(scope = Some(10L)),
-          node(52, value = Some("note-b")).copy(scope = Some(10L)))
-    GraphStore.fromSeq(spark, prims).copy(versioned = false)
-  }
-  lazy val ix: PointServer.Index = PointServer.build(store)
+          node(52, value = Some("note-b")).copy(scope = Some(10L))))
+  def ix: PointServer.Index = main.ix
 
-  /** both paths, compared as value matrices (order-sensitive when the
-    * query sorts, multiset otherwise)
+  // a reference-bootstrapped type system: HAS_KEY and its naming links,
+  // a type node only a link names, a named one a link renames, an
+  // unnamed one, and a typeguid with no node at all
+  lazy val typed = new Fixture(Seq(
+    node(1, name = Some("HAS_KEY")), node(2, name = Some("ns")),
+    node(3), node(4), node(5, name = Some("Book")),
+    link(6, 2, Some(3), typeguid = Some(1L), value = Some("Author")),
+    link(7, 2, Some(5), typeguid = Some(1L), value = Some("Tome")),
+    node(10, typeguid = Some(3L), value = Some("Herman Melville")),
+    node(11, typeguid = Some(4L), value = Some("untyped")),
+    node(12, typeguid = Some(5L), value = Some("Moby-Dick")),
+    node(13, typeguid = Some(99L), value = Some("dangling"))))
+
+  private def check(q: String, expectServable: Boolean = true,
+      on: Fixture = main): Unit =
+    checkC(graft.gql.Parser.parseRead(q), q, expectServable, on)
+
+  /** the served answer and the routed `ReadPlanner.plan` answer, each
+    * against the Catalyst plan, as value matrices (order-sensitive
+    * when the query sorts, multiset otherwise)
     */
-  private def check(q: String, expectServable: Boolean = true): Unit =
-    checkC(graft.gql.Parser.parseRead(q), q, expectServable)
-
   private def checkC(c: graft.gql.Constraint, q: String,
-      expectServable: Boolean = true): Unit = {
-    val served = PointServer.serve(ix, c)
-    if (!expectServable) { assert(served.isEmpty, s"unexpectedly served: $q"); return }
-    assert(served.isDefined, s"not served: $q")
-    val sRows = served.get.rows.map(_.toSeq.map(norm))
-    val df = ReadPlanner.plan(store, c)
-    assert(served.get.columns == df.columns.toSeq, s"columns differ: $q")
-    val dRows = df.collect().toSeq.map(_.toSeq.map(norm))
-    if (c.sort.nonEmpty) assert(sRows == dRows, s"sorted rows differ: $q")
-    else assert(sRows.groupBy(identity).view.mapValues(_.size).toMap ==
-      dRows.groupBy(identity).view.mapValues(_.size).toMap, s"rows differ: $q")
+      expectServable: Boolean = true, on: Fixture = main): Unit = {
+    val df = ReadPlanner.plan(on.catalyst, c)
+    val dRows = rowsOf(df)
+    def same(rows: Seq[Seq[Any]], what: String): Unit =
+      if (c.sort.nonEmpty) assert(rows == dRows, s"$what: sorted rows differ: $q")
+      else assert(rows.groupBy(identity).view.mapValues(_.size).toMap ==
+        dRows.groupBy(identity).view.mapValues(_.size).toMap, s"$what: rows differ: $q")
+    val served = PointServer.serve(on.ix, c)
+    if (expectServable) {
+      assert(served.isDefined, s"not served: $q")
+      assert(served.get.columns == df.columns.toSeq, s"columns differ: $q")
+      same(served.get.rows.map(_.toSeq.map(norm)), "served")
+    } else assert(served.isEmpty, s"unexpectedly served: $q")
+    val routed = ReadPlanner.plan(on.store, c)
+    assert(isLocal(routed) == expectServable, s"route taken: ${isLocal(routed)}: $q")
+    assert(typesOf(routed) == typesOf(df), s"routed schema differs: $q")
+    same(rowsOf(routed), "routed")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map(norm))
+
+  private def typesOf(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
+  /** answered from the snapshot: a bare local relation, no Catalyst
+    * operator over the primitives
+    */
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Spark jobs started while `body` runs, counted after draining the
+    * listener bus on both sides
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   private def norm(v: Any): Any = v match {
@@ -177,6 +244,7 @@ class ServeSpec extends AnyFunSuite {
 
   test("pick and literal patterns") {
     check("""read (guid=10 result=((guid literal="x" name)))""")
+    check("""read (guid=10 result=((guid pick(name value) pick(left scope) none)))""")
   }
 
   test("unsupported shapes fall back to Spark") {
@@ -245,5 +313,100 @@ class ServeSpec extends AnyFunSuite {
       expectServable = false)
     check("""read (any result=((guid archival)))""", expectServable = false)
     check("""read (any result=((guid previous)))""", expectServable = false)
+  }
+
+  test("type= matches a has_key naming link in any case") {
+    check("""read (type="author" result=((guid value)))""", on = typed)
+    check("""read (type="TOME" result=((guid value)))""", on = typed)
+    check("""read (type="Book" result=((guid value)))""", on = typed)
+  }
+
+  test("type result: naming links win; unnamed and absent type nodes render the marker") {
+    check("""read (any result=((guid type)))""", on = typed)
+    check("""read (any value~="untyped" result=((value type typeguid)))""", on = typed)
+  }
+
+  test("a root linked by its right keeps the Catalyst meta arrow") {
+    check("""read (<- value~="co-wrote" result=((guid meta)))""",
+      expectServable = false)
+    check("""read (<- value~="co-wrote" result=((guid value)))""")
+  }
+
+  // the session workload's store: notes with tag links, persons with
+  // knows links, built row by row like the Writer's mirror
+  lazy val session = new Fixture(
+    Seq("amber basil cedar", "amber delta ember", "fjord amber kelp",
+      "lumen maple nectar").zipWithIndex.flatMap { case (v, i) =>
+      Seq(node(100 + 2 * i, name = Some("note"), value = Some(v)),
+        link(101 + 2 * i, 100 + 2 * i, None, name = Some("tag"), value = Some(s"t$i")))
+    } ++ Seq(node(200, name = Some("person"), value = Some("p1")),
+      node(201, name = Some("person"), value = Some("p2")),
+      link(202, 201, Some(200), name = Some("knows"))))
+  private val sessionReads = Seq(
+    """read (name="note" value~="amber" sort=value pagesize=2 result=((value)))""",
+    """read (name="person" value="p2" result=((guid)) (<-left name="knows"))""")
+
+  test("mirror-backed session reads run no Spark job") {
+    sessionReads.foreach { q =>
+      val (rows, jobs) = jobsDuring(ReadPlanner.plan(session.store, q).collect())
+      assert(jobs == 0, q)
+      assert(rows.toSeq.map(_.toSeq) ==
+        ReadPlanner.plan(session.catalyst, q).collect().toSeq.map(_.toSeq), q)
+    }
+    val (_, catalystJobs) = jobsDuring(
+      ReadPlanner.plan(session.catalyst, sessionReads(1)).collect())
+    assert(catalystJobs > 0, "the counter sees the Catalyst plan's jobs")
+  }
+
+  test("PointServer.build reuses a mirror-backed store's snapshot: no Spark job") {
+    val st = GraphStore.fromSeq(spark,
+      Seq(node(1, name = Some("person")), node(2, typeguid = Some(1L), value = Some("x"))))
+    val (built, jobs) = jobsDuring(PointServer.build(st))
+    assert(jobs == 0)
+    assert(built eq st.pointIndex.get)
+    val (_, collectJobs) = jobsDuring(PointServer.build(st.copy(localRows = None)))
+    assert(collectJobs > 0)
+  }
+
+  test("reads the snapshot does not serve keep the Catalyst plan") {
+    val st = session.store
+    val word = """read (name="note" value~="amber" pagesize=2 result=((value)))"""
+    assert(isLocal(ReadPlanner.plan(st, word)))
+    assert(!isLocal(ReadPlanner.plan(st,
+      """read (name="note" value~="amber" asof=150 result=((value)))""")))
+    val first = ReadPlanner.plan(st,
+      """read (name="note" pagesize=2 result=(cursor (value)))""")
+    assert(!isLocal(first))
+    val tok = ReadPlanner.lastRootCursorTok.get
+    assert(!isLocal(ReadPlanner.plan(st,
+      s"""read (name="note" pagesize=2 cursor="$tok" result=((value)))""")))
+    assert(!isLocal(ReadPlanner.plan(st,
+      """read (name="person" result=((guid contents)) (<-left name="knows"))""")))
+    assert(!isLocal(ReadPlanner.plan(
+      GraphStore.fromDf(spark, st.primitives, versioned = false), word)))
+    val hook = graft.plan.Cursor.refIterCursor
+    graft.plan.Cursor.refIterCursor = Some((_, _, _, _, _) => None)
+    try assert(!isLocal(ReadPlanner.plan(st, word)))
+    finally graft.plan.Cursor.refIterCursor = hook
+  }
+
+  test("a read on an empty mirror answers no rows with the Catalyst schema") {
+    val empty = GraphStore.fromSeq(spark, Nil)
+    (sessionReads :+ """read (any result=((guid type meta datatype literal="x")))""")
+      .foreach { q =>
+        val routed = ReadPlanner.plan(empty, q)
+        assert(isLocal(routed), q)
+        assert(routed.collect().isEmpty, q)
+        assert(typesOf(routed) ==
+          typesOf(ReadPlanner.plan(empty.copy(localRows = None), q)), q)
+      }
+  }
+
+  test("write-only keywords in a read still fail validation ahead of the route") {
+    val msg = intercept[graft.gql.Parser.ParseError](
+      ReadPlanner.plan(session.store, "read (key=(name))")).getMessage
+    assert(msg == intercept[graft.gql.Parser.ParseError](
+      ReadPlanner.plan(session.catalyst, "read (key=(name))")).getMessage)
+    assert(msg.contains("\"key=\" only works with \"write\""))
   }
 }
