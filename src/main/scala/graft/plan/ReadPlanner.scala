@@ -92,8 +92,8 @@ object ReadPlanner {
     if (store.localRows.isEmpty || Cursor.refIterCursor.isDefined ||
         !PointServer.servableFor(c)) None
     else for {
-      flat <- PointServer.flatFor(c)
-      schema <- snapshotSchema(flat)
+      proj <- PointServer.flatFor(c)
+      schema <- snapshotSchema(proj)
       ix <- store.pointIndex
       served <- PointServer.serve(ix, c)
     } yield {
@@ -102,18 +102,17 @@ object ReadPlanner {
       store.spark.createDataFrame(rows, schema)
     }
 
-  /** the Catalyst plan's schema for a servable flattened result: names
-    * as [[resultFields]] gives them, types and nullability as
+  /** the Catalyst plan's schema for a servable projection: names as
+    * [[ResultColumns]] gives them, types and nullability as
     * [[fieldExpr]] types them over the primitive columns
     */
-  private def snapshotSchema(flat: Seq[Pattern]): Option[StructType] =
-    if (flat == Seq(CountPat))
+  private def snapshotSchema(proj: PointServer.Projection): Option[StructType] =
+    if (proj.flat == Seq(CountPat))
       Some(StructType(Seq(StructField("count", LongType, nullable = false))))
     else {
-      val types = flat.map(snapshotType)
-      Option.when(flat.nonEmpty && types.forall(_.isDefined)) {
-        val names = uniqueNames(flat.zipWithIndex.map { case (p, i) => patName(p, i) })
-        StructType(names.zip(types.flatten).map { case (n, (t, nullable)) =>
+      val types = proj.flat.map(snapshotType)
+      Option.when(proj.flat.nonEmpty && types.forall(_.isDefined)) {
+        StructType(proj.cols.zip(types.flatten).map { case (n, (t, nullable)) =>
           StructField(n, t, nullable)
         })
       }
@@ -999,7 +998,7 @@ object ReadPlanner {
     // per-row leaves of a list-var pattern, positionally (the renderer
     // re-applies the pattern shape over these)
     def varLeafFields(lp: ListPat): Seq[(String, Column)] =
-      flatten(lp).zipWithIndex.map { case (p, idx) =>
+      ResultColumns.leaves(lp).zipWithIndex.map { case (p, idx) =>
         (s"f$idx", fieldExpr(store, p, sub))
       }
     def listVarAggs: Seq[Column] = listVars.map { case (cn, lp) =>
@@ -1014,7 +1013,7 @@ object ReadPlanner {
     }
     // a child with result=count contributes its per-parent cardinality
     // as the contents value (count1.sh shape), not a tuple list
-    val childIsCount = sub.result.map(flatten).contains(Seq(CountPat))
+    val childIsCount = sub.result.map(ResultColumns.leaves).contains(Seq(CountPat))
     def contentsAgg(ranked: DataFrame): Column =
       if (childIsCount) count(lit(1)).cast("long")
       else sortedContents(contentsStructOf(ranked), resultNames, sub)
@@ -1066,7 +1065,7 @@ object ReadPlanner {
         // harness-installed hook; engine runs carry null (the root
         // keyset cursor is the engine's own pagination surface)
         val wantsChildCursor =
-          sub.result.exists(p => flatten(p).contains(CursorPat))
+          sub.result.exists(p => ResultColumns.leaves(p).contains(CursorPat))
         if (wantsChildCursor && graft.plan.Cursor.refChildCursor.isDefined) {
           val subRef = sub
           val mint = udf((ids: Seq[Long]) =>
@@ -1225,9 +1224,8 @@ object ReadPlanner {
     * parent's contents); defaults to ((guid contents)) per
     * doc/gr-protocol.txt:876-880 — here: value then guid, flat.
     */
-  private def resultFields(store: GraphStore, c: Constraint): Seq[(String, Column)] = {
-    val pat = c.result.getOrElse(ListPat(Seq(FieldPat("guid"), FieldPat("value"))))
-    val fields = flatten(pat).zipWithIndex.flatMap {
+  private def resultFields(store: GraphStore, c: Constraint): Seq[(String, Column)] =
+    ResultColumns(ResultColumns.leaves(c.result.getOrElse(ResultColumns.default))) {
       case (ContentsPat, _) =>
         // count=0 children are planned as anti-joins and never carry a
         // __contents_i column; they also can't contribute contents
@@ -1236,24 +1234,8 @@ object ReadPlanner {
       // set-level iterator/estimate dumps carry no row columns — the
       // session renderer derives them from the constraint (iterator1)
       case (IteratorPat | EstimatePat, _) => Nil
-      case (p, idx) => Seq(patName(p, idx) -> fieldExpr(store, p, c))
+      case (p, name) => Seq(name -> fieldExpr(store, p, c))
     }
-    uniqueNames(fields.map(_._1)).zip(fields.map(_._2))
-  }
-
-  /** a pattern can name the same leaf twice (sort13: ($x1 ($x1 value)))
-    * — struct fields must stay unique or getField turns ambiguous;
-    * consumers are positional, so suffixing repeats is invisible
-    */
-  private def uniqueNames(names: Seq[String]): Seq[String] = {
-    val seen = scala.collection.mutable.Set.empty[String]
-    names.zipWithIndex.map { case (n, i) => if (seen.add(n)) n else s"${n}__dup$i" }
-  }
-
-  private def flatten(p: Pattern): Seq[Pattern] = p match {
-    case ListPat(items) => items.flatMap(flatten)
-    case other => Seq(other)
-  }
 
   /** indices of children that can contribute contents tuples (everything
     * except count=0 anti-join children) — the renderer mirrors this
@@ -1262,14 +1244,6 @@ object ReadPlanner {
     c.subs.zipWithIndex.collect {
       case (s, i) if !s.effectiveCount.max.contains(0L) => i
     }
-
-  private def patName(p: Pattern, idx: Int): String = p match {
-    case FieldPat(f) => f
-    case VarPat(v) => v
-    case LiteralPat(_, _) => s"lit_$idx"
-    case CountPat => "count"
-    case _ => s"c_$idx"
-  }
 
   /** pattern → Column over a solved constraint frame */
   private def fieldExpr(store: GraphStore, p: Pattern, c: Constraint): Column = p match {
@@ -1399,7 +1373,7 @@ object ReadPlanner {
           case Some(FieldPat("value") | FieldPat("name")) =>
             sort_key(col(varCol(v)), cmp)
           case Some(lp: ListPat) =>
-            val leafPats = flatten(lp)
+            val leafPats = ResultColumns.leaves(lp)
             transform(col(varCol(v)), x => struct(
               leafPats.zipWithIndex.map { case (p, idx) =>
                 val f = x.getField(s"f$idx")
@@ -1466,14 +1440,14 @@ object ReadPlanner {
     // set-level count result (result=count → one row); countlimit stops
     // counting past N (the reference returns TOOMANY beyond — callers
     // detect overflow by count == countlimit+1, graphd/graphd.h:1305).
-    val pat = c.result.getOrElse(ListPat(Seq(FieldPat("guid"), FieldPat("value"))))
-    if (flatten(pat) == Seq(CountPat)) {
+    val pat = c.result.getOrElse(ResultColumns.default)
+    if (ResultColumns.leaves(pat) == Seq(CountPat)) {
       val limited = c.countlimit.map(n => df.limit(n.toInt + 1)).getOrElse(df)
       return limited.agg(count(lit(1)).as("count"))
     }
     // estimate-count: optimizer statistics, no execution
     // (graphd/graphd-read-set-estimate.c:21 → Catalyst plan stats)
-    if (flatten(pat) == Seq(EstimateCountPat)) {
+    if (ResultColumns.leaves(pat) == Seq(EstimateCountPat)) {
       val spark = df.sparkSession
       import spark.implicits._
       // the reference's estimate for an unconstrained read is the
@@ -1502,7 +1476,7 @@ object ReadPlanner {
     // reads exchange-free.
     val needsOrder = c.sort.nonEmpty || c.pagesize.isDefined ||
       c.start.isDefined || c.cursorTok.isDefined ||
-      flatten(pat).contains(CursorPat) ||
+      ResultColumns.leaves(pat).contains(CursorPat) ||
       graft.plan.Cursor.refIterCursor.isDefined
     if (needsOrder) {
       // a sort under the NUMBER comparator is produced by the number
@@ -1538,7 +1512,7 @@ object ReadPlanner {
     // column — "null:" when nothing follows this page (the reference
     // emits the empty cursor whenever there is no trailing row,
     // graphd-sort.c:1480), else the frozen keyset.
-    val wantsCursor = flatten(pat).contains(CursorPat)
+    val wantsCursor = ResultColumns.leaves(pat).contains(CursorPat)
     val cursorTok: Option[String] =
       if (!wantsCursor) None
       else c.pagesize.map { ps =>

@@ -190,8 +190,8 @@ object PointServer {
   def serve(ix: Index, query: String): Option[Served] = {
     val p = StatementCache.prepared(query)
     p.single match {
-      case Some(flat) =>
-        serveVetted(ix, p.c, flat, emitSortKeys = false, p.wordKeys)
+      case Some(proj) =>
+        serveVetted(ix, p.c, proj, emitSortKeys = false, p.wordKeys)
       case None => None
     }
   }
@@ -203,7 +203,7 @@ object PointServer {
       : Option[Served] = {
     if (!servableFor(c)) return None
     flatFor(c) match {
-      case Some(flat) => serveVetted(ix, c, flat, emitSortKeys)
+      case Some(proj) => serveVetted(ix, c, proj, emitSortKeys)
       case None => None
     }
   }
@@ -238,12 +238,16 @@ object PointServer {
     */
   private[graft] def servableFor(c: Constraint): Boolean = servableRoot(c)
 
-  /** flattened result pattern if every pat is servable (router and
+  /** A servable result pattern's leaves and their column names
+    * ([[ResultColumns]]), worked out once per query shape.
+    */
+  final case class Projection(flat: Seq[Pattern], cols: Seq[String])
+
+  /** the projection if every result leaf is servable (router and
     * ReadPlanner pre-check; shared with the single-snapshot entry)
     */
-  private[graft] def flatFor(c: Constraint): Option[Seq[Pattern]] = {
-    val pat = c.result.getOrElse(ListPat(Seq(FieldPat("guid"), FieldPat("value"))))
-    val flat = flatten(pat)
+  private[graft] def flatFor(c: Constraint): Option[Projection] = {
+    val flat = ResultColumns.leaves(c.result.getOrElse(ResultColumns.default))
     // the Catalyst plan renders a link's meta against the root's own
     // linkage ("<-" under a `(<- ...)` root); fieldOf renders "->"
     def meta(p: Pattern): Boolean = p match {
@@ -253,7 +257,7 @@ object PointServer {
     }
     val rightLinked = c.effectiveLinkage.contains(ChildPointsToParent("right"))
     if (flat.exists(p => !servablePat(p) || (rightLinked && meta(p)))) None
-    else Some(flat)
+    else Some(Projection(flat, ResultColumns.names(flat)))
   }
 
   /** the per-shard entry: query-level servability and result-pattern
@@ -262,18 +266,18 @@ object PointServer {
     * overhead on the point-read hot path)
     */
   private[serve] def serveVetted(ix: Index, c: Constraint,
-      flat: Seq[Pattern], emitSortKeys: Boolean,
+      proj: Projection, emitSortKeys: Boolean,
       wordKeys: Seq[Seq[Either[String, String]]] = null): Option[Served] = {
+    val flat = proj.flat
     positionsVetted(ix, c, flat, wordKeys).map { case (out, keyed) =>
       if (flat == Seq(CountPat))
         Served(Seq("count"), Seq(Array[Any](out.length.toLong)))
       else {
-        val cols = flat.zipWithIndex.map { case (p, idx) => patName(p, idx) }
         val rows = out.toSeq.map(p => flat.map(f => fieldOf(ix, f, p)).toArray)
         val sks =
           if (emitSortKeys && keyed != null) keyed.toSeq
           else Nil
-        Served(cols, rows, out.toSeq.map(p => ix.ids(p)), sks)
+        Served(proj.cols, rows, out.toSeq.map(p => ix.ids(p)), sks)
       }
     }
   }
@@ -829,18 +833,6 @@ object PointServer {
     else a.compareTo(b)
 
   // ---------- projection ----------
-
-  private def flatten(p: Pattern): Seq[Pattern] = p match {
-    case ListPat(items) => items.flatMap(flatten)
-    case other => Seq(other)
-  }
-
-  private[serve] def patName(p: Pattern, idx: Int): String = p match {
-    case FieldPat(f) => f
-    case LiteralPat(_, _) => s"lit_$idx"
-    case CountPat => "count"
-    case _ => s"c_$idx"
-  }
 
   private[serve] def fieldOf(ix: Index, p: Pattern, pos: Int): Any = p match {
     case FieldPat("guid") => ix.ids(pos)

@@ -124,12 +124,10 @@ object ShardRouter {
     // validate + flatten the result pattern ONCE; per-shard calls take
     // the vetted fast entry
     if (!PointServer.servableFor(shardC)) return None
-    PointServer.flatFor(shardC).map(flat =>
-      RoutedPlan(shardC, flat, c.sort.nonEmpty,
+    PointServer.flatFor(shardC).map(proj =>
+      RoutedPlan(shardC, proj.flat, c.sort.nonEmpty,
         c.sort.map(_.ascending).toArray,
-        PointServer.wordProbeKeys(shardC),
-        flat.zipWithIndex.map { case (p, idx) =>
-          PointServer.patName(p, idx) }))
+        PointServer.wordProbeKeys(shardC), proj.cols))
   }
 
   /** Failure contract: the scatter is ALL-OR-NOTHING. Any shard probe

@@ -2,7 +2,7 @@ package graft.serve
 
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.gql.{Constraint, Parser, Pattern}
+import graft.gql.{Constraint, Parser}
 
 /** Prepared-statement cache for the serving tier: raw query text →
   * parsed AST + vetted serving plans.
@@ -29,14 +29,14 @@ private[graft] object StatementCache {
   private final val cap = 1 << 16
 
   /** one parse, every serving plan derived from it:
-    *  - `single`: the snapshot tier's flattened result pattern (None =
-    *    not servable there; run the Catalyst plan)
+    *  - `single`: the snapshot tier's result leaves and column names
+    *    (None = not servable there; run the Catalyst plan)
     *  - `routed`: the shard router's scatter plan (None = non-local
     *    query class; fall back to the single snapshot / Catalyst)
     */
   final case class Prepared(
       c: Constraint,
-      single: Option[Seq[Pattern]],
+      single: Option[PointServer.Projection],
       routed: Option[ShardRouter.RoutedPlan],
       /** word/prefix probe keys — the regex-heavy constraint analysis
         * the candidate producer needs, derived once per query shape */

@@ -245,6 +245,8 @@ class ServeSpec extends AnyFunSuite {
   test("pick and literal patterns") {
     check("""read (guid=10 result=((guid literal="x" name)))""")
     check("""read (guid=10 result=((guid pick(name value) pick(left scope) none)))""")
+    // a repeated field: the Catalyst plan names the repeat value__dup2
+    check("""read (guid=10 result=((guid value value)))""")
   }
 
   test("unsupported shapes fall back to Spark") {
