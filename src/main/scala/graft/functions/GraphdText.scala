@@ -978,9 +978,6 @@ object GraphdText {
     }
   }
 
-  /** pattern words keep `*` but otherwise tokenize like values */
-  def patternWords(p: String): Seq[String] = patternWordGroups(p).flatten
-
   /** pattern words grouped by separator kind: words inside one group
     * were separated only by punctuation (no whitespace) — "foo-bar" →
     * [[foo, bar]], "foo bar" → [[foo], [bar]]. Escapes (backslash) are
@@ -1008,30 +1005,6 @@ object GraphdText {
     }
     flush()
     out.toSeq
-  }
-
-  /** simple glob: `*` = any run (including empty) within a word */
-  def globMatch(pat: String, s: String): Boolean = {
-    val parts = pat.split("\\*", -1)
-    if (parts.length == 1) return pat == s
-    var pos = 0
-    // first part must match at start
-    if (parts.head.nonEmpty) {
-      if (!s.startsWith(parts.head)) return false
-      pos = parts.head.length
-    }
-    // middle parts in order
-    for (k <- 1 until parts.length - 1) {
-      val part = parts(k)
-      if (part.nonEmpty) {
-        val idx = s.indexOf(part, pos)
-        if (idx < 0) return false
-        pos = idx + part.length
-      }
-    }
-    // last part must match at end
-    val last = parts.last
-    last.isEmpty || (s.endsWith(last) && s.length - last.length >= pos)
   }
 
   /** three-way compare under a named comparator */

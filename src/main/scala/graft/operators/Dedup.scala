@@ -97,7 +97,13 @@ object Dedup {
       fpp: Double): org.apache.spark.util.sketch.BloomFilter =
     bloomMemo.getOrElseUpdate((Memo.planKey(hFp), items, fpp), {
       historySketchBuilds.incrementAndGet()
-      hFp.stat.bloomFilter("fp", items, fpp)
+      // an empty history aggregates to no buffer, which Spark's
+      // bloomFilter then fails to read (NPE); its sketch is the empty
+      // filter. Callers that size the filter from the history already
+      // hold the memoized count.
+      if (Memo.count(hFp) == 0)
+        org.apache.spark.util.sketch.BloomFilter.create(items, fpp)
+      else hFp.stat.bloomFilter("fp", items, fpp)
     })
 
   /** bucket count for a partitioned sketch: smallest power of two
@@ -625,19 +631,9 @@ object Dedup {
           "left_anti")
     }
 
-  /** exact-Jaccard verification of candidate pairs — memoized like the
-    * candidate generators, so the shingle cache it pins is released on
-    * LRU eviction instead of leaking per direct call
+  /** exact-Jaccard verification of candidate pairs, plus the shingle
+    * cache it pinned (for memo eviction)
     */
-  private val verifyMemo = Memo.frames[(Long, Long, String, String, Int, Double)]
-  def verifyJaccard(df: DataFrame, idCol: String, textCol: String,
-      cand: DataFrame, n: Int, threshold: Double): DataFrame =
-    verifyMemo.getOrElseUpdate(
-      (Memo.planKey(df), Memo.planKey(cand),
-        idCol, textCol, n, threshold),
-      verifyJaccardTracked(df, idCol, textCol, cand, n, threshold)).df
-
-  /** verification plus the shingle cache it pinned (for memo eviction) */
   private def verifyJaccardTracked(df: DataFrame, idCol: String,
       textCol: String, cand: DataFrame, n: Int,
       threshold: Double): Memo.Frame = {

@@ -291,10 +291,6 @@ object TextAnalysis {
 
   /** content fingerprint: md5 of the normalized text (exact-dup key) */
   def fingerprint(text: Column): Column = md5(normalize(text))
-
-  /** 64-bit rolling-style fingerprint from the first 16 hex chars */
-  def fingerprint64(text: Column): Column =
-    conv(substring(fingerprint(text), 1, 15), 16, 10).cast("long")
 }
 
 object Stopwords {

@@ -79,22 +79,21 @@ object ReadPlanner {
 
   /** The point-read route. On a store that carries the driver-resident
     * mirror, a read [[PointServer]] can serve is answered from the
-    * store's snapshot ([[GraphStore.pointIndex]]) as a local DataFrame,
-    * so `collect()` runs no Spark job — the reference likewise answers
-    * simple reads in-process from memory-resident indexes
-    * (doc/a-brief-tour-of-graphd.md:197-204). Persisted and `fromDf`
+    * store's snapshot ([[graft.store.Source.View.pointIndex]]) as a
+    * local DataFrame, so `collect()` runs no Spark job — the reference
+    * likewise answers simple reads in-process from memory-resident
+    * indexes (doc/a-brief-tour-of-graphd.md:197-204). Persisted and `fromDf`
     * stores, `asof`, cursors, contents, variables, a result whose
     * Catalyst type has no name here, and session replay's id-ordered
     * reads (`Cursor.refIterCursor` set) take the Catalyst plan.
     * ServeSpec gates both as answering alike.
     */
   private def fromSnapshot(store: GraphStore, c: Constraint): Option[DataFrame] =
-    if (store.localRows.isEmpty || Cursor.refIterCursor.isDefined ||
-        !PointServer.servableFor(c)) None
+    if (Cursor.refIterCursor.isDefined || !PointServer.servableFor(c)) None
     else for {
+      ix <- store.view.pointIndex
       proj <- PointServer.flatFor(c)
       schema <- snapshotSchema(proj)
-      ix <- store.pointIndex
       served <- PointServer.serve(ix, c)
     } yield {
       val rows = new java.util.ArrayList[Row](served.rows.length)
@@ -541,7 +540,7 @@ object ReadPlanner {
     // appears as a target's prev.
     c.previous.foreach { p =>
       val targets =
-        if (p.lineage) store.lineageMembers(p.serials.flatten)
+        if (p.lineage) store.source.lineageMembers(p.serials.flatten)
         else p.serials.flatten
       val hasNull = p.serials.contains(None) || p.serials.isEmpty
       val incl = {
@@ -554,7 +553,7 @@ object ReadPlanner {
     }
     c.next.foreach { p =>
       val targets =
-        if (p.lineage) store.lineageMembers(p.serials.flatten)
+        if (p.lineage) store.source.lineageMembers(p.serials.flatten)
         else p.serials.flatten
       val hasNull = p.serials.contains(None) || p.serials.isEmpty
       def allPrevs = store.primitives.filter(col("prev").isNotNull)
@@ -633,7 +632,7 @@ object ReadPlanner {
     c.linkFields.foreach { case (f, preds) =>
       // `left~=G`: any generation of G's lineage (typeguid = ~=)
       def expand(p: GuidPred): Seq[Long] =
-        if (p.lineage) store.lineageMembers(p.serials.flatten)
+        if (p.lineage) store.source.lineageMembers(p.serials.flatten)
         else p.serials.flatten
       val (incls, excls) = preds.partition(_.include)
       incls.foreach { p =>
@@ -666,7 +665,7 @@ object ReadPlanner {
     // type=(...) pred applies independently (intersection), and null /
     // an empty list match the TYPELESS primitive (group.sh).
     c.typePreds.foreach { vals =>
-      val ids = store.resolveTypeIds(vals.flatten)
+      val ids = store.view.resolveTypeIds(vals.flatten)
       val hasNull = vals.contains(None) || vals.isEmpty
       val base =
         if (ids.nonEmpty) col("typeguid").isin(ids.map(Long.box): _*)
@@ -1256,7 +1255,7 @@ object ReadPlanner {
       // "#<guid>" (rerestore golden) — emitted here as a marker the
       // session renderer rewrites into the wire guid space
       val unnamed = concat(lit(TypeVocab.unnamed), col("typeguid").cast("string"))
-      val tn = store.typeNamesById
+      val tn = store.view.typeNamesById
       if (tn.isEmpty)
         when(col("typeguid").isNull, lit(null).cast("string"))
           .otherwise(unnamed)

@@ -37,7 +37,8 @@ import graft.store.{GraphStore, TypeVocab}
   * Callers: the serving entry points below and [[ShardRouter]], and
   * `ReadPlanner.plan`, which answers servable reads on a store that
   * carries the driver-resident mirror from the store's own snapshot
-  * ([[GraphStore.pointIndex]]) instead of running a Spark job.
+  * ([[graft.store.Source.View.pointIndex]]) instead of running a Spark
+  * job.
   *
   * Scale: one snapshot holds one shard's hot set (the reference itself
   * caps a database at 16G primitives, libaddb/addb-istore.h:22). At
@@ -82,12 +83,12 @@ object PointServer {
 
   /** Build the snapshot from the store's current view. A store that
     * carries the driver-resident mirror hands over its own snapshot
-    * ([[GraphStore.pointIndex]], no Spark job); any other store pays
-    * one collect of the columns the serving paths need (the
+    * ([[graft.store.Source.View.pointIndex]], no Spark job); any other
+    * store pays one collect of the columns the serving paths need (the
     * materialized-view refresh; on a cluster this is the per-shard
     * executor-side build).
     */
-  def build(store: GraphStore): Index = store.pointIndex.getOrElse {
+  def build(store: GraphStore): Index = store.view.pointIndex.getOrElse {
     import org.apache.spark.sql.functions.col
     def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
       if (r.isNullAt(i)) None else Some(r.getLong(i))
@@ -109,7 +110,7 @@ object PointServer {
 
   /** The row-array core: the snapshot of current primitives (any
     * order) resolving types through `types` — the collect above, or a
-    * mirror-backed store's own [[GraphStore.pointIndex]].
+    * mirror-backed store's own [[graft.store.Source.View.pointIndex]].
     */
   private[graft] def of(rows0: IndexedSeq[Primitive], types: TypeVocab): Index = {
     val inOrder = rows0.iterator.zip(rows0.iterator.drop(1)).forall(p => p._1.id < p._2.id)

@@ -43,10 +43,7 @@ object ShardRouter {
     // shard the globally-resolved CURRENT view: version currency is a
     // per-lineage property and lineage members hash to different
     // shards, so newest/live resolution must happen before the split
-    val currentView = store.copy(
-      primitives = store.current,
-      versioned = false,
-      localRows = store.currentLocal)
+    val currentView = store.copy(source = store.view.source, versioned = false)
     val shards = (0 until n).map { s =>
       // null endpoints must NOT default into shard 0 (a coalesce-to-0
       // here would hand shard 0 every NODE in the corpus and break the
@@ -54,11 +51,9 @@ object ShardRouter {
       val owned = pmod(col("id"), lit(n)) === s ||
         (col("left").isNotNull && pmod(col("left"), lit(n)) === s) ||
         (col("right").isNotNull && pmod(col("right"), lit(n)) === s)
-      val shardStore = currentView.copy(
-        primitives = currentView.primitives.filter(owned),
-        localRows = currentView.localRows.map(_.filter(p =>
-          p.id % n == s || p.left.exists(_ % n == s) ||
-            p.right.exists(_ % n == s))))
+      val shardStore = currentView.copy(source = currentView.source.filtered(
+        owned, p => p.id % n == s || p.left.exists(_ % n == s) ||
+          p.right.exists(_ % n == s)))
       PointServer.build(shardStore)
         .withTypes(globalTypes)
         .withHome(id => id % n == s)

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +10,15 @@ import graft.model.{Guid, Primitive}
   * the reference's istore + index layer (libaddb/addb-istore.h,
   * libpdb/pdb.h). One append-only table, everything else is a
   * declarative view Catalyst can push into.
+  *
+  * The rows come from one [[Source]]: a driver-resident mirror
+  * ([[Source.Mirror]], built by `fromSeq`) or a distributed frame
+  * ([[Source.Distributed]], built by `load` and `fromDf`), never both.
+  * The mirror answers the write path's per-request lookups and the
+  * point-read snapshot with no Spark job; its `primitives` frame is
+  * derived on first Catalyst use. Every mirror-or-frame decision is a
+  * method of the two sources, so nothing outside `graft.store` asks
+  * which one a store has.
   *
   * Scale notes (100 TB design):
   *  - persisted partitioned by `id_part = id >> PartShift` — the analog
@@ -21,19 +30,10 @@ import graft.model.{Guid, Primitive}
   *    column; at cluster scale the table would additionally be bucketed
   *    by `left`/`right` for shuffle-free fan-in joins.
   */
-final case class GraphStore(spark: SparkSession, primitives: DataFrame,
+final case class GraphStore(spark: SparkSession, source: Source,
     versioned: Boolean = true,
     /** route `~=` predicates through the inverted word index */
     useWordIndex: Boolean = false,
-    /** Driver-resident mirror of the primitives, kept by stores built
-      * row-by-row (session replay, unit fixtures). Point lookups the
-      * write path makes per request (next id, lineage heads, type-name
-      * resolution) answer from the mirror instead of a Spark job each —
-      * the same role the reference's in-process istore cursor and
-      * hmap caches play for its single-writer appends. Bulk stores
-      * (parquet-backed) carry None and use the distributed paths.
-      */
-    localRows: Option[Vector[graft.model.Primitive]] = None,
     /** Incrementally-maintained word index: an already-built (cached)
       * index covering ids <= watermark, extended lazily with the delta
       * scan `id > watermark` — the Spark rendition of the reference's
@@ -46,34 +46,11 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
     wordIndexBase: Option[(DataFrame, Long)] = None) {
   import GraphStore._
 
-  /** the mirror filtered to the current (newest live) view */
-  lazy val currentLocal: Option[Vector[graft.model.Primitive]] =
-    localRows.map { rows =>
-      // the lineage grouping only matters once a prev-chain exists —
-      // an unversioned store (the overwhelmingly common write-path
-      // case) short-circuits to a flat live filter, keeping per-write
-      // mirror lookups O(n) instead of O(n log n) with hashing
-      // (david_2.sh: 20k writes would otherwise pay a full groupBy
-      // per request)
-      val base =
-        if (versioned && rows.exists(_.prev.isDefined))
-          rows.groupBy(_.lineage).valuesIterator
-            .map(_.maxBy(_.id)).toVector.sortBy(_.id)
-        else rows
-      base.filter(_.live)
-    }
+  /** every version, tombstones included */
+  lazy val primitives: DataFrame = source.frame(spark)
 
-  /** allocation-free pass over the current view of the mirror — the
-    * write path probes the store once or twice per request, and
-    * materializing a fresh filtered Vector each time dominates bulk
-    * ingest; an unversioned mirror streams straight off localRows
-    */
-  def currentLocalIter: Option[Iterator[graft.model.Primitive]] =
-    localRows.map { rows =>
-      if (versioned && rows.exists(_.prev.isDefined))
-        currentLocal.get.iterator
-      else rows.iterator.filter(_.live)
-    }
+  /** the lookups over this store's current view */
+  private[graft] lazy val view: Source.View = source.view(this)
 
   /** Default visibility: current (newest) live versions only —
     * the reference's default `newest=0 live=true` view
@@ -113,43 +90,20 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
 
   /** Snapshot as of an id horizon — `asof=`/dateline time travel
     * (doc/gr-protocol.txt:203-221): drop everything written after the
-    * horizon, then re-resolve newest/live. On a persisted store the
-    * predicate hits both the `id` column (parquet row-group min/max
-    * skipping) and the `id_part` partition column (directory-level
-    * partition pruning) — an asof read never touches storage written
-    * after its horizon.
+    * horizon, then re-resolve newest/live.
     */
-  def asOf(horizon: Long): GraphStore = {
-    // rows appended after load may carry a null id_part (union with
-    // allowMissingColumns) — the prune must keep them, not drop them
-    // the partition term only applies while the shifted horizon fits an
-    // Int — asOf(Long.MaxValue) would truncate to -1 and silently drop
-    // every persisted row
-    val part = horizon >> PartShift
-    val pred =
-      if (primitives.columns.contains("id_part") && part <= Int.MaxValue)
-        col("id") <= horizon &&
-          (col("id_part").isNull || col("id_part") <= part.toInt)
-      else col("id") <= horizon
-    copy(primitives = primitives.filter(pred),
-      localRows = localRows.map(_.filter(_.id <= horizon)))
-  }
+  def asOf(horizon: Long): GraphStore = copy(source = source.upTo(horizon))
 
   /** snapshot by WRITE TIME: primitives stamped at or before the
     * instant (asof=<timestamp> form; equivalent to the id horizon when
     * timestamps are monotone with ids, which the writer guarantees)
     */
   def asOfTimestamp(micros: Long): GraphStore =
-    copy(primitives = primitives.filter(col("timestamp") <= micros),
-      localRows = localRows.map(_.filter(_.timestamp <= micros)))
+    copy(source = source.filtered(col("timestamp") <= micros,
+      _.timestamp <= micros))
 
   def nodes: DataFrame = current.filter(col("left").isNull)
   def links: DataFrame = current.filter(col("left").isNotNull)
-
-  /** Newest version of each lineage regardless of liveness — used by
-    * `guid~=` resolution (doc/gr-model.txt:29-51).
-    */
-  def newestAll: DataFrame = newestPerLineage(primitives)
 
   /** Inverted word index over `value` — the WORD hmap analog
     * (libpdb/pdb.h:228 PDB_HASH_WORD, libpdb/pdb-word.c): word → ids.
@@ -232,102 +186,6 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
       .distinct()
       .cache()
 
-  /** the mirror's type vocabulary, one pass over the current view and
-    * no Spark job; the point snapshot serves `type=` and the `type`
-    * result from this same object
-    */
-  private[graft] lazy val localTypes: Option[TypeVocab] =
-    currentLocal.map(TypeVocab.of)
-
-  /** The point-read snapshot ([[graft.serve.PointServer.Index]]) of the
-    * mirror's current view, built on first use with no Spark job; None
-    * on a store without a mirror. Every write returns a new store, so a
-    * run of writes with no read between them builds none.
-    */
-  lazy val pointIndex: Option[graft.serve.PointServer.Index] =
-    for (rows <- currentLocal; types <- localTypes)
-      yield graft.serve.PointServer.of(rows, types)
-
-  /** Memoized type-name → type-node-id resolution — the reference
-    * resolves type names to typeguids once per request in its semantic
-    * phase and caches server-side (graphd/graphd-read.c:28-37); without
-    * the memo every read pays a driver-side collect job just to find
-    * the type node. A mirror-backed store answers from its vocabulary.
-    */
-  private val typeIdCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-  def resolveTypeIds(names: Seq[String]): Seq[Long] = localTypes match {
-    case Some(types) => names.flatMap(types.idsOf)
-    case None => names.flatMap(n => typeIdCache.getOrElseUpdate(n, {
-      val named = current.filter(col("left").isNull && col("name") === n)
-        .select("id").collect().map(_.getLong(0)).toSeq
-      // reference physical type registry (graphd-type.c:518
-      // graphd_type_guid_from_name): a live has_key naming link whose
-      // value is the name (case-insensitive) names the node it points
-      // at with its right
-      val viaLinks = hasKeyId.toSeq.flatMap { hk =>
-        current.filter(col("typeguid") === hk && col("left").isNotNull &&
-            col("right").isNotNull && lower(col("value")) === n.toLowerCase)
-          .select("right").collect().map(_.getLong(0)).toSeq
-      }
-      (named ++ viaLinks).distinct
-    }))
-  }
-
-  /** every id sharing a lineage with any of the given ids — backs
-    * `field~=G` generation-relaxed linkage matching (guidlist3)
-    */
-  def lineageMembers(ids: Seq[Long]): Seq[Long] = {
-    if (ids.isEmpty) return Nil
-    localRows match {
-      case Some(rows) =>
-        val idSet = ids.toSet
-        val lins = rows.filter(p => idSet(p.id)).map(_.lineage).toSet
-        rows.filter(p => lins(p.lineage)).map(_.id)
-      case None =>
-        val lins = primitives.filter(col("id").isin(ids.map(Long.box): _*))
-          .select("lineage").distinct().collect().map(_.getLong(0))
-        if (lins.isEmpty) Nil
-        else primitives.filter(col("lineage").isin(lins.map(Long.box): _*))
-          .select("id").collect().map(_.getLong(0)).toSeq
-    }
-  }
-
-  /** the HAS_KEY attribute node of a reference-bootstrapped store
-    * (distributed path; the mirror's is inside [[TypeVocab]])
-    */
-  private lazy val hasKeyId: Option[Long] =
-    current.filter(col("left").isNull && col("name") === "HAS_KEY")
-      .select("id").orderBy(col("id")).limit(1).collect()
-      .headOption.map(_.getLong(0))
-
-  /** id → name over named nodes — the type vocabulary. Backs the
-    * `type` result pattern, which echoes the type node's NAME (the
-    * reverse of resolveTypeIds; bounded like any type system, so a
-    * driver-side literal map is the right plan shape). A
-    * reference-bootstrapped store names its (unnamed) type nodes
-    * through has_key naming links instead.
-    */
-  lazy val typeNamesById: Seq[(Long, String)] = localTypes match {
-    case Some(types) => types.namesById.toSeq
-    case None =>
-      val named = current.filter(col("left").isNull && col("name").isNotNull)
-        .select("id", "name").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toSeq
-      // naming links WIN over node names: the reference's reverse lookup
-      // goes through has_key links, so HAS_KEY itself displays as
-      // "has_key" (the anchor's value), not its node name (onerestore)
-      val viaLinks = hasKeyId.toSeq.flatMap { hk =>
-        current.filter(col("typeguid") === hk && col("left").isNotNull &&
-            col("right").isNotNull && col("value").isNotNull)
-          .select("id", "right", "value").collect()
-          .sortBy(_.getLong(0))
-          .map(r => r.getLong(1) -> r.getString(2)).toSeq
-      }
-      val linked = viaLinks.groupBy(_._1).view.mapValues(_.head._2)
-      val covered = linked.keySet
-      linked.toSeq ++ named.filterNot(p => covered(p._1))
-  }
-
   /** One-row store status — the reference's `status` request
     * (doc/gr-protocol.txt:910-1211, graphd/graphd-status.c) reduced to
     * the engine-meaningful facts: primitive/node/link/tombstone counts,
@@ -400,11 +258,10 @@ final case class GraphStore(spark: SparkSession, primitives: DataFrame,
         .write.mode(SaveMode.Overwrite).partitionBy("id_part").parquet(path)
     }
     // copy(), not a fresh construction: engine configuration
-    // (useWordIndex) survives compaction; the mirror and the
-    // incremental-index watermark refer to pre-compaction state and
-    // reset
-    copy(primitives = spark.read.parquet(path), versioned = false,
-      localRows = None, wordIndexBase = None)
+    // (useWordIndex) survives compaction; the incremental-index
+    // watermark refers to pre-compaction state and resets
+    copy(source = new Source.Distributed(spark.read.parquet(path)),
+      versioned = false, wordIndexBase = None)
   }
 
   def save(path: String): Unit =
@@ -632,31 +489,13 @@ object GraphStore {
     */
   def load(spark: SparkSession, path: String,
       useWordIndex: Boolean = true): GraphStore =
-    GraphStore(spark, spark.read.parquet(path), useWordIndex = useWordIndex)
+    fromDf(spark, spark.read.parquet(path), useWordIndex = useWordIndex)
 
-  private lazy val primSchema =
-    org.apache.spark.sql.Encoders.product[graft.model.Primitive].schema
-
-  /** DataFrame over a driver-local mirror WITHOUT eager row encoding:
-    * `seq.toDS()` encodes every row at construction, which makes a
-    * write-heavy session quadratic (each of N appends re-encodes all
-    * rows so far — david_2's 20k writes). This defers conversion to
-    * query execution; pure-write stretches pay nothing for the frame.
-    */
-  private lazy val primEncoder =
-    org.apache.spark.sql.graft.bridge.resolveEncoder(
-      org.apache.spark.sql.Encoders.product[graft.model.Primitive])
-
-  def lazyLocalDf(spark: SparkSession,
-      rows: Vector[graft.model.Primitive]): DataFrame =
-    org.apache.spark.sql.graft.bridge.deferredLocalDf(spark, rows, primEncoder)
-
+  /** a mirror-backed store over `ps` */
   def fromSeq(spark: SparkSession, ps: Seq[Primitive]): GraphStore = {
-    import spark.implicits._
     // lineage resolved driver-side (same chain-following semantics as
     // resolveLineage): follow prev to the chain root, dangling prev
-    // keeps its target id as the lineage — then the mirror and the
-    // DataFrame agree by construction
+    // keeps its target id as the lineage
     val byId = ps.map(p => p.id -> p).toMap
     def root(p: Primitive, seen: Set[Long]): Long = p.prev match {
       case Some(pr) if byId.contains(pr) && !seen(pr) =>
@@ -664,13 +503,14 @@ object GraphStore {
       case Some(pr) => pr
       case None => p.id
     }
-    val fixed = ps.map(p => p.copy(lineage = root(p, Set.empty))).toVector
-    GraphStore(spark, fixed.toDS().toDF(), localRows = Some(fixed))
+    GraphStore(spark, new Source.Mirror(
+      ps.map(p => p.copy(lineage = root(p, Set.empty))).toVector))
   }
 
+  /** a distributed store over `df` */
   def fromDf(spark: SparkSession, df: DataFrame,
       versioned: Boolean = true, useWordIndex: Boolean = false): GraphStore =
-    GraphStore(spark, df, versioned, useWordIndex)
+    GraphStore(spark, new Source.Distributed(df), versioned, useWordIndex)
 
   /** newest=0 view: keep the row with max id per lineage
     * (libpdb/pdb-generation.c re-expressed as a window; at scale this

@@ -96,7 +96,7 @@ object BulkMerge {
   def mergeKeyed(store: GraphStore, incoming: DataFrame,
       keyFields: Seq[String], comparator: String = "default",
       seqCol: Option[String] = None,
-      /** id to assign from; None = derive via Writer.nextId (a pruned
+      /** id to assign from; None = derive via the source's nextId (a pruned
         * max-id scan). A streaming loop passes the previous batch's
         * `nextIdAfter` to skip that scan per micro-batch.
         */
@@ -309,7 +309,7 @@ object BulkMerge {
     // stamping pass itself is lazy and DETERMINISTIC because it
     // derives from the localCheckpoint-pinned classification — no
     // second checkpoint needed to keep ids from re-rolling.
-    val base = baseId.getOrElse(Writer.nextId(store))
+    val base = baseId.getOrElse(store.source.nextId)
     // ONE pass over the pinned classification collects, per partition,
     // the outcome tallies — the inserted+versioned subtotal doubles as
     // the id offset for that partition because `newRows` is a NARROW
@@ -386,9 +386,6 @@ object BulkMerge {
 
     new Result(
       storeF = () => {
-        val merged = store.primitives
-          .unionByName(newDf, allowMissingColumns = true)
-        val mirror = store.localRows.map(_ ++ newDf.as[Primitive].collect())
         // an index-serving store maintains its word index incrementally
         // across the merge (the reference's on-write WORD hmap update):
         // the built (cached) index becomes the base, rows past the
@@ -401,10 +398,10 @@ object BulkMerge {
           if (store.useWordIndex)
             store.wordIndexBase.orElse(Some((store.valueWordIndex, base - 1)))
           else store.wordIndexBase
-        store.copy(primitives = merged,
+        store.copy(source = store.source.appended(newDf),
           versioned =
             store.versioned || counts.getOrElse("versioned", 0L) > 0,
-          localRows = mirror, wordIndexBase = wordSeed)
+          wordIndexBase = wordSeed)
       },
       outcomes = outcomesWithIds,
       appended = newDf,

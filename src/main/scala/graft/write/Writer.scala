@@ -1,7 +1,6 @@
 package graft.write
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
 import graft.model.{Datatype, Primitive}
 import graft.store.GraphStore
@@ -51,28 +50,6 @@ object Writer {
       timestamp: Option[Long] = None,
       // explicit transaction bit (restore v6 carries one per tuple)
       txstart: Option[Boolean] = None)
-
-  /** next dense id — the reference's istore append cursor */
-  def nextId(store: GraphStore): Long = store.localRows match {
-    case Some(rows) =>
-      var m = 0L; rows.foreach(p => if (p.id > m) m = p.id); m + 1L
-    case None =>
-      val p = store.primitives
-      // persisted layout: ids grow with the id_part partition column,
-      // so max(id) lives in the highest partition (plus any unsaved
-      // in-plan appends, which carry a null id_part) — scan only
-      // those instead of the whole id column (at 100 TB the full
-      // max(id) pass is a terabyte-scale column scan per batch)
-      if (p.columns.contains("id_part")) {
-        val mp = p.agg(max(col("id_part"))).head()
-        val pruned =
-          if (mp.isNullAt(0)) p
-          else p.filter(col("id_part").isNull ||
-            col("id_part") === mp.get(0))
-        pruned.agg(coalesce(max(col("id")), lit(0L))).head().getLong(0) + 1L
-      } else
-        p.agg(coalesce(max(col("id")), lit(0L))).head().getLong(0) + 1L
-  }
 
   /** unique monotone per-writer timestamps — the reference guarantees
     * "unique per local system, monotone per writer"
@@ -131,7 +108,7 @@ object Writer {
       if (prLen > 32L * 1024)
         throw WriteError("TOOBIG", "primitive too big")
     }
-    val base = nextId(store)
+    val base = store.source.nextId
     val txFirst = !(refBootstrap && txContOpen)
     if (refBootstrap) txContOpen = true
     // deterministic tick mode stamps each primitive its own tick (the
@@ -146,17 +123,7 @@ object Writer {
     })
     val prevIds = specs.flatMap(_.prev)
     val lineageOf: Map[Long, Long] =
-      if (prevIds.isEmpty) Map.empty
-      else store.localRows match {
-        case Some(rows) =>
-          val want = prevIds.toSet
-          rows.iterator.filter(p => want(p.id))
-            .map(p => p.id -> p.lineage).toMap
-        case None => store.primitives
-          .filter(col("id").isin(prevIds.map(Long.box): _*))
-          .select("id", "lineage").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
+      if (prevIds.isEmpty) Map.empty else store.source.lineageOf(prevIds)
 
     var tick = 0
     val rows = specs.zipWithIndex.map { case (s, i) =>
@@ -176,26 +143,11 @@ object Writer {
         rowTs, s.left, s.right, s.prev,
         s.prev.map(lineageOf).getOrElse(id))
     }
-    import store.spark.implicits._
     // the first version chain written into an unversioned store (e.g.
     // a freshly compacted one) turns the lineage window back on
-    val nowVersioned = store.versioned || rows.exists(_.prev.isDefined)
-    store.localRows match {
-      case Some(existing) =>
-        // mirror-backed store: the frame is a LAZY view over the mirror
-        // — appends never re-encode prior rows (a 20k-write session
-        // would otherwise be quadratic in encoder work, david_2.sh)
-        val all = existing ++ rows
-        (store.copy(primitives = GraphStore.lazyLocalDf(store.spark, all),
-          versioned = nowVersioned, localRows = Some(all)), rows.map(_.id))
-      case None =>
-        // allowMissingColumns: a persisted store carries the id_part
-        // partition column; fresh rows get it null until the next save
-        val appended = store.primitives
-          .unionByName(rows.toDS().toDF(), allowMissingColumns = true)
-        (store.copy(primitives = appended, versioned = nowVersioned),
-          rows.map(_.id))
-    }
+    (store.copy(source = store.source.appended(rows),
+      versioned = store.versioned || rows.exists(_.prev.isDefined)),
+      rows.map(_.id))
   }
 
   /** `guid=G` pessimistic versioning: G must still be the newest of its
@@ -204,26 +156,38 @@ object Writer {
     */
   def versionOf(store: GraphStore, target: Long, spec: Spec,
       opportunistic: Boolean = false): (GraphStore, Long) = {
-    val linRows = store.primitives.filter(col("id") === target)
-      .select("lineage").limit(1).collect()
-    if (linRows.isEmpty) throw WriteError("SEMANTICS", s"not found: cannot read predecessor record $target")
-    val head = store.newestAll
-      .filter(col("lineage") === linRows.head.getLong(0))
-      .select("id").head().getLong(0)
-    if (!opportunistic && head != target)
-      throw WriteError("OUTDATED", s"$target is not newest (head=$head)")
-    val (st, ids) = append(store, Seq(spec.copy(prev = Some(head))))
+    val (st, ids) = append(store,
+      Seq(spec.copy(prev = Some(headFor(store, target, opportunistic)))))
     (st, ids.head)
   }
+
+  /** the lineage head a write naming `g` versions: `g` must exist, and
+    * unless `opportunistic` (`guid~=`) it must still be the head, else
+    * OUTDATED (doc/gr-protocol.txt:531-554; asof.sh golden)
+    */
+  private def headFor(st: GraphStore, g: Long, opportunistic: Boolean): Long = {
+    val head = st.source.lineageHead(g).getOrElse(throw WriteError(
+      "SEMANTICS", s"not found: cannot read predecessor record $g"))
+    if (!opportunistic && head != g)
+      throw WriteError("OUTDATED",
+        "\"" + graft.plan.Cursor.renderGuid(g) + "\" has been versioned")
+    head
+  }
+
+  /** the id a template root versions and whether opportunistically:
+    * `guid=G` (pessimistic), `guid~=G` (the lineage head, whatever it
+    * is now); previous=G is the same request as guid=G (guid2)
+    */
+  private def versionTarget(c: graft.gql.Constraint): Option[(Long, Boolean)] =
+    (c.guid ++ c.previous).collectFirst {
+      case graft.gql.GuidPred(true, serials, lineage) if serials.flatten.nonEmpty =>
+        (serials.flatten.head, lineage)
+    }
 
   /** delete = tombstone version (live=false) */
   def tombstone(store: GraphStore, target: Long): (GraphStore, Long) =
     versionOf(store, target,
       Spec(live = false, datatype = Datatype.Null), opportunistic = true)
-
-  // ------------------------------------------------------------------
-  // upsert machinery
-  // ------------------------------------------------------------------
 
   // ------------------------------------------------------------------
   // reference type bootstrap (physical layout)
@@ -251,17 +215,7 @@ object Writer {
     * carries the reference bootstrap (graphd_type_bootstrap_read)
     */
   private def bootCore(st: GraphStore): Option[(Long, Long, Long)] = {
-    val m: Map[String, Long] = st.currentLocalIter match {
-      case Some(rows) =>
-        val names = Set(Boot.CoreScope, Boot.RootNs, Boot.HasKey)
-        rows.filter(p => p.left.isEmpty && p.name.exists(names))
-          .map(p => p.name.get -> p.id).toMap
-      case None => st.current
-        .filter(col("left").isNull &&
-          col("name").isin(Boot.CoreScope, Boot.RootNs, Boot.HasKey))
-        .select("name", "id").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    val m = st.view.nodesNamed(Seq(Boot.CoreScope, Boot.RootNs, Boot.HasKey))
     for (cs <- m.get(Boot.CoreScope); rn <- m.get(Boot.RootNs);
          hk <- m.get(Boot.HasKey)) yield (cs, rn, hk)
   }
@@ -284,30 +238,12 @@ object Writer {
         scope = Some(cs), name = Some(Boot.Anchor), value = Some("has_key")))
   }
 
-  /** make_node_has_key's search: a live current naming link
-    * (typeguid=HAS_KEY, both endpoints, value case-insensitively
-    * equal) names the node on its right
-    */
-  private def refTypeId(st: GraphStore, hasKey: Long, name: String): Option[Long] =
-    st.currentLocalIter match {
-      case Some(rows) =>
-        // mirror rows are id-ordered, so the first match is the lowest
-        rows.find(p => p.typeguid.contains(hasKey) && p.left.isDefined &&
-            p.right.isDefined && p.value.exists(_.equalsIgnoreCase(name)))
-          .flatMap(_.right)
-      case None => st.current
-        .filter(col("typeguid") === hasKey && col("left").isNotNull &&
-          col("right").isNotNull && lower(col("value")) === name.toLowerCase)
-        .orderBy(col("id"))
-        .select("right").limit(1).collect().headOption.map(_.getLong(0))
-    }
-
   /** write the core type system if absent (restore v1 bootstraps
     * unconditionally — graphd-restore.c:79-87)
     */
   private[graft] def ensureBootstrap(st: GraphStore): GraphStore =
     if (bootCore(st).isDefined) st
-    else append(st, bootstrapSpecs(nextId(st)))._1
+    else append(st, bootstrapSpecs(st.source.nextId))._1
 
   /** resolve-or-mint one type under refBootstrap (upsert path: each
     * mint is its own append)
@@ -317,19 +253,19 @@ object Writer {
     var st = st0
     var core = bootCore(st)
     val existing = core.flatMap { case (_, _, hk) =>
-      names.view.map(n => refTypeId(st, hk, n))
+      names.view.map(n => st.view.refTypeId(hk, n))
         .collectFirst { case Some(id) => id }
     }
     existing match {
       case Some(id) => (st, id)
       case None =>
         if (core.isEmpty) {
-          val (st2, ids) = append(st, bootstrapSpecs(nextId(st)))
+          val (st2, ids) = append(st, bootstrapSpecs(st.source.nextId))
           st = st2
           core = Some((ids(0), ids(1), ids(2)))
         }
         val (cs, rn, hk) = core.get
-        val base = nextId(st)
+        val base = st.source.nextId
         val (st2, ids) = append(st, Seq(
           Spec(scope = Some(cs), datatype = Datatype.Null),
           Spec(left = Some(rn), right = Some(base), typeguid = Some(hk),
@@ -350,94 +286,30 @@ object Writer {
       : (GraphStore, Seq[Long]) = {
     if (refBootstrap) return writeTemplateRef(store, template)
     import graft.gql._
-    // write-side type names resolve against existing type nodes or are
-    // created implicitly (the reference mints type primitives on first
-    // use — test/unit/version1.sh writes new type strings freely)
     var st = store
-    def typeIdOf(names: Seq[String]): Long = {
-      val hit = st.currentLocal match {
-        case Some(rows) => rows.find(p =>
-          p.left.isEmpty && p.name.exists(names.contains)).map(_.id)
-        case None => st.current
-          .filter(col("left").isNull && col("name").isin(names: _*))
-          // lowest id, like the mirror path: an unordered limit picks
-          // whichever row the scan yields first
-          .select("id").orderBy(col("id")).limit(1)
-          .collect().headOption.map(_.getLong(0))
-      }
-      hit.getOrElse {
-        // the minted node carries the type name as BOTH name and value:
-        // the reference's type machinery registers the name in a
-        // value-carrying has_key primitive, and sessions find it by
-        // value (or.sh: write ("foo") then read (value="foo") matches)
-        val (st2, ids) = append(st,
-          Seq(Spec(name = names.headOption, value = names.headOption)))
-        st = st2
-        ids.head
-      }
+    def typeId(names: Seq[String]): Long = {
+      val (st2, id) = typeIdOf(st, names); st = st2; id
     }
     // pre-resolve/create all type nodes (depth-first, same order as
     // spec building) BEFORE computing the batch base id
     def preResolve(c: Constraint): Unit = {
-      c.typeNames.foreach(typeIdOf)
+      c.typeNames.foreach(typeId)
       c.subs.foreach(preResolve)
     }
     preResolve(template)
 
-    val base = nextId(st)
+    val base = st.source.nextId
     val specs = scala.collection.mutable.ArrayBuffer.empty[Spec]
-
-    def firstEq(preds: Seq[StrPred]): Option[String] =
-      preds.collectFirst { case StrPred(OpEq, vs) => vs.flatten.headOption }.flatten
-
-    def linkSerial(c: Constraint, f: String): Option[Long] = {
-      c.linkFields.get(f).foreach(_.foreach { p =>
-        if (p.serials.length > 1)
-          throw WriteError("SEMANTICS",
-            "multiple GUID values are only allowed in read requests")
-      })
-      c.linkFields.get(f).flatMap(_.collectFirst {
-        case GuidPred(true, serials, false) => serials.flatten.headOption
-      }.flatten)
-    }
-
-    def setField(i: Int, f: String, id: Long): Unit = specs(i) = f match {
-      case "left" => specs(i).copy(left = Some(id))
-      case "right" => specs(i).copy(right = Some(id))
-      case "typeguid" => specs(i).copy(typeguid = Some(id))
-      case "scope" => specs(i).copy(scope = Some(id))
-      case other => throw WriteError("SYNTAX", s"bad linkage $other")
-    }
 
     def build(c: Constraint): Int = {
       val idx = specs.length
-      specs += Spec(
-        name = firstEq(c.name),
-        value = firstEq(c.value),
-        // `value=null` is an explicit STRING-typed null (nullvalue.sh)
-        datatype = c.datatype.getOrElse(
-          if (c.value.nonEmpty) graft.model.Datatype.String
-          else graft.model.Datatype.Null),
-        typeguid = c.typeNames.map(typeIdOf).orElse(linkSerial(c, "typeguid")),
-        left = linkSerial(c, "left"),
-        right = linkSerial(c, "right"),
-        scope = linkSerial(c, "scope"),
-        live = c.live != MustBeFalse,
-        archival = c.archival != MustBeFalse, // flags-1/flags-2
-        timestamp = explicitTs(c))
+      specs += specOf(c, c.typeNames.map(typeId))
       c.subs.foreach { sub =>
-        // a linkage-less child of a LINK attaches to the link's free
-        // endpoint (mirrors the planner's defaulting — optional.sh)
-        val linkageEff = sub.effectiveLinkage.orElse(c.effectiveLinkage match {
-          case Some(ChildPointsToParent("right")) => Some(ParentPointsToChild("left"))
-          case Some(ChildPointsToParent("left")) => Some(ParentPointsToChild("right"))
-          case _ => None
-        })
-        linkageEff match {
+        linkOf(c, sub) match {
           case Some(ChildPointsToParent(f)) =>
-            val ci = build(sub); setField(ci, f, base + idx)
+            val ci = build(sub); specs(ci) = withField(specs(ci), f, base + idx)
           case Some(ParentPointsToChild(f)) =>
-            val ci = build(sub); setField(idx, f, base + ci)
+            val ci = build(sub); specs(idx) = withField(specs(idx), f, base + ci)
           case None => build(sub)
         }
       }
@@ -446,27 +318,10 @@ object Writer {
 
     build(template)
 
-    // `write (guid~=G ...)`: the root becomes a new version of G's
-    // lineage head (opportunistic). `write (guid=G ...)` is the
-    // PESSIMISTIC form: G itself must still be the head, else error
-    // OUTDATED (doc/gr-protocol.txt:531-554; asof.sh golden).
-    // previous=G is the same versioning request as guid=G (guid2):
-    // pessimistic on =, sliding to the lineage head on ~=
-    (template.guid ++ template.previous).collectFirst {
-      case graft.gql.GuidPred(true, serials, lineage)
-          if serials.flatten.nonEmpty =>
-        (serials.flatten.head, lineage)
-    }.foreach { case (g, opportunistic) =>
-      val linRows = st.primitives.filter(col("id") === g)
-        .select("lineage").limit(1).collect()
-      if (linRows.isEmpty) throw WriteError("SEMANTICS", s"not found: cannot read predecessor record $g")
-      val head = st.newestAll
-        .filter(col("lineage") === linRows.head.getLong(0))
-        .select("id").head().getLong(0)
-      if (!opportunistic && head != g)
-        throw WriteError("OUTDATED",
-          "\"" + graft.plan.Cursor.renderGuid(g) + "\" has been versioned")
-      specs(0) = specs(0).copy(prev = Some(head))
+    // `write (guid~=G ...)`/`write (guid=G ...)`: the root becomes a
+    // new version of G's lineage head
+    versionTarget(template).foreach { case (g, opportunistic) =>
+      specs(0) = specs(0).copy(prev = Some(headFor(st, g, opportunistic)))
     }
 
     append(st, specs.toSeq)
@@ -488,26 +343,12 @@ object Writer {
     val typeId = scala.collection.mutable.Map.empty[String, Long]
     var core = bootCore(st)
     core.foreach { case (_, _, hk) =>
-      wanted.foreach(n => refTypeId(st, hk, n).foreach(typeId(n) = _))
+      wanted.foreach(n => st.view.refTypeId(hk, n).foreach(typeId(n) = _))
     }
 
     val specs = scala.collection.mutable.ArrayBuffer.empty[Spec]
-    val base = nextId(st)
+    val base = st.source.nextId
     val idOf = new java.util.IdentityHashMap[Constraint, java.lang.Long]()
-
-    def firstEq(preds: Seq[StrPred]): Option[String] =
-      preds.collectFirst { case StrPred(OpEq, vs) => vs.flatten.headOption }.flatten
-
-    def linkSerial(c: Constraint, f: String): Option[Long] = {
-      c.linkFields.get(f).foreach(_.foreach { p =>
-        if (p.serials.length > 1)
-          throw WriteError("SEMANTICS",
-            "multiple GUID values are only allowed in read requests")
-      })
-      c.linkFields.get(f).flatMap(_.collectFirst {
-        case GuidPred(true, serials, false) => serials.flatten.headOption
-      }.flatten)
-    }
 
     def mintType(t: String): Unit = {
       // first typed CONSTRAINT VISIT creates the core type system —
@@ -528,21 +369,6 @@ object Writer {
       typeId(t) = nodeId
     }
 
-    def linkOf(parent: Constraint, sub: Constraint): Option[Linkage] =
-      sub.effectiveLinkage.orElse(parent.effectiveLinkage match {
-        case Some(ChildPointsToParent("right")) => Some(ParentPointsToChild("left"))
-        case Some(ChildPointsToParent("left")) => Some(ParentPointsToChild("right"))
-        case _ => None
-      })
-
-    def withField(s: Spec, f: String, id: Long): Spec = f match {
-      case "left" => s.copy(left = Some(id))
-      case "right" => s.copy(right = Some(id))
-      case "typeguid" => s.copy(typeguid = Some(id))
-      case "scope" => s.copy(scope = Some(id))
-      case other => throw WriteError("SYNTAX", s"bad linkage $other")
-    }
-
     def alloc(c: Constraint, parentField: Option[(String, Long)]): Long = {
       val names = c.typeNames.getOrElse(Nil)
       // an already-known name wins; otherwise the head name is minted
@@ -551,20 +377,7 @@ object Writer {
       val (pointed, into) = c.subs.partition(sub =>
         linkOf(c, sub).exists(_.isInstanceOf[ParentPointsToChild]))
       val pointedId = pointed.map(sub => sub -> alloc(sub, None))
-      var spec = Spec(
-        name = firstEq(c.name),
-        value = firstEq(c.value),
-        datatype = c.datatype.getOrElse(
-          if (c.value.nonEmpty) graft.model.Datatype.String
-          else graft.model.Datatype.Null),
-        typeguid = Option(pick).map(typeId)
-          .orElse(linkSerial(c, "typeguid")),
-        left = linkSerial(c, "left"),
-        right = linkSerial(c, "right"),
-        scope = linkSerial(c, "scope"),
-        live = c.live != MustBeFalse,
-        archival = c.archival != MustBeFalse,
-        timestamp = explicitTs(c))
+      var spec = specOf(c, Option(pick).map(typeId))
       parentField.foreach { case (f, pid) => spec = withField(spec, f, pid) }
       pointedId.foreach { case (sub, cid) =>
         val f = linkOf(c, sub).get.asInstanceOf[ParentPointsToChild].field
@@ -586,20 +399,8 @@ object Writer {
 
     // guid=G / guid~=G versioning of the root (same as the legacy path)
     val rootIdx = (idOf.get(template).longValue - base).toInt
-    (template.guid ++ template.previous).collectFirst {
-      case GuidPred(true, serials, lineage) if serials.flatten.nonEmpty =>
-        (serials.flatten.head, lineage)
-    }.foreach { case (g, opportunistic) =>
-      val linRows = st.primitives.filter(col("id") === g)
-        .select("lineage").limit(1).collect()
-      if (linRows.isEmpty) throw WriteError("SEMANTICS", s"not found: cannot read predecessor record $g")
-      val head = st.newestAll
-        .filter(col("lineage") === linRows.head.getLong(0))
-        .select("id").head().getLong(0)
-      if (!opportunistic && head != g)
-        throw WriteError("OUTDATED",
-          "\"" + graft.plan.Cursor.renderGuid(g) + "\" has been versioned")
-      specs(rootIdx) = specs(rootIdx).copy(prev = Some(head))
+    versionTarget(template).foreach { case (g, opportunistic) =>
+      specs(rootIdx) = specs(rootIdx).copy(prev = Some(headFor(st, g, opportunistic)))
     }
 
     val (st2, _) = append(st, specs.toSeq)
@@ -629,6 +430,82 @@ object Writer {
     (c.timestampMin, c.timestampMax) match {
       case (Some((lo, true)), Some((hi, true))) if lo == hi => Some(lo)
       case _ => None
+    }
+
+  private def firstEq(preds: Seq[graft.gql.StrPred]): Option[String] =
+    preds.collectFirst {
+      case graft.gql.StrPred(graft.gql.OpEq, vs) => vs.flatten.headOption
+    }.flatten
+
+  /** the `f=G` id a template constraint pins */
+  private def linkSerial(c: graft.gql.Constraint, f: String): Option[Long] = {
+    c.linkFields.get(f).foreach(_.foreach { p =>
+      if (p.serials.length > 1)
+        throw WriteError("SEMANTICS",
+          "multiple GUID values are only allowed in read requests")
+    })
+    c.linkFields.get(f).flatMap(_.collectFirst {
+      case graft.gql.GuidPred(true, serials, false) => serials.flatten.headOption
+    }.flatten)
+  }
+
+  private def withField(s: Spec, f: String, id: Long): Spec = f match {
+    case "left" => s.copy(left = Some(id))
+    case "right" => s.copy(right = Some(id))
+    case "typeguid" => s.copy(typeguid = Some(id))
+    case "scope" => s.copy(scope = Some(id))
+    case other => throw WriteError("SYNTAX", s"bad linkage $other")
+  }
+
+  /** a child's linkage, where a linkage-less child of a LINK attaches
+    * to the link's free endpoint (the planner's defaulting — optional.sh)
+    */
+  private def linkOf(parent: graft.gql.Constraint,
+      sub: graft.gql.Constraint): Option[graft.gql.Linkage] = {
+    import graft.gql.{ChildPointsToParent, ParentPointsToChild}
+    sub.effectiveLinkage.orElse(parent.effectiveLinkage match {
+      case Some(ChildPointsToParent("right")) => Some(ParentPointsToChild("left"))
+      case Some(ChildPointsToParent("left")) => Some(ParentPointsToChild("right"))
+      case _ => None
+    })
+  }
+
+  /** the primitive a template constraint writes, typed `typeguid` or
+    * by its own `typeguid=G`
+    */
+  private def specOf(c: graft.gql.Constraint, typeguid: Option[Long]): Spec =
+    Spec(
+      name = firstEq(c.name),
+      value = firstEq(c.value),
+      // `value=null` is an explicit STRING-typed null (nullvalue.sh)
+      datatype = c.datatype.getOrElse(
+        if (c.value.nonEmpty) Datatype.String else Datatype.Null),
+      typeguid = typeguid.orElse(linkSerial(c, "typeguid")),
+      left = linkSerial(c, "left"),
+      right = linkSerial(c, "right"),
+      scope = linkSerial(c, "scope"),
+      live = c.live != graft.gql.MustBeFalse,
+      archival = c.archival != graft.gql.MustBeFalse, // flags-1/flags-2
+      comparator = c.comparator,
+      timestamp = explicitTs(c))
+
+  /** Resolve-or-mint a template's type: the lowest-id node named any of
+    * `names`, else a new one (the reference mints type primitives on
+    * first use — test/unit/version1.sh writes new type strings freely).
+    * Returns the store after any mint.
+    */
+  private def typeIdOf(st: GraphStore, names: Seq[String]): (GraphStore, Long) =
+    if (refBootstrap) refTypeIdOf(st, names)
+    else st.view.nodesNamed(names).values.minOption match {
+      case Some(id) => (st, id)
+      case None =>
+        // the minted node carries the type name as BOTH name and value:
+        // the reference's type machinery registers the name in a
+        // value-carrying has_key primitive, and sessions find it by
+        // value (or.sh: write ("foo") then read (value="foo") matches)
+        val (st2, ids) = append(st,
+          Seq(Spec(name = names.headOption, value = names.headOption)))
+        (st2, ids.head)
     }
 
   /** Write-side template validation, mirroring the reference's
@@ -710,15 +587,7 @@ object Writer {
     collect(root)
     if (refs.nonEmpty) {
       val wanted = refs.map(_._2).distinct.toSeq
-      val present: Set[Long] = store.localRows match {
-        case Some(rows) => // mirror probe: no Spark job on the write path
-          val want = wanted.toSet
-          rows.iterator.map(_.id).filter(want).toSet
-        case None => store.primitives
-          .filter(org.apache.spark.sql.functions.col("id")
-            .isin(wanted.map(Long.box): _*))
-          .select("id").collect().map(_.getLong(0)).toSet
-      }
+      val present = store.source.present(wanted)
       refs.find(r => !present(r._2)).foreach { case (f, s) =>
         throw WriteError("SEMANTICS", s"$f=$s: not found")
       }
@@ -770,83 +639,13 @@ object Writer {
       : (GraphStore, Seq[Long]) = {
     import graft.gql._
     var st = st0
-
-    def typeIdOf(names: Seq[String]): Long = {
-      if (refBootstrap) {
-        val (st2, id) = refTypeIdOf(st, names)
-        st = st2
-        return id
-      }
-      val hit = st.currentLocal match {
-        case Some(rows) => rows.find(p =>
-          p.left.isEmpty && p.name.exists(names.contains)).map(_.id)
-        case None => st.current
-          .filter(col("left").isNull && col("name").isin(names: _*))
-          // lowest id, like the mirror path: an unordered limit picks
-          // whichever row the scan yields first
-          .select("id").orderBy(col("id")).limit(1)
-          .collect().headOption.map(_.getLong(0))
-      }
-      hit.getOrElse {
-        // the minted node carries the type name as BOTH name and value:
-        // the reference's type machinery registers the name in a
-        // value-carrying has_key primitive, and sessions find it by
-        // value (or.sh: write ("foo") then read (value="foo") matches)
-        val (st2, ids) = append(st,
-          Seq(Spec(name = names.headOption, value = names.headOption)))
-        st = st2
-        ids.head
-      }
+    def typeId(names: Seq[String]): Long = {
+      val (st2, id) = typeIdOf(st, names); st = st2; id
     }
-
-    def firstEq(preds: Seq[StrPred]): Option[String] =
-      preds.collectFirst { case StrPred(OpEq, vs) => vs.flatten.headOption }.flatten
-
-    def linkSerial(c: Constraint, f: String): Option[Long] = {
-      c.linkFields.get(f).foreach(_.foreach { p =>
-        if (p.serials.length > 1)
-          throw WriteError("SEMANTICS",
-            "multiple GUID values are only allowed in read requests")
-      })
-      c.linkFields.get(f).flatMap(_.collectFirst {
-        case GuidPred(true, serials, false) => serials.flatten.headOption
-      }.flatten)
-    }
-
-    def specOf(c: Constraint): Spec = Spec(
-      name = firstEq(c.name),
-      value = firstEq(c.value),
-      datatype = c.datatype.getOrElse(
-        if (c.value.nonEmpty) graft.model.Datatype.String
-        else graft.model.Datatype.Null),
-      typeguid = c.typeNames.map(typeIdOf).orElse(linkSerial(c, "typeguid")),
-      left = linkSerial(c, "left"),
-      right = linkSerial(c, "right"),
-      scope = linkSerial(c, "scope"),
-      live = c.live != MustBeFalse,
-      archival = c.archival != MustBeFalse,
-      comparator = c.comparator,
-      timestamp = explicitTs(c))
-
-    def withLinkage(s: Spec, f: String, id: Long): Spec = f match {
-      case "left" => s.copy(left = Some(id))
-      case "right" => s.copy(right = Some(id))
-      case "typeguid" => s.copy(typeguid = Some(id))
-      case "scope" => s.copy(scope = Some(id))
-      case other => throw WriteError("SYNTAX", s"bad linkage $other")
-    }
+    def typedSpec(c: Constraint): Spec = specOf(c, c.typeNames.map(typeId))
 
     def matchOne(s: Spec, fields: Seq[String]) =
-      matchRows(st, s, fields, limit = 2).headOption
-
-    // linkage with the free-endpoint defaulting a bare child of a
-    // link gets (same rule as writeTemplate/ReadPlanner)
-    def linkOf(parent: Constraint, sub: Constraint): Option[Linkage] =
-      sub.effectiveLinkage.orElse(parent.effectiveLinkage match {
-        case Some(ChildPointsToParent("right")) => Some(ParentPointsToChild("left"))
-        case Some(ChildPointsToParent("left")) => Some(ParentPointsToChild("right"))
-        case _ => None
-      })
+      st.view.matchRows(s, fields, limit = 2).headOption
 
     /** Resolve one constraint subtree recursively. The subtrees this
       * constraint points at resolve first (their ids wire into its
@@ -868,24 +667,12 @@ object Writer {
           sub.uniqueFields.exists(_.contains(f))
         case _ => false
       }
-    def headOf(g: Long): Long = st.localRows match {
-      case Some(rows) =>
-        val lin = rows.find(_.id == g).getOrElse(throw WriteError(
-          "SEMANTICS", s"not found: cannot read predecessor record $g")).lineage
-        rows.filter(_.lineage == lin).map(_.id).max
-      case None =>
-        val linRows = st.primitives.filter(col("id") === g)
-          .select("lineage").limit(1).collect()
-        if (linRows.isEmpty) throw WriteError(
-          "SEMANTICS", s"not found: cannot read predecessor record $g")
-        st.newestAll.filter(col("lineage") === linRows.head.getLong(0))
-          .select("id").head().getLong(0)
-    }
     def clusterDup(c: Constraint, keepLinkage: Boolean): Constraint = {
       val unq = c.uniqueFields.getOrElse(Nil).toSet
       val excl = c.guid.collectFirst {
         case GuidPred(true, serials, _) => serials.flatten.headOption
-      }.flatten.map(g => GuidPred(include = false, Seq(Some(headOf(g)))))
+      }.flatten.map(g => GuidPred(include = false,
+        Seq(Some(headFor(st, g, opportunistic = true)))))
       Constraint(
         linkage = if (keepLinkage) c.linkage else None,
         guid = excl.toSeq,
@@ -930,15 +717,11 @@ object Writer {
           serials.flatten.headOption.map(g => (g, lineage))
       }.flatten match {
         case Some((g, opportunistic)) =>
-          val head = headOf(g)
-          if (!opportunistic && head != g)
-            throw WriteError("OUTDATED",
-          "\"" + graft.plan.Cursor.renderGuid(g) + "\" has been versioned")
-          spec0.copy(prev = Some(head))
+          spec0.copy(prev = Some(headFor(st, g, opportunistic)))
         case None => spec0
       }
 
-    def rowOf(id: Long): Option[Row] = currentRowOf(st, id)
+    def rowOf(id: Long): Option[Row] = st.view.currentRowOf(id)
 
     /** anchor resolution: the anchor READ includes the whole subtree
       * below the anchor (gr-protocol 6.1.12) — `(anchor (<-right
@@ -976,7 +759,7 @@ object Writer {
     def keyClusterMatches(c: Constraint, bid: Long): Boolean = {
       val keyFs = c.keyFields.getOrElse(Nil)
       if (keyFs.isEmpty) return false
-      val s = specOf(c)
+      val s = typedSpec(c)
       val kids = c.subs.flatMap(sub => linkOf(c, sub) match {
         case Some(ParentPointsToChild(f))
             if keyFs.contains(f) && sub.keyFields.isDefined => Some((f, sub))
@@ -987,7 +770,7 @@ object Writer {
             if keyFs.contains(f) && !sub.keyFields.isDefined => Some(f)
         case _ => None
       }).toSet
-      val ok = matchIsId(st, s, keyFs,
+      val ok = st.view.matchIsId(s, keyFs,
         kids.map(_._1).toSet ++ unkeyedEndpoints, bid)
       ok && rowOf(bid).exists(r => kids.forall { case (f, sub) =>
         !r.isNullAt(r.fieldIndex(f)) &&
@@ -1005,8 +788,8 @@ object Writer {
       if (c.uniqueFields.isDefined && !parentC.exists(p =>
           p.uniqueFields.isDefined && connectionInUnique(p, c)))
         checkUniqueCluster(c, parentLink)
-      var spec = specOf(c)
-      parentLink.foreach { case (f, pid) => spec = withLinkage(spec, f, pid) }
+      var spec = typedSpec(c)
+      parentLink.foreach { case (f, pid) => spec = withField(spec, f, pid) }
       val pointedIds = scala.collection.mutable.Map.empty[Int, (Long, Seq[Long])]
       // members of a UNIQUE cluster never reuse existing primitives —
       // the cluster precheck said the structure is absent, so every
@@ -1046,7 +829,7 @@ object Writer {
                 !(inCluster || clusterKeys))) {
               val r = resolve(sub, None, inCluster || clusterKeys, Some(c),
                 forceNew = forceNew)
-              spec = withLinkage(spec, f, r._1)
+              spec = withField(spec, f, r._1)
               pointedIds(i) = r
             } else deferred += ((i, f, sub))
           case _ => ()
@@ -1057,8 +840,8 @@ object Writer {
       // whole-cluster READ the reference's keyed annotation runs)
       def pointedMatches(sub: Constraint, bid: Long): Boolean =
         rowOf(bid).exists { r =>
-          val s = specOf(sub)
-          matchIsId(st, s, anchorMatchFields(s), Set.empty, bid) &&
+          val s = typedSpec(sub)
+          st.view.matchIsId(s, anchorMatchFields(s), Set.empty, bid) &&
             sub.subs.forall(ss => linkOf(sub, ss) match {
               case Some(ParentPointsToChild(f2)) =>
                 !r.isNullAt(r.fieldIndex(f2)) &&
@@ -1081,7 +864,7 @@ object Writer {
             // joint all-or-nothing read (keyburn2 rounds 1.2 and 5);
             // key=() has no identity: always insert (keyburn6)
             if (c.keyFields.get.isEmpty) None
-            else findMatchPaged(st, spec, c.keyFields.get,
+            else st.view.findMatchPaged(spec, c.keyFields.get,
                 presentOnly = ((deferredFields ++ clusterKids.map(_._2) ++
                   parentLink.map(_._1)) & c.keyFields.get.toSet))(
                 r => clusterKids.forall { case (_, f, sub) =>
@@ -1092,7 +875,7 @@ object Writer {
           else if (inCluster)
             // unkeyed pointed reuse requires the WHOLE requested form
             // (6.1.10.2): every deferred pointed subtree must match
-            findMatchPaged(st, spec, anchorMatchFields(spec))(
+            st.view.findMatchPaged(spec, anchorMatchFields(spec))(
               r => deferred.forall { case (_, f, sub) =>
                 !r.isNullAt(r.fieldIndex(f)) &&
                   pointedMatches(sub, r.getAs[Long](f))
@@ -1111,7 +894,7 @@ object Writer {
           case None =>
             resolve(sub, None, inCluster = false, Some(c), forceNew = true)
         }
-        spec = withLinkage(spec, f, r._1)
+        spec = withField(spec, f, r._1)
         pointedIds(i) = r
       }
       // structural binding of deferred pointed children: bind when the
@@ -1126,7 +909,7 @@ object Writer {
           case None =>
             resolve(sub, None, inCluster = false, Some(c))
         }
-        spec = withLinkage(spec, f, r._1)
+        spec = withField(spec, f, r._1)
         pointedIds(i) = r
       }
       val selfId: Long =
@@ -1221,7 +1004,7 @@ object Writer {
       val hint = template.subs.flatMap { sub =>
         linkOf(template, sub) match {
           case Some(ChildPointsToParent(f)) if hasKeys(sub) =>
-            val spec = specOf(sub)
+            val spec = typedSpec(sub)
             val fields =
               if (sub.anchorFlag) anchorMatchFields(spec)
               else sub.keyFields.getOrElse(sub.uniqueFields.getOrElse(Nil))
@@ -1236,7 +1019,7 @@ object Writer {
         case Some(rootId) =>
           // root exists: resolve the whole tree as a keyed cluster
           // around it
-          var spec = specOf(template)
+          var spec = typedSpec(template)
           val pointedIds = scala.collection.mutable.Map.empty[Int, Seq[Long]]
           template.subs.zipWithIndex.foreach { case (sub, i) =>
             linkOf(template, sub) match {
@@ -1266,15 +1049,8 @@ object Writer {
     // versioned target fails even with resolvable anchor children),
     // and the matched head versions the diff / reuses when identical
     val rootVer: Option[(Long, Boolean)] =
-      (template.guid ++ template.previous).collectFirst {
-        case GuidPred(true, serials, lineage) if serials.flatten.nonEmpty =>
-          (serials.flatten.head, lineage)
-      }.map { case (g, opportunistic) =>
-        val head = headOf(g)
-        if (!opportunistic && head != g)
-          throw WriteError("OUTDATED",
-            "\"" + graft.plan.Cursor.renderGuid(g) + "\" has been versioned")
-        (head, opportunistic)
+      versionTarget(template).map { case (g, opportunistic) =>
+        (headFor(st, g, opportunistic), opportunistic)
       }
     val (_, allIds) = resolve(template, None, inCluster = rootVer.isDefined,
       versionTarget = rootVer)
@@ -1282,162 +1058,17 @@ object Writer {
   }
 
   /** all populated fields — the anchor match set */
-  /** mirror row → DataFrame-shaped Row (Primitive.schema order), so the
-    * per-request write path can answer its point reads driver-side
-    */
-  private def primRow(p: Primitive): Row =
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array[Any](p.id, p.typeguid.map(Long.box).orNull, p.name.orNull,
-        p.datatype, p.value.orNull, p.scope.map(Long.box).orNull, p.live,
-        p.archival, p.txstart, p.timestamp, p.left.map(Long.box).orNull,
-        p.right.map(Long.box).orNull, p.prev.map(Long.box).orNull, p.lineage),
-      graft.model.Primitive.schema)
-
-  /** mirror-side rendition of matchExisting's per-field predicates —
-    * MUST stay in lockstep with it (same comparator normalization via
-    * GraphdText.sortKey, same presence semantics)
-    */
-  private def localMatches(p: Primitive, s: Spec, fields: Seq[String],
-      presentOnly: Set[String]): Boolean = {
-    import graft.functions.GraphdText
-    def normEq(a: Option[String], b: Option[String]): Boolean = (a, b) match {
-      case (Some(x), Some(y)) =>
-        GraphdText.sortKey(s.comparator, x) == GraphdText.sortKey(s.comparator, y)
-      case (None, None) => true
-      case _ => false
-    }
-    def optEq(f: String, a: Option[Long], b: Option[Long]): Boolean =
-      if (presentOnly(f)) a.isDefined else a == b
-    fields.forall {
-      case "name" => normEq(p.name, s.name)
-      case "value" => normEq(p.value, s.value)
-      case "typeguid" => optEq("typeguid", p.typeguid, s.typeguid)
-      case "left" => optEq("left", p.left, s.left)
-      case "right" => optEq("right", p.right, s.right)
-      case "scope" => optEq("scope", p.scope, s.scope)
-      case "datatype" => p.datatype == s.datatype
-      case f => throw WriteError("SYNTAX", s"bad unique/key field $f")
-    }
-  }
-
-  /** first `limit` current-view matches in ascending id order. A
-    * mirror-backed store (session replay) answers without a Spark job —
-    * the role the reference's in-process hmap/gmap lookups play for its
-    * single-writer upsert annotations; bulk stores keep the plan path.
-    */
-  private[graft] def matchRows(store: GraphStore, s: Spec,
-      fields: Seq[String], presentOnly: Set[String] = Set.empty,
-      limit: Int = 2): Seq[Row] =
-    store.currentLocalIter match {
-      case Some(it) =>
-        it.filter(localMatches(_, s, fields, presentOnly))
-          .take(limit).map(primRow).toSeq
-      case None => matchExisting(store, s, fields, presentOnly)
-        .orderBy(col("id").asc).limit(limit).collect().toSeq
-    }
-
-  /** First current-view match (ascending id) that ALSO satisfies
-    * `pred` — pages through the candidate stream instead of truncating
-    * at a fixed limit: a key-equal candidate set wider than any cap
-    * (presence-only keys over a hot name) must still find the true
-    * cluster match, or the writer mints a duplicate cluster.
-    */
-  private[graft] def findMatchPaged(store: GraphStore, s: Spec,
-      fields: Seq[String], presentOnly: Set[String] = Set.empty)(
-      pred: Row => Boolean): Option[Row] =
-    store.currentLocalIter match {
-      case Some(it) =>
-        it.filter(localMatches(_, s, fields, presentOnly))
-          .map(primRow).find(pred)
-      case None =>
-        val page = 64
-        var after = -1L
-        var out: Option[Row] = None
-        var done = false
-        while (!done) {
-          val rows = matchExisting(store, s, fields, presentOnly)
-            .filter(col("id") > after)
-            .orderBy(col("id").asc).limit(page).collect()
-          out = rows.find(pred)
-          done = out.isDefined || rows.length < page
-          if (!done) after = rows.last.getLong(0)
-        }
-        out
-    }
-
-  /** does the current primitive `bid` match the spec on `fields`? */
-  private[graft] def matchIsId(store: GraphStore, s: Spec,
-      fields: Seq[String], presentOnly: Set[String], bid: Long): Boolean =
-    store.currentLocalIter match {
-      case Some(it) =>
-        it.exists(p => p.id == bid && localMatches(p, s, fields, presentOnly))
-      case None => matchExisting(store, s, fields, presentOnly)
-        .filter(col("id") === bid).limit(1).count() > 0
-    }
-
-  /** the current-view row with this id, if any */
-  private[graft] def currentRowOf(store: GraphStore, id: Long): Option[Row] =
-    store.currentLocalIter match {
-      case Some(it) => it.find(_.id == id).map(primRow)
-      case None =>
-        store.current.filter(col("id") === id).limit(1).collect().headOption
-    }
-
   private def anchorMatchFields(s: Spec): Seq[String] =
     Seq("name" -> s.name.isDefined, "value" -> s.value.isDefined,
       "typeguid" -> s.typeguid.isDefined, "left" -> s.left.isDefined,
       "right" -> s.right.isDefined).collect { case (f, true) => f }
-
-  /** current-view match for a spec on the given fields. String fields
-    * compare under the default comparator's normalization (whitespace
-    * collapse, numeric) — `key=(value)` on "A   B" matches an existing
-    * "A B" (test/unit/spacematch golden).
-    */
-  private def matchExisting(store: GraphStore, s: Spec,
-      fields: Seq[String],
-      presentOnly: Set[String] = Set.empty): DataFrame = {
-    import graft.functions.GraphdFunctions.sort_key
-    var df = store.current
-    def eqOpt[T](c: String, v: Option[T]): Unit = {
-      // a key endpoint whose target is an unkeyed cluster child
-      // matches on PRESENCE: the link must exist, its target is state
-      // to be brought about (keyburn2 1.2: key=(name right) matches
-      // old Mike whose right points at Elke, then versions)
-      if (presentOnly(c)) { df = df.filter(col(c).isNotNull); return }
-      df = v match {
-        case Some(x) => df.filter(col(c) === x)
-        case None => df.filter(col(c).isNull)
-      }
-    }
-    // string identity honors the template's comparator: the default
-    // normalizes (spacematch golden), octet is byte-exact (octet.sh:
-    // unique=value comparator="octet" admits "Foo" next to "foo")
-    def eqStr(c: String, v: Option[String]): Unit = {
-      df = v match {
-        case Some(x) =>
-          df.filter(sort_key(col(c), s.comparator) === sort_key(lit(x), s.comparator))
-        case None => df.filter(col(c).isNull)
-      }
-    }
-    fields.foreach {
-      case "name" => eqStr("name", s.name)
-      case "value" => eqStr("value", s.value)
-      case "typeguid" => eqOpt("typeguid", s.typeguid)
-      case "left" => eqOpt("left", s.left)
-      case "right" => eqOpt("right", s.right)
-      case "scope" => eqOpt("scope", s.scope)
-      case "datatype" => df = df.filter(col("datatype") === s.datatype)
-      case f => throw WriteError("SYNTAX", s"bad unique/key field $f")
-    }
-    df
-  }
 
   /** `unique=(fields)`: insert; EXISTS error if a current primitive
     * already matches on those fields.
     */
   def writeUnique(store: GraphStore, spec: Spec, fields: Seq[String])
       : (GraphStore, Long) = {
-    if (matchRows(store, spec, fields, limit = 1).nonEmpty)
+    if (store.view.matchRows(spec, fields, limit = 1).nonEmpty)
       throw WriteError("EXISTS", s"unique cluster already present")
     val (st, ids) = append(store, Seq(spec))
     (st, ids.head)
@@ -1459,7 +1090,7 @@ object Writer {
     // multiple key-equal candidates: the reference's embedded key-read
     // produces ids in index order, so the LOWEST id wins (spacematch
     // golden: two normalized-equal values, the older one is reused)
-    val m = matchRows(store, spec, fields, limit = 1)
+    val m = store.view.matchRows(spec, fields, limit = 1)
     if (m.isEmpty) {
       val (st, ids) = append(store, Seq(spec))
       (st, ids.head, "inserted")
@@ -1502,7 +1133,7 @@ object Writer {
     * id is reused (no write happens).
     */
   def anchor(store: GraphStore, spec: Spec, fields: Seq[String]): Long = {
-    val m = matchRows(store, spec, fields, limit = 2)
+    val m = store.view.matchRows(spec, fields, limit = 2)
     // zero AND ambiguous matches both answer EMPTY (anchor.sh golden:
     // id="toomany" gets `error EMPTY "anchor constraint not found"`)
     if (m.length != 1) throw WriteError("EMPTY", "anchor constraint not found")

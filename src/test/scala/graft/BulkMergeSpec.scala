@@ -247,7 +247,7 @@ class BulkMergeSpec extends AnyFunSuite {
 
   test("ids are dense from nextId; lineage roots correct") {
     val st0 = baseStore()
-    val base = Writer.nextId(st0)
+    val base = st0.source.nextId
     val r = BulkMerge.mergeKeyed(st0,
       batchDf(Seq("n1" -> "a", "n2" -> "b", "doc:1" -> "changed")), Seq("name"))
     val ids = r.store.primitives.filter(col("id") >= base)

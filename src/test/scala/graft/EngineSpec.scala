@@ -20,6 +20,26 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * listener after the listener bus has drained
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Golden-style engine tests mirroring the reference's unit corpus

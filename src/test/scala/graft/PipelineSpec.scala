@@ -986,6 +986,11 @@ class PipelineSpec extends AnyFunSuite {
     val out2 = Dedup.incrementalNew(batch, history, "doc_id", "text",
       expectedItems = 1L, fpp = 0.5).collect().map(_.getLong(0)).toSet
     assert(out2 == Set(11L, 12L))
+    // a history whose texts are all null holds no fingerprint: every
+    // batch row is new
+    val blank = Seq((1L, null: String)).toDF("doc_id", "text")
+    assert(Dedup.incrementalNew(batch, blank, "doc_id", "text")
+      .collect().map(_.getLong(0)).toSet == Set(10L, 11L, 12L, 13L))
   }
 
   test("incremental dedup: same-path history rewrite invalidates the bloom memo") {

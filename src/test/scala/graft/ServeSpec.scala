@@ -17,19 +17,21 @@ import graft.store.GraphStore
   *
   * `ReadPlanner.plan` itself answers servable reads on a mirror-backed
   * store from the store's snapshot, so the Catalyst side always plans
-  * on the store without its mirror, and every query also runs through
-  * the routed `ReadPlanner.plan`, held to the same Catalyst answer.
+  * on the same rows as a distributed frame, and every query also runs
+  * through the routed `ReadPlanner.plan`, held to the same Catalyst
+  * answer.
   */
 class ServeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** a mirror-backed store, its snapshot, and the same rows without
-    * the mirror (always the Catalyst plan)
+  /** a mirror-backed store, its snapshot, and the same rows as a
+    * distributed frame (always the Catalyst plan)
     */
   final class Fixture(prims: Seq[Primitive]) {
     lazy val store: GraphStore =
       GraphStore.fromSeq(spark, prims).copy(versioned = false)
-    lazy val catalyst: GraphStore = store.copy(localRows = None)
+    lazy val catalyst: GraphStore =
+      GraphStore.fromDf(spark, store.primitives, store.versioned)
     lazy val ix: PointServer.Index = PointServer.build(store)
   }
 
@@ -115,26 +117,6 @@ class ServeSpec extends AnyFunSuite {
   private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.logical
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  /** Spark jobs started while `body` runs, counted after draining the
-    * listener bus on both sides
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def norm(v: Any): Any = v match {
     case b: Byte => b.toLong
@@ -350,12 +332,12 @@ class ServeSpec extends AnyFunSuite {
 
   test("mirror-backed session reads run no Spark job") {
     sessionReads.foreach { q =>
-      val (rows, jobs) = jobsDuring(ReadPlanner.plan(session.store, q).collect())
+      val (rows, jobs) = TestSpark.jobsDuring(ReadPlanner.plan(session.store, q).collect())
       assert(jobs == 0, q)
       assert(rows.toSeq.map(_.toSeq) ==
         ReadPlanner.plan(session.catalyst, q).collect().toSeq.map(_.toSeq), q)
     }
-    val (_, catalystJobs) = jobsDuring(
+    val (_, catalystJobs) = TestSpark.jobsDuring(
       ReadPlanner.plan(session.catalyst, sessionReads(1)).collect())
     assert(catalystJobs > 0, "the counter sees the Catalyst plan's jobs")
   }
@@ -363,10 +345,11 @@ class ServeSpec extends AnyFunSuite {
   test("PointServer.build reuses a mirror-backed store's snapshot: no Spark job") {
     val st = GraphStore.fromSeq(spark,
       Seq(node(1, name = Some("person")), node(2, typeguid = Some(1L), value = Some("x"))))
-    val (built, jobs) = jobsDuring(PointServer.build(st))
+    val (built, jobs) = TestSpark.jobsDuring(PointServer.build(st))
     assert(jobs == 0)
-    assert(built eq st.pointIndex.get)
-    val (_, collectJobs) = jobsDuring(PointServer.build(st.copy(localRows = None)))
+    assert(built eq st.view.pointIndex.get)
+    val (_, collectJobs) = TestSpark.jobsDuring(PointServer.build(
+      GraphStore.fromDf(spark, st.primitives, st.versioned)))
     assert(collectJobs > 0)
   }
 
@@ -400,7 +383,8 @@ class ServeSpec extends AnyFunSuite {
         assert(isLocal(routed), q)
         assert(routed.collect().isEmpty, q)
         assert(typesOf(routed) ==
-          typesOf(ReadPlanner.plan(empty.copy(localRows = None), q)), q)
+          typesOf(ReadPlanner.plan(
+            GraphStore.fromDf(spark, empty.primitives, empty.versioned), q)), q)
       }
   }
 

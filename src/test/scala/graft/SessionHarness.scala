@@ -831,7 +831,10 @@ object SessionHarness {
     // a position-bearing state allocates the next id.
     val freezeRes = new RefFreeze.Resources
     def livePrims: Vector[graft.model.Primitive] =
-      store.currentLocal.getOrElse(Vector.empty)
+      store.view.source match {
+        case m: graft.store.Source.Mirror => m.rows
+        case _ => Vector.empty
+      }
     // [first posting, last posting + 1) in reference serial space —
     // the idarray clamp every index iterator freezes with
     def serialSpan(ids: Seq[Long]): Option[(Long, Long)] =
@@ -908,7 +911,7 @@ object SessionHarness {
                 if f == "left" || f == "right" =>
               val other = if (f == "left") "right" else "left"
               for {
-                tid <- store.resolveTypeIds(Seq(tn)).headOption
+                tid <- store.view.resolveTypeIds(Seq(tn)).headOption
                 (targets, _) <- innerMatches(inner)
                 if targets.length == 1
                 vipLinks = livePrims.filter(p =>
@@ -977,7 +980,7 @@ object SessionHarness {
       def signed(iterBody: String, n: Long = horizon): String = {
         val body = s"[o:$oOut][n:$n]$iterBody"
         val sig = CursorSig.signature(c.copy(cursorTok = None), refOfHook,
-          Some(nm => store.resolveTypeIds(Seq(nm)).headOption))
+          Some(nm => store.view.resolveTypeIds(Seq(nm)).headOption))
         f"cursor:${CursorSig.check(sig, body)}%04x:$body"
       }
       // strip `cursor:XXXX:` signature and [o:][n:] from an incoming
@@ -1124,7 +1127,7 @@ object SessionHarness {
             case (None, None) if typeOnly =>
               // typeguid-postings (gmap) iterator: lo = first posting
               // serial, hi = last+1, keyed by the type node's serial
-              val tids = store.resolveTypeIds(c.typePreds.flatMap(_.flatten))
+              val tids = store.view.resolveTypeIds(c.typePreds.flatMap(_.flatten))
               tids.headOption.flatMap { tid =>
                 val posts = store.current
                   .filter(col("typeguid") === tid)
@@ -1163,7 +1166,7 @@ object SessionHarness {
       def sign(iterBody: String): String = {
         val body = s"[o:$consumed][n:$lastId]$iterBody"
         val sig = CursorSig.signature(sub.copy(cursorTok = None), refOfHook,
-          Some(nm => store.resolveTypeIds(Seq(nm)).headOption), asSub = true)
+          Some(nm => store.view.resolveTypeIds(Seq(nm)).headOption), asSub = true)
         f"cursor:${CursorSig.check(sig, body)}%04x:$body"
       }
       if (consumed >= ids.length) "null:"
@@ -1194,12 +1197,14 @@ object SessionHarness {
     var sinceCompact = 0
     def maybeCompact(): Unit = {
       sinceCompact += 1
-      // a mirror-backed store rebuilds a flat LocalRelation per append —
+      // a mirror-backed store derives a flat frame over its rows —
       // nothing to truncate
-      if (sinceCompact >= 8 && store.localRows.isEmpty) {
-        store = store.copy(primitives =
-          store.primitives.coalesce(1).localCheckpoint())
-        sinceCompact = 0
+      if (sinceCompact >= 8) store.source match {
+        case d: graft.store.Source.Distributed =>
+          store = store.copy(source = new graft.store.Source.Distributed(
+            d.rows.coalesce(1).localCheckpoint()))
+          sinceCompact = 0
+        case _ =>
       }
     }
     // guid spaces: restores place primitives under foreign database
@@ -1219,7 +1224,7 @@ object SessionHarness {
     refOfHook = refOf
     /** register server-space guids for ids allocated since lastId */
     def sweepNewIds(): Unit = {
-      val newLast = Writer.nextId(store) - 1
+      val newLast = store.source.nextId - 1
       if (restoredMode)
         ((lastId + 1) to newLast).foreach { id =>
           if (!hexOf.contains(id)) recordGuid(id, serverHex(id))
@@ -1406,7 +1411,7 @@ object SessionHarness {
                 val body = rest.substring(colon + 1)
                 val sig = CursorSig.signature(c0.copy(cursorTok = None),
                   refOfHook,
-                  Some(n => store.resolveTypeIds(Seq(n)).headOption))
+                  Some(n => store.view.resolveTypeIds(Seq(n)).headOption))
                 val expect = CursorSig.check(sig, body)
                 if (expect != given)
                   throw Parser.ParseError(
@@ -1643,7 +1648,7 @@ object SessionHarness {
               pending.clear(); flushBase = -1L
             }
             def predictId(): Long = {
-              if (flushBase < 0) flushBase = Writer.nextId(st)
+              if (flushBase < 0) flushBase = st.source.nextId
               flushBase + pending.length
             }
             def typeIdOf(name: String): Long =
@@ -1745,12 +1750,8 @@ object SessionHarness {
                     spec.datatype, spec.value, spec.scope, spec.live,
                     spec.archival, spec.txstart.getOrElse(false), ts,
                     spec.left, spec.right, spec.prev, id)
-                  val sqlImp = spark.implicits
-                  import sqlImp._
-                  st = st.copy(primitives = st.primitives
-                    .filter(c2("id") =!= id)
-                    .unionByName(Seq(p).toDS().toDF(),
-                      allowMissingColumns = true))
+                  st = st.copy(source = st.source
+                    .filtered(c2("id") =!= id, _.id != id).appended(Seq(p)))
                   serialToLocal(serial) = id
                   newHex(id) = myHex; newRev(myHex) = id
                 case None =>

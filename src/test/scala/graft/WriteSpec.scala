@@ -100,6 +100,95 @@ class WriteSpec extends AnyFunSuite {
       .code == "EMPTY")
   }
 
+  /** One write script, run on a mirror-backed store and on the same
+    * rows as a distributed frame. The two sources answer the write
+    * path's lookups with separate code (the mirror's per-field
+    * predicates and the frame's filters), so every returned id, error
+    * code and current row must agree.
+    */
+  test("write path answers alike on a mirror and on a distributed frame") {
+    val seed = Seq(
+      node(1, name = Some("color")),
+      node(2, value = Some("red")),
+      node(3, value = Some("blue")))
+    type Step = (GraphStore, IndexedSeq[Seq[Long]]) => (GraphStore, Seq[Long])
+    def gql(q: IndexedSeq[Seq[Long]] => String): Step =
+      (st, ids) => Writer.write(st, q(ids))
+    val steps: Seq[Step] = Seq(
+      // template appends minting types, a link to an existing node
+      gql(_ => """write (type="person" value="ann")"""),
+      gql(ids => s"""write (type="person" value="bob"
+        |  (<-left type="knows" right=${ids(0).head}))""".stripMargin),
+      gql(_ => """write (type="person" value="cy")"""),
+      // key=: insert, no-op, version the diff
+      gql(_ => """write (name="size" value="5" key=(name))"""),
+      gql(_ => """write (name="size" value="5" key=(name))"""),
+      gql(_ => """write (name="size" value="6" key=(name))"""),
+      // a keyed root with a keyed link child, twice
+      gql(ids => s"""write (name="person" value="p1" key=(name value)
+        |  (<-left name="knows" right=${ids(0).head} key=(name left right)))""".stripMargin),
+      gql(ids => s"""write (name="person" value="p1" key=(name value)
+        |  (<-left name="knows" right=${ids(0).head} key=(name left right)))""".stripMargin),
+      // unique=: EXISTS, then a fresh insert
+      gql(_ => """write (value="red" unique=(value))"""),
+      gql(_ => """write (value="green" unique=(value))"""),
+      // anchor: a hit, then EMPTY
+      gql(_ => """write (anchor value="blue")"""),
+      gql(_ => """write (anchor value="nope")"""),
+      // guid=: versions the head, then OUTDATED on the stale id
+      gql(ids => s"""write (guid=${ids(1).head} value="bobby")"""),
+      gql(ids => s"""write (guid=${ids(1).head} value="robert")"""),
+      // guid~=: versions whatever the head now is
+      gql(ids => s"""write (guid~=${ids(1).head} value="robert")"""),
+      // a typed write after versions resolves the existing type
+      gql(_ => """write (type="person" value="dee")"""),
+      // tombstones: the template form and the API form
+      gql(ids => s"""write (guid=${ids(2).head} live=false)"""),
+      (st, _) => { val (s2, id) = Writer.tombstone(st, 3L); (s2, Seq(id)) },
+      (st, ids) => {
+        val (s2, id) = Writer.versionOf(st, ids(14).head, Spec(value = Some("x")))
+        (s2, Seq(id))
+      })
+
+    def run(st0: GraphStore): (Seq[Either[String, Seq[Long]]], Seq[Seq[Any]]) = {
+      var st = st0
+      val ids = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+      val out = steps.map { step =>
+        val r =
+          try { val (s2, got) = step(st, ids.toIndexedSeq); st = s2; Right(got) }
+          catch { case e: WriteError => Left(e.code) }
+        ids += r.getOrElse(Nil)
+        r
+      }
+      // timestamps come from the wall clock, so each run has its own
+      val rows = st.current.drop("timestamp").orderBy("id").collect()
+        .map(_.toSeq).toSeq
+      (out, rows)
+    }
+    val (mirrorOut, mirrorRows) = run(GraphStore.fromSeq(spark, seed))
+    val (frameOut, frameRows) = run(GraphStore.fromDf(spark,
+      GraphStore.fromSeq(spark, seed).primitives))
+    assert(mirrorOut == frameOut)
+    assert(mirrorRows == frameRows)
+    // the script reached every outcome it names
+    assert(mirrorOut.collect { case Left(code) => code }.toSet ==
+      Set("EXISTS", "EMPTY", "OUTDATED"))
+    assert(mirrorOut(4) == mirrorOut(3) && mirrorOut(5) != mirrorOut(3))
+    assert(mirrorOut(7) == mirrorOut(6))
+  }
+
+  test("versioned writes and tombstones on a mirror-backed store fire no Spark job") {
+    val (_, jobs) = TestSpark.jobsDuring {
+      val (st1, _) = Writer.write(freshStore, """write (guid=2 value="crimson")""")
+      assert(intercept[WriteError](
+        Writer.write(st1, """write (guid=2 value="pink")""")).code == "OUTDATED")
+      val (st2, _) = Writer.write(st1, """write (guid~=2 value="pink")""")
+      val (st3, _) = Writer.versionOf(st2, 3L, Spec(value = Some("navy")))
+      Writer.tombstone(st3, 1L)
+    }
+    assert(jobs == 0)
+  }
+
   test("dump/restore round-trips exactly, including escapes") {
     val (st, _) = Writer.append(freshStore, Seq(
       Spec(value = Some("tab\tand%percent"), name = Some("tricky"))))
