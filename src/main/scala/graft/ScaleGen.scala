@@ -44,7 +44,7 @@ object ScaleGen {
     def wanted(t: String): Boolean = tableFilter.forall(_.contains(t))
     val spark = SparkEntry.localSession("graft-scalegen")
 
-    def load(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
+    def load(t: String): DataFrame = Tables.load(spark, base, t)
     def roundUp10(v: Long): Long = (v / 10 + 1) * 10
     def maxOf(df: DataFrame, c: String): Long =
       roundUp10(df.agg(max(col(c))).head().getLong(0))

@@ -159,7 +159,7 @@ object AnalyticsQueries extends QueryPack {
         val q = Replica.materializeTypeCounts(
           Replica.stream(s, logDir, maxFilesPerTrigger = 4), stateDir)
         q.awaitTermination()
-        s.read.parquet(stateDir)
+        graft.Tables.parquet(s, stateDir)
           .filter(col("typeguid").isin(GraphAdapter.TPlacedBy,
             GraphAdapter.TInNation, GraphAdapter.TNationRegion,
             GraphAdapter.TSupplierNation, GraphAdapter.TContains))
@@ -206,7 +206,7 @@ object AnalyticsQueries extends QueryPack {
         val feedDir = s"$base/feed"
         val storeDir = s"$base/store"
         val ckptDir = s"$base/ckpt"
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = graft.Tables.load(s, dir, "documents")
         def asBatch(df: org.apache.spark.sql.DataFrame) = df.select(
           concat(lit("doc:"), col("doc_id").cast("string")).as("name"),
           col("text").as("value"))
@@ -246,7 +246,7 @@ object AnalyticsQueries extends QueryPack {
         val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_filter_$key"
         val feedDir = s"$base/feed"
         if (!new java.io.File(feedDir).exists())
-          s.read.parquet(s"$dir/documents.parquet")
+          graft.Tables.load(s, dir, "documents")
             .select(col("doc_id"), col("source"), col("text"))
             .coalesce(6).write.mode("overwrite").parquet(feedDir)
         val incoming = s.readStream
@@ -299,7 +299,7 @@ object AnalyticsQueries extends QueryPack {
         val feedDir = s"$base/feed"
         val acceptedDir = s"$base/accepted"
         val ckptDir = s"$base/ckpt"
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = graft.Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         if (!new java.io.File(feedDir).exists()) {
           val copies = docs
@@ -330,7 +330,7 @@ object AnalyticsQueries extends QueryPack {
           .parquet(feedDir)
         Replica.dedupStream(incoming, "doc_id", "text", seed,
           acceptedDir, ckptDir).awaitTermination()
-        s.read.parquet(acceptedDir).select(col("doc_id"), col("fp"))
+        graft.Tables.parquet(s, acceptedDir).select(col("doc_id"), col("fp"))
       },
       Some(s"""WITH feed AS (
              |  SELECT doc_id, text || ' #u' || CAST(doc_id AS VARCHAR) AS text

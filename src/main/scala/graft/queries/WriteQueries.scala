@@ -39,7 +39,7 @@ object WriteQueries extends QueryPack {
 
   private def docStore(s: SparkSession, dir: String): GraphStore =
     GraphStore.fromDf(s,
-      docPrimitives(s.read.parquet(s"$dir/documents.parquet")),
+      docPrimitives(graft.Tables.load(s, dir, "documents")),
       versioned = false)
 
   val defs: Seq[QueryDef] = Seq(
@@ -50,7 +50,7 @@ object WriteQueries extends QueryPack {
     // the oracle computes the same end state relationally.
     QueryDef("w01_bulk_upsert",
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = graft.Tables.load(s, dir, "documents")
         val restated = docs.select(
           concat(lit("doc:"), col("doc_id").cast("string")).as("name"),
           when(col("doc_id") % 3 === 0, concat(col("text"), lit(" v2")))
@@ -79,7 +79,7 @@ object WriteQueries extends QueryPack {
     // (reported, not written), the rest inserts.
     QueryDef("w02_bulk_unique",
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = graft.Tables.load(s, dir, "documents")
         val existing = docs.filter(col("doc_id") % 2 === 0).select(
           concat(lit("doc:"), col("doc_id").cast("string")).as("name"),
           lit("ignored").as("value"))
@@ -102,7 +102,7 @@ object WriteQueries extends QueryPack {
     // state is unchanged, and reads skip the lineage window
     QueryDef("w03_compact",
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = graft.Tables.load(s, dir, "documents")
         val restated = docs.select(
           concat(lit("doc:"), col("doc_id").cast("string")).as("name"),
           when(col("doc_id") % 3 === 0, concat(col("text"), lit(" v2")))

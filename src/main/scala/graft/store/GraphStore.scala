@@ -260,7 +260,7 @@ final case class GraphStore(spark: SparkSession, source: Source,
     // copy(), not a fresh construction: engine configuration
     // (useWordIndex) survives compaction; the incremental-index
     // watermark refers to pre-compaction state and resets
-    copy(source = new Source.Distributed(spark.read.parquet(path)),
+    copy(source = new Source.Distributed(graft.Tables.parquet(spark, path)),
       versioned = false, wordIndexBase = None)
   }
 
@@ -489,7 +489,7 @@ object GraphStore {
     */
   def load(spark: SparkSession, path: String,
       useWordIndex: Boolean = true): GraphStore =
-    fromDf(spark, spark.read.parquet(path), useWordIndex = useWordIndex)
+    fromDf(spark, graft.Tables.parquet(spark, path), useWordIndex = useWordIndex)
 
   /** a mirror-backed store over `ps` */
   def fromSeq(spark: SparkSession, ps: Seq[Primitive]): GraphStore = {

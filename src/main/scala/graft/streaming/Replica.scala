@@ -72,7 +72,7 @@ object Replica {
           // exception still log-spams ERROR stacks into the driver output
           val merged =
             if (fs.exists(new org.apache.hadoop.fs.Path(stateDir))) {
-              spark.read.parquet(stateDir).unionByName(delta)
+              graft.Tables.parquet(spark, stateDir).unionByName(delta)
                 .groupBy(col("typeguid"))
                 .agg(sum(col("n_links")).as("n_links"),
                   max(col("dateline")).as("dateline"))
@@ -282,7 +282,7 @@ object Replica {
         val hasCommitted = fs.exists(accPath) && fs.globStatus(
           new org.apache.hadoop.fs.Path(acceptedDir, "part-*")).nonEmpty
         val accepted =
-          if (hasCommitted) spark.read.parquet(acceptedDir).select(col("fp"))
+          if (hasCommitted) graft.Tables.parquet(spark, acceptedDir).select(col("fp"))
           else seedFp.limit(0)
         val hFp = seedFp.unionByName(accepted)
         if (sketch.isEmpty) {

@@ -287,11 +287,13 @@ object Writer {
     if (refBootstrap) return writeTemplateRef(store, template)
     import graft.gql._
     var st = store
-    def typeId(names: Seq[String]): Long = {
-      val (st2, id) = typeIdOf(st, names); st = st2; id
-    }
     // pre-resolve/create all type nodes (depth-first, same order as
-    // spec building) BEFORE computing the batch base id
+    // spec building) BEFORE computing the batch base id; each distinct
+    // name list resolves once, and `build` reads the ids found here
+    val typeIds = scala.collection.mutable.Map.empty[Seq[String], Long]
+    def typeId(names: Seq[String]): Long = typeIds.getOrElseUpdate(names, {
+      val (st2, id) = typeIdOf(st, names); st = st2; id
+    })
     def preResolve(c: Constraint): Unit = {
       c.typeNames.foreach(typeId)
       c.subs.foreach(preResolve)

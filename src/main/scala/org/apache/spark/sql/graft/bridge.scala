@@ -13,6 +13,39 @@ object bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** the session's Hadoop configuration, as Spark's parquet schema
+    * inference builds it for a read with no options
+    */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
+    classic(spark).sessionState.newHadoopConf()
+
+  /** true for a file or directory name Spark's file index skips */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver: the footer is read without row groups and converted by the
+    * function Spark's inference job runs on an executor, under the
+    * session's conf (binary-as-string, INT96, nanosAsLong, Spark's row
+    * metadata key).
+    */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+      file: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(classic(spark).sessionState.conf))
+  }
+
+  private def classic(spark: org.apache.spark.sql.SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
   /** drain the listener bus so a just-finished job's task metrics are
     * visible (listenerBus is private[spark]; cost reporting needs one
     * synchronization point after the guarded action)

@@ -189,6 +189,21 @@ class WriteSpec extends AnyFunSuite {
     assert(jobs == 0)
   }
 
+  test("a write template resolves each distinct type once on a distributed store") {
+    // on a distributed store one type resolution is a current-view
+    // window plus a collect (two jobs), and minting a missing type is
+    // an append (two more)
+    def jobs(q: String): Int = TestSpark.jobsDuring(Writer.write(
+      GraphStore.fromDf(spark, freshStore.primitives), q))._2
+    val one = jobs("""write (value="a")""")
+    val two = jobs("""write (value="a" (<-left value="b"))""")
+    assert(jobs("""write (type="color" value="a")""") == one + 2)
+    assert(jobs("""write (type="person" value="a" (<-left type="pet" value="b"))""") ==
+      two + 8)
+    assert(jobs("""write (type="person" value="a" (<-left type="person" value="b"))""") ==
+      two + 4)
+  }
+
   test("dump/restore round-trips exactly, including escapes") {
     val (st, _) = Writer.append(freshStore, Seq(
       Spec(value = Some("tab\tand%percent"), name = Some("tricky"))))
