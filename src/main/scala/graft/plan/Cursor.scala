@@ -111,6 +111,43 @@ object Cursor {
         "g" + renderGuid(t.lastId)
     else b64(s"graft:${t.lastId}:${t.horizon}:${t.offset}")
 
+  // `[o:N]` / `[n:N]` bookkeeping prefixes before a frozen iterator
+  // or a sort cursor body
+  private val prefixRe = """^\[([on]):(\d+)\]""".r
+
+  // frozen iterator positions (graphd-iterator-*.c freeze forms)
+  private val allRe = """^all:(\d+)-(\d+)/(\d+)/?$""".r
+  private val fixedRe = """^fixed:(\d+)(?::([\d,]*))?/(\d+)/?.*$""".r
+  private val gmapRe = """^gmap:(\d+)-(\d+):\w+->\d+/(\d+)/?$""".r
+  private val hmapRe = """^hmap:(\d+)-(\d+):\w+:\w+:\d+:.*?/(\d+)/?$""".r
+  // subtractive iterator (without.sh): producer minus checker with a
+  // trailing frozen-state suffix; resume is positional over the
+  // producer (the all-iterator id space)
+  private val withoutRe = """^without:\(all:(\d+)-(\d+)\)#\(.*?\)/(\d+)/.*$""".r
+  // composite and-/or-iterators (slip.sh, isa.sh): intersection/union
+  // of sub-iterators with optional [psz:][ov:][pro:][pp:] bookkeeping,
+  // a /pos/ that is the LAST-RETURNED candidate id, and an @resource
+  // tail holding the reference's adaptive check-cache — state this
+  // engine does NOT carry (AQE replaces the hand-rolled cost model,
+  // SURVEY §4); resume re-plans from the id keyset (id > pos), which
+  // reproduces the id-ordered production exactly
+  private val andRe = """^and:#?(\d+)-(\d+):\d+:.*/(\d+)(?:\[pp:\d+\])?/(?:@.*)?$""".r
+  private val orRe = """^or:\(.*\)/(\d+)/(?:@.*)?$""".r
+  // isa iterator (isa.sh): endpoints of a sub-iterator's matches via a
+  // linkage, frozen with its producer position, duplicate-test state
+  // ([sp:]) and sampled cost stats; the [o:] offset is the candidates
+  // consumed — resume skips that many in production (id) order
+  private val isaRe = """^isa:(\d+)-(\d+):\w+<-\(.*$""".r
+  // materialized fixed iterator carrying its SOURCE signature instead
+  // of an id list (colors3: fixed:(fixed-isa:lo-hi:l<-(vip:...))/pos/
+  // [cache:@res]); resume is positional over the sorted candidate
+  // array. The freeze encodes linkages as single letters (l<- r+);
+  // spelled-out linkage names don't thaw — the reference answers
+  // EMPTY "not found" for such a cursor (colors3's last read).
+  private val fixedSigRe = """^fixed:\((.*)\)/(\d+)/(?:\[cache:@[^\]]*\])?$""".r
+  // a spelled-out linkage name right after an iterator's `lo-hi:` bounds
+  private val spelledLinkageRe = """\d+-\d+:(left|right|typeguid|scope)(<-|->|\+)""".r
+
   def decode(s0: String): Token = {
     var s = s0
     // strip the iterator-cursor signature prefix (cursor:XXXX:)
@@ -126,59 +163,30 @@ object Cursor {
     var changed = true
     while (changed) {
       changed = false
-      val m = """^\[([on]):(\d+)\]""".r.findFirstMatchIn(s)
+      val m = prefixRe.findFirstMatchIn(s)
       m.foreach { mm =>
         if (mm.group(1) == "o") offset = mm.group(2).toLong
         else horizon = mm.group(2).toLong
         s = s.substring(mm.matched.length); changed = true
       }
     }
-    val all = """^all:(\d+)-(\d+)/(\d+)/?$""".r
-    val fixed = """^fixed:(\d+)(?::([\d,]*))?/(\d+)/?.*$""".r
-    val gmap = """^gmap:(\d+)-(\d+):\w+->\d+/(\d+)/?$""".r
-    val hmap = """^hmap:(\d+)-(\d+):\w+:\w+:\d+:.*?/(\d+)/?$""".r
-    // subtractive iterator (without.sh): producer minus checker with a
-    // trailing frozen-state suffix; resume is positional over the
-    // producer (the all-iterator id space)
-    val without = """^without:\(all:(\d+)-(\d+)\)#\(.*?\)/(\d+)/.*$""".r
-    // composite and-/or-iterators (slip.sh, isa.sh): intersection/union
-    // of sub-iterators with optional [psz:][ov:][pro:][pp:] bookkeeping,
-    // a /pos/ that is the LAST-RETURNED candidate id, and an @resource
-    // tail holding the reference's adaptive check-cache — state this
-    // engine does NOT carry (AQE replaces the hand-rolled cost model,
-    // SURVEY §4); resume re-plans from the id keyset (id > pos), which
-    // reproduces the id-ordered production exactly
-    val andIt = """^and:#?(\d+)-(\d+):\d+:.*/(\d+)(?:\[pp:\d+\])?/(?:@.*)?$""".r
-    val orIt = """^or:\(.*\)/(\d+)/(?:@.*)?$""".r
-    // isa iterator (isa.sh): endpoints of a sub-iterator's matches via a
-    // linkage, frozen with its producer position, duplicate-test state
-    // ([sp:]) and sampled cost stats; the [o:] offset is the candidates
-    // consumed — resume skips that many in production (id) order
-    val isaIt = """^isa:(\d+)-(\d+):\w+<-\(.*$""".r
-    // materialized fixed iterator carrying its SOURCE signature instead
-    // of an id list (colors3: fixed:(fixed-isa:lo-hi:l<-(vip:...))/pos/
-    // [cache:@res]); resume is positional over the sorted candidate
-    // array. The freeze encodes linkages as single letters (l<- r+);
-    // spelled-out linkage names don't thaw — the reference answers
-    // EMPTY "not found" for such a cursor (colors3's last read).
-    val fixedSig = """^fixed:\((.*)\)/(\d+)/(?:\[cache:@[^\]]*\])?$""".r
     s match {
-      case without(lo, hi, pos) =>
+      case withoutRe(lo, hi, pos) =>
         Token(pos.toLong, if (horizon != Long.MaxValue) horizon else hi.toLong,
           Nil, offset)
       // /pos/ is the last-returned candidate in the reference's serial
       // space; engine ids are serial+1 (parseGuidId convention)
-      case andIt(lo, hi, pos) =>
+      case andRe(lo, hi, pos) =>
         Token(pos.toLong + 1,
           if (horizon != Long.MaxValue) horizon else hi.toLong,
           Nil, offset)
-      case orIt(pos) =>
+      case orRe(pos) =>
         Token(pos.toLong + 1, horizon, Nil, offset)
-      case isaIt(lo, hi) =>
+      case isaRe(lo, hi) =>
         Token(Long.MinValue,
           if (horizon != Long.MaxValue) horizon else hi.toLong,
           Nil, offset, skip = offset.toInt)
-      case fixedSig(sig, pos) =>
+      case fixedSigRe(sig, pos) =>
         // linkage tokens in a freeze are single letters right after an
         // iterator's `lo-hi:` bounds (colors3: `608-620:l<-`, vip
         // `630-642:r+`); a spelled-out name in that position is a
@@ -186,26 +194,25 @@ object Cursor {
         // the scan inside the parenthesized source signature — a
         // serialized value or the @resource tail that merely contains
         // a substring like "3:left<-" must not misclassify the cursor.
-        if ("""\d+-\d+:(left|right|typeguid|scope)(<-|->|\+)""".r
-            .findFirstIn(sig).isDefined)
+        if (spelledLinkageRe.findFirstIn(sig).isDefined)
           throw new IllegalArgumentException("EMPTY: not found")
         Token(Long.MinValue, horizon, Nil, offset, skip = pos.toInt)
-      case all(lo, hi, pos) =>
+      case allRe(lo, hi, pos) =>
         Token(pos.toLong, if (horizon != Long.MaxValue) horizon else hi.toLong,
           Nil, offset)
-      case gmap(lo, hi, pos) =>
+      case gmapRe(lo, hi, pos) =>
         // typeguid-postings iterator: resume is positional over the
         // candidate set in id order
         Token(Long.MinValue,
           if (horizon != Long.MaxValue) horizon else hi.toLong,
           Nil, offset, skip = pos.toInt)
-      case hmap(lo, hi, pos) =>
+      case hmapRe(lo, hi, pos) =>
         // value/name-hash iterator (3692: hmap:0-1:pool:name:H:key/1/)
         // — positional resume like gmap
         Token(Long.MinValue,
           if (horizon != Long.MaxValue) horizon else hi.toLong,
           Nil, offset, skip = pos.toInt)
-      case fixed(_, idsCsv, pos) =>
+      case fixedRe(_, idsCsv, pos) =>
         val serials = Option(idsCsv).filter(_.nonEmpty)
           .map(_.split(",").map(_.toLong).toSeq).getOrElse(Nil)
         val p = pos.toInt
@@ -231,7 +238,7 @@ object Cursor {
     var changed = true
     while (changed) {
       changed = false
-      val m = """^\[([on]):(\d+)\]""".r.findFirstMatchIn(s)
+      val m = prefixRe.findFirstMatchIn(s)
       m.foreach { mm =>
         if (mm.group(1) == "o") offset = mm.group(2).toLong
         else horizon = mm.group(2).toLong
@@ -277,9 +284,10 @@ object Cursor {
 
   /** one page in id order, resuming after `cursor` (None = first page) */
   def page(store: GraphStore, cursor: Option[String], pagesize: Int): DataFrame = {
-    val horizon = cursor.map(decode(_).horizon)
+    val token = cursor.map(decode)
+    val horizon = token.map(_.horizon)
       .getOrElse(graft.streaming.Replica.dateline(store.primitives))
-    val after = cursor.map(decode(_).lastId).getOrElse(Long.MinValue)
+    val after = token.map(_.lastId).getOrElse(Long.MinValue)
     store.asOf(horizon).current
       .filter(col("id") > after)
       .orderBy(col("id").asc)

@@ -186,7 +186,8 @@ object PointServer {
 
   /** text entry — parse + vetting come from the prepared-statement
     * cache (StatementCache): a steady-state server re-answers the same
-    * query shapes, and the ~17µs parse dwarfs the ~7µs probe
+    * query shapes, and a miss's parse and vetting cost about as much
+    * as the ~7µs probe
     */
   def serve(ix: Index, query: String): Option[Served] = {
     val p = StatementCache.prepared(query)

@@ -7,13 +7,14 @@ import graft.gql.{Constraint, Parser}
 /** Prepared-statement cache for the serving tier: raw query text →
   * parsed AST + vetted serving plans.
   *
-  * Profiled on the qps benchmark class (sf0.1, a serving profiler
-  * since removed): parsing
-  * a ~70-char read costs ~17µs against a ~7µs snapshot probe — a
+  * A miss costs one parse of the text (~4µs for a ~70-char serve
+  * read, `gql.parse_us` in `perfbench/run.py --workload serve
+  * --trace 1`) plus the servability vetting and the word-key analysis,
+  * against a ~7–9µs snapshot probe (`serve.probe_us`) — a
   * steady-state server answering repeated query shapes (the
   * reference's serving regime, doc/a-brief-tour-of-graphd.md:197-204)
-  * re-derives the same AST and the same servability vetting millions
-  * of times. One lookup replaces parse + servableFor + result-pattern
+  * would re-derive the same AST and the same vetting millions of
+  * times. One lookup replaces parse + servableFor + result-pattern
   * flattening + the router's locality analysis. Everything cached is
   * an immutable AST, safe to share across client threads.
   *
@@ -32,15 +33,18 @@ private[graft] object StatementCache {
     *  - `single`: the snapshot tier's result leaves and column names
     *    (None = not servable there; run the Catalyst plan)
     *  - `routed`: the shard router's scatter plan (None = non-local
-    *    query class; fall back to the single snapshot / Catalyst)
+    *    query class; fall back to the single snapshot / Catalyst),
+    *    derived on first use, so a statement only the single snapshot
+    *    serves never pays the router's analysis
     */
-  final case class Prepared(
-      c: Constraint,
-      single: Option[PointServer.Projection],
-      routed: Option[ShardRouter.RoutedPlan],
+  final class Prepared(
+      val c: Constraint,
+      val single: Option[PointServer.Projection],
       /** word/prefix probe keys — the regex-heavy constraint analysis
         * the candidate producer needs, derived once per query shape */
-      wordKeys: Seq[Seq[Either[String, String]]])
+      val wordKeys: Seq[Seq[Either[String, String]]]) {
+    lazy val routed: Option[ShardRouter.RoutedPlan] = ShardRouter.routedPlan(c)
+  }
 
   private val map = new ConcurrentHashMap[String, Prepared]()
 
@@ -51,8 +55,7 @@ private[graft] object StatementCache {
       val c = Parser.parseRead(q)
       val single =
         if (PointServer.servableFor(c)) PointServer.flatFor(c) else None
-      val p = Prepared(c, single, ShardRouter.routedPlan(c),
-        PointServer.wordProbeKeys(c))
+      val p = new Prepared(c, single, PointServer.wordProbeKeys(c))
       if (map.size >= cap) map.clear()
       map.put(q, p)
       p

@@ -641,9 +641,11 @@ object Writer {
       : (GraphStore, Seq[Long]) = {
     import graft.gql._
     var st = st0
-    def typeId(names: Seq[String]): Long = {
+    // each distinct type-name list resolves (or mints) once per template
+    val typeIds = scala.collection.mutable.Map.empty[Seq[String], Long]
+    def typeId(names: Seq[String]): Long = typeIds.getOrElseUpdate(names, {
       val (st2, id) = typeIdOf(st, names); st = st2; id
-    }
+    })
     def typedSpec(c: Constraint): Spec = specOf(c, c.typeNames.map(typeId))
 
     def matchOne(s: Spec, fields: Seq[String]) =

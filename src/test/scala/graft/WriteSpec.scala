@@ -204,6 +204,15 @@ class WriteSpec extends AnyFunSuite {
       two + 4)
   }
 
+  test("a key= upsert resolves each distinct type once on a distributed store") {
+    def jobs(q: String): Int = TestSpark.jobsDuring(Writer.write(
+      GraphStore.fromDf(spark, freshStore.primitives), q))._2
+    val untyped = jobs("""write (value="a" key=(value) (<-left value="b"))""")
+    // one existing type named twice: one resolution, two jobs
+    assert(jobs("""write (type="color" value="a" key=(value) """ +
+      """(<-left type="color" value="b"))""") == untyped + 2)
+  }
+
   test("dump/restore round-trips exactly, including escapes") {
     val (st, _) = Writer.append(freshStore, Seq(
       Spec(value = Some("tab\tand%percent"), name = Some("tricky"))))
@@ -232,5 +241,33 @@ class WriteSpec extends AnyFunSuite {
     }
     assert(seen == seen.sorted && seen.distinct == seen)
     assert(seen.length == 23) // 3 fixture + 20 appended
+  }
+
+  test("cursor decode: every frozen-iterator and sort wire form") {
+    import Cursor.{SortKeyVal, Token}
+    val g = graft.model.Guid.render(9L)
+    val max = Long.MaxValue
+    val table = Seq(
+      "cursor:abcd:[o:3][n:50]all:1-40/7/" -> Token(7L, 50L, Nil, 3L),
+      "all:1-40/7/" -> Token(7L, 40L),
+      "fixed:3:4,5,6/2/" -> Token(6L, max),
+      "fixed:0/0/" -> Token(Long.MinValue, max),
+      "gmap:1-40:typeguid->5/4/" -> Token(Long.MinValue, 40L, skip = 4),
+      "hmap:0-1:pool:name:7:key/1/" -> Token(Long.MinValue, 1L, skip = 1),
+      "without:(all:1-40)#(x)/9/tail" -> Token(9L, 40L),
+      "and:3-30:2:stuff/12/" -> Token(13L, 30L),
+      "or:(a)/12/" -> Token(13L, max),
+      "[o:4]isa:2-20:left<-(x)" -> Token(Long.MinValue, 20L, Nil, 4L, skip = 4),
+      "fixed:(fixed-isa:1-9:l<-(vip:x))/3/" -> Token(Long.MinValue, max, skip = 3),
+      "null:" -> Token(max, max),
+      s"sort:[o:2][n:9]s3:abcn#5.g$g" -> Token(Cursor.parseGuidId(g), 9L,
+        Seq(Some(SortKeyVal('s', "abc")), None, Some(SortKeyVal('#', "5"))), 2L))
+    for ((text, want) <- table) assert(Cursor.decode(text) == want, text)
+    // a spelled-out linkage in a frozen source signature does not thaw
+    assert(intercept[IllegalArgumentException](
+      Cursor.decode("fixed:(fixed-isa:1-9:left<-(vip:x))/3/")).getMessage ==
+      "EMPTY: not found")
+    val engine = Token(5L, 77L, Nil, 2L)
+    assert(Cursor.decode(Cursor.encode(engine)) == engine)
   }
 }
