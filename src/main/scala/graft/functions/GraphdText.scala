@@ -53,25 +53,6 @@ object GraphdText {
     if (t.isEmpty) "0" else t
   }
 
-  /** does a NONZERO decimal fraction follow the digit run at `j`?
-    * ("-0.5" keeps its sign; "-0.0" and "-0" are zero)
-    */
-  private def fractionFollows(s: String, j: Int): Boolean = {
-    var i = j
-    val n = s.length
-    while (i < n && Character.isDigit(s.charAt(i))) i += 1
-    if (i >= n || s.charAt(i) != '.') return false
-    i += 1
-    var nonzero = false
-    var any = false
-    while (i < n && Character.isDigit(s.charAt(i))) {
-      any = true
-      if (s.charAt(i) != '0') nonzero = true
-      i += 1
-    }
-    any && nonzero
-  }
-
   // ---------- sort keys ----------
 
   /** Default-comparator collation key -- byte-comparable encoding of

@@ -504,14 +504,17 @@ object Parser {
 
     // comparator alias table (graphd-comparator-*.c cmp_alias):
     // "numeric"→number, "case"→case-insensitive, "case-sensitive"→octet,
-    // "unspecified" is the default comparator's twin
-    def canonicalComparator(name: String): String = name match {
-      case "numeric" => "number"
-      case "case" => "case-insensitive"
-      case "case-sensitive" => "octet"
-      case "unspecified" => "default"
-      case other => other
-    }
+    // "unspecified" is the default comparator's twin. Names may carry a
+    // locale prefix: "i;octet" → "octet" (test/unit/compare.sh)
+    def comparatorName(raw: String, pos: Int): String =
+      raw.split(";").lastOption match {
+        case None => throw ParseError(s"SYNTAX: '$raw': expected a comparator name", pos)
+        case Some("numeric") => "number"
+        case Some("case") => "case-insensitive"
+        case Some("case-sensitive") => "octet"
+        case Some("unspecified") => "default"
+        case Some(other) => other
+      }
 
     def rhsVals(r: Rhs, what: String, pos: Int): Seq[Option[String]] = r match {
       case RVal(v, _) => Seq(v)
@@ -892,16 +895,13 @@ object Parser {
           throw ParseError("more than one cursor=...", pos)
         c.copy(cursorTok = v)
       case "comparator" =>
-        // names may carry a locale prefix: "i;octet" → "octet"
-        // (test/unit/compare.sh uses comparator="i;octet")
-        val raw = rhs1(rhs, wl, pos).getOrElse("default")
-        c.copy(comparator = canonicalComparator(raw.split(";").last))
+        c.copy(comparator =
+          comparatorName(rhs1(rhs, wl, pos).getOrElse("default"), pos))
       case "value-comparator" =>
         // value-predicate/-sort override; wins over comparator=
         // regardless of clause order (david_8)
-        val raw = rhs1(rhs, wl, pos).getOrElse("default")
         c.copy(valueComparator =
-          Some(canonicalComparator(raw.split(";").last)))
+          Some(comparatorName(rhs1(rhs, wl, pos).getOrElse("default"), pos)))
       case _ =>
         // sort-comparator=: positional comparator overrides for the
         // sort keys; merged when the constraint completes, so
@@ -910,7 +910,7 @@ object Parser {
         if (c.sortComparators.nonEmpty)
           throw ParseError("only one sort-comparator clause per constraint", pos)
         c.copy(sortComparators = rhsVals(rhs, wl, pos).flatten
-          .map(s => canonicalComparator(s.split(";").last)))
+          .map(comparatorName(_, pos)))
     }
 
     def checkResultPattern(p: Pattern, depth: Int, pos: Int): Unit = p match {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Memo
+import graft.{Conf, Memo}
 import graft.store.GraphStore
 
 /** Graph analytics over the primitives graph (the capability layer the
@@ -101,15 +101,15 @@ object Analytics {
     * i.e. a ~16 GB executor — a 4 GB-executor cluster routing a 60M-row
     * forest to the DSU tail would OOM. The derivation gives the one
     * tail task ~30% of the executor heap at ~80 B/entry (16 GB → ~64M
-    * rows, matching the measured box; 4 GB → ~16M). Override with
-    * -Dgraft.cc.starRows.
+    * rows, matching the measured box; 4 GB → ~16M). `Conf.ccStarRows`
+    * overrides it.
     */
-  private[graft] def starRowsThreshold(spark: SparkSession): Long =
-    sys.props.get("graft.cc.starRows").map(_.toLong).getOrElse {
-      val conf = spark.sparkContext.getConf
+  private[graft] def starRowsThreshold(spark: SparkSession, conf: Conf): Long =
+    conf.ccStarRows.getOrElse {
+      val sc = spark.sparkContext.getConf
       val execMem =
-        if (conf.contains("spark.executor.memory"))
-          conf.getSizeAsBytes("spark.executor.memory")
+        if (sc.contains("spark.executor.memory"))
+          sc.getSizeAsBytes("spark.executor.memory")
         else if (spark.sparkContext.isLocal) Runtime.getRuntime.maxMemory()
         else 1L << 30 // Spark's executor-memory default when unset
       math.max(8L << 20, (execMem * 0.3 / 80.0).toLong)
@@ -283,7 +283,7 @@ object Analytics {
     * per-partition imperative state with no declarative equivalent.
     */
   def connectedComponentsDSU(nodes: DataFrame, edges: DataFrame,
-      fanIn: Int = 16): DataFrame = {
+      fanIn: Int = 16, conf: Conf = Conf()): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
     // materialize the first contraction: the edge plan may be
@@ -305,7 +305,7 @@ object Analytics {
     // sf0.1 and sf10 both — not worth an estimate-based skip
     val forestRows = forest.count()
     val roots =
-      if (forestRows > starRowsThreshold(spark))
+      if (forestRows > starRowsThreshold(spark, conf))
         starComponents(forest.toDF("u", "v")).toDF("id", "component")
       else {
         // ADAPTIVE ladder depth: intermediate fan-in levels exist only
@@ -317,13 +317,11 @@ object Analytics {
         // small enough that the single task streams it in well under a
         // stage's fixed cost (~50M rows/s measured for the DSU pass vs
         // ~0.2 s per extra stage + checkpoint), the intermediate level
-        // is pure overhead: fan straight to one partition. Override
-        // with -Dgraft.cc.directFanInRows.
-        val directRows = sys.props.get("graft.cc.directFanInRows")
-          .map(_.toLong).getOrElse(4L << 20)
+        // is pure overhead: fan straight to one partition
+        // (`Conf.ccDirectFanInRows`).
         var parts = forest.rdd.getNumPartitions
         while (parts > 1) {
-          parts = if (forestRows <= directRows) 1
+          parts = if (forestRows <= conf.ccDirectFanInRows) 1
                   else math.max(1, parts / fanIn)
           forest = dsuContract(forest.repartition(parts)).localCheckpoint()
         }
@@ -342,7 +340,8 @@ object Analytics {
   def connectedComponentsStore(store: GraphStore): DataFrame =
     connectedComponentsDSU(
       store.nodes.select(col("id")),
-      store.links.filter(col("right").isNotNull).select(col("left"), col("right")))
+      store.links.filter(col("right").isNotNull).select(col("left"), col("right")),
+      conf = store.conf)
 
   /** PageRank over the link structure */
   def pageRank(store: GraphStore, iters: Int = 10, reset: Double = 0.15): DataFrame = {
@@ -371,27 +370,6 @@ object Analytics {
     */
   private val prEdgeMemo = Memo.frames[(Long, Int, Boolean)]
 
-  /** Edge-count bound for PageRank's per-round rank attach. At or
-    * under it each round BROADCASTS the rank vector (in-sum rows ≤
-    * distinct dst ≤ E) and rides the dst-partitioned edge cache
-    * exchange-free — but the broadcast relation is built single-
-    * threaded ON THE DRIVER every round, so its cost grows linearly
-    * with V while everything else stays parallel (measured at sf10:
-    * the five per-round driver builds dominate the warm query), and
-    * past ~hundreds of MB it stops being a sane broadcast at all
-    * (8 GB / 512M-row hard cap). Past the bound the rounds switch to
-    * the shuffle formulation: edges cached hash(src) so the per-round
-    * rank join is a shuffled-hash join of ONE rank exchange (V rows)
-    * against the cached layout, plus one narrow (dst, c) contribution
-    * exchange for the aggregate — per-round network linear in E, no
-    * driver-side structure anywhere. 32M edges ≈ a worst-case ~1.5 GB
-    * built relation: the last point the broadcast is defensible.
-    * Override with -Dgraft.pr.broadcastMaxRows (0 forces shuffle).
-    */
-  private[graft] def prBroadcastMaxRows: Long =
-    sys.props.get("graft.pr.broadcastMaxRows").map(_.toLong)
-      .getOrElse(32L << 20)
-
   def pageRankDF(store: GraphStore, iters: Int, reset: Double = 0.15,
       materializeRounds: Boolean = false): DataFrame = {
     // weighted edges (src, dst, 1/outdeg) computed ONCE and cached —
@@ -402,7 +380,7 @@ object Analytics {
       .select(col("left").as("src"), col("right").as("dst"))
     // carry od and divide (not multiply by 1/od): bit-identical to the
     // oracle's sum(rank/od) term ordering-insensitive at 6dp rounding.
-    // REGIME DISPATCH (see prBroadcastMaxRows): the memoized edge
+    // REGIME DISPATCH (see Conf.prBroadcastMaxRows): the memoized edge
     // count is the proxy for the rank vector's size. Broadcast regime:
     // cache hash(dst) — every round's groupBy(dst) then needs NO
     // exchange (the cached partitioning satisfies the agg's
@@ -411,7 +389,7 @@ object Analytics {
     // cached layout instead (one V-row exchange of the rank side), and
     // the aggregate pays one narrow contribution exchange.
     val eRows = Memo.count(edges)
-    val useBroadcast = eRows <= prBroadcastMaxRows
+    val useBroadcast = eRows <= store.conf.prBroadcastMaxRows
     val partCol = if (useBroadcast) "dst" else "src"
     val parts = sizedPartitions(edges)
     val cedges = prEdgeMemo.getOrElseUpdate(

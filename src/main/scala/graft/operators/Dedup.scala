@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Memo
+import graft.{Conf, Memo}
 
 /** Deduplication operators for training-data pipelines, each designed
   * for the 100 TB regime:
@@ -36,34 +36,17 @@ object Dedup {
     math.ceil(-items.toDouble * math.log(fpp) /
       (math.log(2) * math.log(2))).toLong
 
-  /** Largest single driver-resident Bloom filter [[incrementalNew]]
-    * will build (bits). Above it the sketch is hash-partitioned into
-    * executor-resident bucket filters — a 1e11-item history at fpp
-    * 0.01 needs ~120 GB of bits, which must never materialize on the
-    * driver. Default 2^31 bits = 256 MB.
-    */
-  private[graft] def maxSingleBloomBits: Long =
-    sys.props.get("graft.bloom.maxSingleBits").map(_.toLong)
-      .getOrElse(1L << 31)
-
-  /** Per-bucket bit budget for the partitioned sketch (default 2^27
-    * bits = 16 MB per executor task building/holding one bucket).
-    */
-  private[graft] def bloomBucketBits: Long =
-    sys.props.get("graft.bloom.bucketBits").map(_.toLong)
-      .getOrElse(1L << 27)
-
   /** Driver-heap budget for memoized single-path Bloom filters. The
     * entry-count LRU alone bounds the wrong resource — 32 entries of
     * caller-sized filters can pin multi-GB of driver heap — so this
     * memo evicts by TOTAL BYTES (512 MB; each entry is already
-    * individually capped by [[maxSingleBloomBits]]).
+    * individually capped by `Conf.bloomMaxSingleBits`).
     */
   private[graft] final val bloomMemoBytes = 512L << 20
 
   /** history Bloom filters for [[incrementalNew]]'s single-filter path
     * — ~1.2 MB per million items at fpp 0.01, bounded by total bytes
-    * ([[bloomMemoBytes]]), each entry gated by [[maxSingleBloomBits]]
+    * ([[bloomMemoBytes]]), each entry gated by `Conf.bloomMaxSingleBits`
     */
   private val bloomMemo = new Memo[(Long, Long, Double),
     org.apache.spark.util.sketch.BloomFilter](bloomMemoBytes, _.bitSize / 8)
@@ -107,12 +90,13 @@ object Dedup {
     })
 
   /** bucket count for a partitioned sketch: smallest power of two
-    * keeping each bucket filter within [[bloomBucketBits]]
+    * keeping each bucket filter within `conf.bloomBucketBits`
     */
-  private[graft] def bloomNumBuckets(items: Long, fpp: Double): Int = {
+  private[graft] def bloomNumBuckets(items: Long, fpp: Double,
+      conf: Conf = Conf()): Int = {
     var n = 1
     while (n < (1 << 24) &&
-        bloomBits(math.max(items / n, 1L), fpp) > bloomBucketBits)
+        bloomBits(math.max(items / n, 1L), fpp) > conf.bloomBucketBits)
       n <<= 1
     n
   }
@@ -287,13 +271,13 @@ object Dedup {
     *
     * Memory bound, both regimes:
     *
-    *  - sketch bits <= [[maxSingleBloomBits]] (256 MB default): ONE
+    *  - sketch bits <= `Conf.bloomMaxSingleBits` (256 MB default): ONE
     *    driver-built filter, broadcast into a codegen [[graft.functions
     *    .BloomProbe]] — definitely-new rows never shuffle. The memo
     *    holding these filters is BYTE-bounded ([[bloomMemoBytes]]).
     *  - above the gate (a 1e11-item history at fpp 0.01 is ~120 GB of
     *    bits — driver OOM as a single object): the sketch is hash-
-    *    partitioned into 2^b bucket filters of <= [[bloomBucketBits]]
+    *    partitioned into 2^b bucket filters of <= `Conf.bloomBucketBits`
     *    each, built DISTRIBUTED (groupByKey.mapGroups streams each
     *    bucket's fingerprints through one executor task holding only
     *    its own <=16 MB filter) and persisted as a (bucket, bytes)
@@ -307,15 +291,15 @@ object Dedup {
     *    bucket filter. Output is byte-identical in both regimes.
     */
   def incrementalNew(batch: DataFrame, history: DataFrame, idCol: String,
-      textCol: String, expectedItems: Long = -1L, fpp: Double = 0.01)
-      : DataFrame = {
+      textCol: String, expectedItems: Long = -1L, fpp: Double = 0.01,
+      conf: Conf = Conf()): DataFrame = {
     val bFp = batch.select(col(idCol),
       TextAnalysis.fingerprint(col(textCol)).as("fp"))
     // null history fingerprints can never match a batch key (null !=
     // null in the join) — and the sketch builder NPEs on them
     val hFp = history.select(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .filter(col("fp").isNotNull)
-    incrementalNewFp(bFp, hFp, idCol, expectedItems, fpp)
+    incrementalNewFp(bFp, hFp, idCol, expectedItems, fpp, conf)
   }
 
   /** Fingerprint-level core of [[incrementalNew]], for callers that
@@ -326,11 +310,11 @@ object Dedup {
     * byte-identical-to-anti-join output contract.
     */
   private[graft] def incrementalNewFp(bFp: DataFrame, hFp: DataFrame,
-      idCol: String, expectedItems: Long = -1L, fpp: Double = 0.01)
-      : DataFrame = {
+      idCol: String, expectedItems: Long = -1L, fpp: Double = 0.01,
+      conf: Conf = Conf()): DataFrame = {
     val items = if (expectedItems > 0) expectedItems
       else math.max(Memo.count(hFp), 1L)
-    if (bloomBits(items, fpp) <= maxSingleBloomBits) {
+    if (bloomBits(items, fpp) <= conf.bloomMaxSingleBits) {
       // the filter is memoized on (history planKey, items, fpp): the
       // operator's natural shape is many batches against one immutable
       // history, and only the FIRST batch should pay the history
@@ -339,7 +323,7 @@ object Dedup {
       probeSplitSingle(bFp, hFp, idCol, singleSketch(hFp, items, fpp))
     } else {
       partitionedBloomBuilds.incrementAndGet()
-      val numBuckets = bloomNumBuckets(items, fpp)
+      val numBuckets = bloomNumBuckets(items, fpp, conf)
       val perBucket = math.max(items / numBuckets, 1L)
       val filters = bucketBloomMemo.getOrElseUpdate(
         (Memo.planKey(hFp), numBuckets, fpp),
@@ -565,7 +549,7 @@ object Dedup {
     * doing corpus-scale dedup tune them down deliberately.
     */
   private[graft] def capBuckets(df: DataFrame, keyCols: Seq[String],
-      maxBucket: Int): DataFrame =
+      maxBucket: Int, conf: Conf = Conf()): DataFrame =
     if (maxBucket == Int.MaxValue) df
     else {
       // INVERTED cap: anti-join against the OVER-cap keys instead of
@@ -604,11 +588,9 @@ object Dedup {
       //  of an exact decision with nothing pinned.
       // Unhinted fallback: the anti-join build side is still only
       // |keys|/maxBucket rows, and AQE's runtime size check can still
-      // convert to a broadcast from exact runtime stats. Override
-      // -Dgraft.dedup.maxHotBroadcastRows (<= 0 forces the unhinted
-      // path outright).
-      val maxHot = sys.props.get("graft.dedup.maxHotBroadcastRows")
-        .map(_.toLong).getOrElse(4L << 20)
+      // convert to a broadcast from exact runtime stats.
+      // `conf.dedupMaxHotBroadcastRows` <= 0 forces the unhinted path.
+      val maxHot = conf.dedupMaxHotBroadcastRows
       val hot = df.groupBy(keyCols.map(col): _*)
         .agg(count(lit(1)).as("__bn")).filter(col("__bn") > maxBucket)
         .select(keyCols.map(c => col(c).as(s"__hot_$c")): _*)

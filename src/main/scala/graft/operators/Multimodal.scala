@@ -404,8 +404,8 @@ object Multimodal {
     * provider wraps an external decoder (ffmpeg via JNI/JavaCV, a
     * hardware codec) and is discovered through the standard
     * `java.util.ServiceLoader` mechanism (META-INF/services entry for
-    * `graft.operators.VideoFrameDecoder`) or, mostly for tests, a
-    * `graft.video.decoderClass` system property naming the impl — the
+    * `graft.operators.VideoFrameDecoder`) or, mostly for tests, the
+    * class names passed to `decodeFrameSamples` — the
     * same probe-and-fall-through pattern as the MP3 SPI hook: with no
     * provider installed the pipeline is byte-identical to a stub-only
     * build.
@@ -418,20 +418,18 @@ object Multimodal {
   }
 
   object VideoFrameDecoder {
-    /** resolved once per JVM per property value — provider classes are
-      * stateless decoders by contract
+    /** the named classes, then the SPI providers; resolved once per JVM
+      * per class list — provider classes are stateless decoders by
+      * contract
       */
-    @volatile private var cached: (String, Seq[VideoFrameDecoder]) = null
-    private[operators] def providers: Seq[VideoFrameDecoder] = {
-      val propKey = sys.props.getOrElse("graft.video.decoderClass", "")
-      val c = cached
-      if (c != null && c._1 == propKey) c._2
-      else {
-        val fromProp = propKey.split(',').filter(_.nonEmpty).toSeq.flatMap {
-          cls =>
-            try Seq(Class.forName(cls).getDeclaredConstructor()
-              .newInstance().asInstanceOf[VideoFrameDecoder])
-            catch { case _: Exception => Nil }
+    private val resolved = new java.util.concurrent.ConcurrentHashMap[
+      Seq[String], Seq[VideoFrameDecoder]]
+    private[operators] def providers(decoders: Seq[String]): Seq[VideoFrameDecoder] =
+      resolved.computeIfAbsent(decoders, _ => {
+        val named = decoders.flatMap { cls =>
+          try Seq(Class.forName(cls).getDeclaredConstructor()
+            .newInstance().asInstanceOf[VideoFrameDecoder])
+          catch { case _: Exception => Nil }
         }
         val fromSpi =
           try {
@@ -439,11 +437,8 @@ object Multimodal {
             java.util.ServiceLoader.load(classOf[VideoFrameDecoder])
               .iterator().asScala.toSeq
           } catch { case _: Throwable => Nil }
-        val all = fromProp ++ fromSpi
-        cached = (propKey, all)
-        all
-      }
-    }
+        named ++ fromSpi
+      })
 
     /** first provider that handles the payload wins; a provider that
       * throws or returns malformed frames (non-positive geometry, out-
@@ -451,9 +446,9 @@ object Multimodal {
       * plugin degrades to the metadata fallback instead of failing the
       * Spark task — the same totality fence as the MJPEG walker
       */
-    private[operators] def tryProviders(m: MediaRow, stride: Int)
-        : Option[Seq[SampledFrame]] = {
-      val ps = providers
+    private[operators] def tryProviders(m: MediaRow, stride: Int,
+        decoders: Seq[String]): Option[Seq[SampledFrame]] = {
+      val ps = providers(decoders)
       if (ps.isEmpty) None
       else ps.iterator.flatMap { p =>
         (try p.decodeFrames(m.media, stride)
@@ -697,10 +692,11 @@ object Multimodal {
     * metadata-derived rows of [[sampleFrames]] everywhere else
     * (`decoded = false`, sig 0). Same 100 TB shape as every decode
     * stage here: partition-preserving mapPartitions, payload bytes
-    * never shuffle, only the small frame rows move.
+    * never shuffle, only the small frame rows move. `decoders` names
+    * [[VideoFrameDecoder]] classes tried ahead of the SPI providers.
     */
   def decodeFrameSamples(spark: SparkSession, media: DataFrame,
-      stride: Int): Dataset[SampledFrame] = {
+      stride: Int, decoders: Seq[String] = Nil): Dataset[SampledFrame] = {
     import spark.implicits._
     require(stride > 0)
     media.as[MediaRow]
@@ -712,7 +708,7 @@ object Multimodal {
         // metadata chain; each link is exception-fenced so the stage
         // stays total
         MjpegFrames.tryDecodeFrames(m, stride)
-          .orElse(VideoFrameDecoder.tryProviders(m, stride))
+          .orElse(VideoFrameDecoder.tryProviders(m, stride, decoders))
           .getOrElse {
             val f = ImageIoCodec.decode(m)
             Range(0, f.n_frames, stride).map(i =>

@@ -80,13 +80,6 @@ object TextAnalysis {
           concat_ws(" ", (0 until n).map(j => element_at(t, i + j + 1)): _*))),
       s => s.isNotNull)
 
-  /** n-gram word shingles straight off the text column — convenience
-    * form; hot paths should project the token array once and use
-    * [[shinglesOfTokens]] (see the warning there).
-    */
-  def shingles(text: Column, n: Int): Column =
-    shinglesOfTokens(tokens(lower(text)), n)
-
   // ---------- quality scoring ----------
 
   /** Tie-exact 4-decimal rounding: floor(x·10⁴ + ½)/10⁴ in pure IEEE

@@ -686,7 +686,7 @@ object ReadPlanner {
       // reference's fixed-iterator collapse (graphd-iterator-fixed.c:
       // a small index posting list becomes an in-memory sorted id
       // array probed for free):
-      //  - ≤ graft.fixedMax ids: inline them as an IN-set predicate —
+      //  - ≤ conf.fixedMax ids: inline them as an IN-set predicate —
       //    the query stays ONE stage and the id set pushes into the
       //    parquet scan (row-group min/max pruning). The collect is a
       //    limit over the CACHED index — bounded driver traffic even
@@ -698,8 +698,7 @@ object ReadPlanner {
       //    throttles sustained read throughput.
       def applyCandidates(base: DataFrame, cand0: DataFrame): DataFrame = {
         val cand = cand0.select(col("id").as("__cand_id"))
-        val fixedMax =
-          sys.props.get("graft.fixedMax").map(_.toInt).getOrElse(4096)
+        val fixedMax = store.conf.fixedMax
         val small = Option.when(fixedMax > 0) {
           cand.limit(fixedMax + 1).collect()
         }.filter(_.length <= fixedMax)

@@ -828,12 +828,6 @@ object PointServer {
   private def keyOrNull(cmp: String, s: String): String =
     if (s == null) null else GraphdText.sortKey(cmp, s)
 
-  private def nullsLastCompare(a: String, b: String): Int =
-    if (a == null && b == null) 0
-    else if (a == null) 1
-    else if (b == null) -1
-    else a.compareTo(b)
-
   // ---------- projection ----------
 
   private[serve] def fieldOf(ix: Index, p: Pattern, pos: Int): Any = p match {

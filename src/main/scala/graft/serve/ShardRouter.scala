@@ -40,25 +40,28 @@ object ShardRouter {
   def build(store: GraphStore, n: Int): Shards = {
     require(n >= 1)
     val globalTypes = PointServer.build(store).types
+    Shards(shardStores(store, n).zipWithIndex.map { case (st, s) =>
+      PointServer.build(st).withTypes(globalTypes).withHome(id => id % n == s)
+    }, n)
+  }
+
+  /** the `n` shard stores, shard `s` at index `s` */
+  private[graft] def shardStores(store: GraphStore, n: Int): Vector[GraphStore] = {
     // shard the globally-resolved CURRENT view: version currency is a
     // per-lineage property and lineage members hash to different
     // shards, so newest/live resolution must happen before the split
     val currentView = store.copy(source = store.view.source, versioned = false)
-    val shards = (0 until n).map { s =>
+    (0 until n).map { s =>
       // null endpoints must NOT default into shard 0 (a coalesce-to-0
       // here would hand shard 0 every NODE in the corpus and break the
       // 1/n per-shard memory bound); only real link endpoints co-locate
       val owned = pmod(col("id"), lit(n)) === s ||
         (col("left").isNotNull && pmod(col("left"), lit(n)) === s) ||
         (col("right").isNotNull && pmod(col("right"), lit(n)) === s)
-      val shardStore = currentView.copy(source = currentView.source.filtered(
+      currentView.copy(source = currentView.source.filtered(
         owned, p => p.id % n == s || p.left.exists(_ % n == s) ||
           p.right.exists(_ % n == s)))
-      PointServer.build(shardStore)
-        .withTypes(globalTypes)
-        .withHome(id => id % n == s)
     }.toVector
-    Shards(shards, n)
   }
 
   /** The scatter plan the router derives once per query shape: the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Conf
 import graft.model.{Guid, Primitive}
 
 /** The primitives table plus its derived views — the Spark rendition of
@@ -43,7 +44,9 @@ final case class GraphStore(spark: SparkSession, source: Source,
       * the exact predicate after the semi-join), so a base covering
       * more rows than an asOf view is superset-correct.
       */
-    wordIndexBase: Option[(DataFrame, Long)] = None) {
+    wordIndexBase: Option[(DataFrame, Long)] = None,
+    /** the size gates its reads and merges decide by; `copy` keeps it */
+    conf: Conf = Conf()) {
   import GraphStore._
 
   /** every version, tombstones included */
@@ -78,15 +81,12 @@ final case class GraphStore(spark: SparkSession, source: Source,
     * SURVEY §4). The Spark analog of that decision is a size gate — a
     * store whose scan fits one cheap cached/columnar stage (tests,
     * small fixtures) answers fastest by scanning and post-filtering,
-    * while past `graft.indexRouteMinBytes` (default 64 MB) the
-    * index probe + id-pruned scan wins and keeps winning through
-    * 100 TB. Tests pin routed plan shapes with -Dgraft.indexRouteMinBytes=0.
+    * while past `conf.smallStoreBytes` (default 64 MB) the index
+    * probe + id-pruned scan wins and keeps winning through 100 TB.
+    * Tests pin routed plan shapes with `Conf(smallStoreBytes = 0)`.
     */
-  def indexRouteWorthwhile: Boolean = useWordIndex && {
-    val minBytes = sys.props.get("graft.indexRouteMinBytes")
-      .map(BigInt(_)).getOrElse(BigInt(64L << 20))
-    scanBytes >= minBytes
-  }
+  def indexRouteWorthwhile: Boolean =
+    useWordIndex && scanBytes >= conf.smallStoreBytes
 
   /** Snapshot as of an id horizon — `asof=`/dateline time travel
     * (doc/gr-protocol.txt:203-221): drop everything written after the
@@ -258,7 +258,7 @@ final case class GraphStore(spark: SparkSession, source: Source,
         .write.mode(SaveMode.Overwrite).partitionBy("id_part").parquet(path)
     }
     // copy(), not a fresh construction: engine configuration
-    // (useWordIndex) survives compaction; the incremental-index
+    // (useWordIndex, conf) survives compaction; the incremental-index
     // watermark refers to pre-compaction state and resets
     copy(source = new Source.Distributed(graft.Tables.parquet(spark, path)),
       versioned = false, wordIndexBase = None)
@@ -363,15 +363,13 @@ object TypeVocab {
   * HDFS; on object stores without atomic create-exclusive (S3) it is
   * best-effort, the same caveat every Hadoop output committer carries.
   * A crash leaves the lock behind; locks older than
-  * `graft.store.lockStaleMs` (default 30 min) are presumed abandoned
+  * [[StoreLock.staleMs]] (30 min) are presumed abandoned
   * and reclaimed, so an operator never has to hand-clean after a
   * killed job — while a LIVE writer's lock always fails fast with the
   * path in the error.
   */
 private[graft] object StoreLock {
-  private def staleMs: Long =
-    sys.props.get("graft.store.lockStaleMs").map(_.toLong)
-      .getOrElse(30L * 60 * 1000)
+  private final val staleMs = 30L * 60 * 1000
 
   /** acquire or throw; returns the release thunk.
     *
@@ -384,7 +382,7 @@ private[graft] object StoreLock {
     *    per-contender grave name — rename fails for everyone but one,
     *    and the loser falls back to create-exclusive (which correctly
     *    fails against the winner's fresh lock);
-    *  - a writer stalled past lockStaleMs gets reclaimed, then its
+    *  - a writer stalled past staleMs gets reclaimed, then its
     *    release() fires and would delete the RECLAIMER's lock. Release
     *    deletes only if the lock file still carries this writer's
     *    unique token.

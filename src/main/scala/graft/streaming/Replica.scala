@@ -252,7 +252,8 @@ object Replica {
     */
   def dedupStream(incoming: DataFrame, idCol: String, textCol: String,
       seedHistory: DataFrame, acceptedDir: String, checkpointDir: String,
-      expectedItems: Long = -1L, fpp: Double = 0.01): StreamingQuery = {
+      expectedItems: Long = -1L, fpp: Double = 0.01,
+      conf: graft.Conf = graft.Conf()): StreamingQuery = {
     import graft.operators.{Dedup, TextAnalysis}
     // driver-side sketch state carried across micro-batches (the
     // mergeStream `carried` pattern): None until the first batch or
@@ -295,12 +296,12 @@ object Replica {
           // of the same bit array could tear — a torn read is a false
           // NEGATIVE, the one failure the classification can't absorb
           sketch = Some(
-            if (Dedup.bloomBits(items, fpp) <= Dedup.maxSingleBloomBits)
+            if (Dedup.bloomBits(items, fpp) <= conf.bloomMaxSingleBits)
               SingleSketch(
                 cloneFilter(Dedup.singleSketch(hFp, items, fpp)), items)
             else {
               Dedup.partitionedBloomBuilds.incrementAndGet()
-              val nb = Dedup.bloomNumBuckets(items, fpp)
+              val nb = Dedup.bloomNumBuckets(items, fpp, conf)
               val pb = math.max(items / nb, 1L)
               BucketSketch(Dedup.buildBucketFilters(hFp, nb, pb, fpp,
                 fullHistory = true), nb, pb)

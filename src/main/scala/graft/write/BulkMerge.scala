@@ -52,7 +52,6 @@ object BulkMerge {
 
   /** identity-participating fields, in Spec order */
   private val IdentityFields = Seq("name", "value", "typeguid", "left", "right")
-  private val LongFields = Set("typeguid", "left", "right", "scope", "prev")
   private val AllKeyFields =
     Set("name", "value", "typeguid", "left", "right", "scope", "datatype")
 
@@ -190,9 +189,7 @@ object BulkMerge {
         // SMALL store (one cached/columnar stage) skips the prune:
         // two extra stages cost more than the window they'd save —
         // the same size gate as GraphStore.indexRouteWorthwhile.
-        val pruneWorthwhile = store.scanBytes >= BigInt(
-          sys.props.get("graft.mergePruneMinBytes").map(_.toLong)
-            .getOrElse(64L << 20))
+        val pruneWorthwhile = store.scanBytes >= store.conf.smallStoreBytes
         val touched =
           if (!pruneWorthwhile) cur
           else {

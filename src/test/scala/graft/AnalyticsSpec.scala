@@ -54,14 +54,12 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("pagerank's shuffle regime matches the broadcast regime at 6dp") {
     import org.apache.spark.sql.functions.{col, round}
-    def run(): Map[Long, Double] =
-      Analytics.pageRankDF(fx, iters = 5)
+    def run(conf: Conf): Map[Long, Double] =
+      Analytics.pageRankDF(fx.copy(conf = conf), iters = 5)
         .select(col("id"), round(col("pagerank"), 6).as("pr")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val bcast = run() // tiny edge set: broadcast regime
-    System.setProperty("graft.pr.broadcastMaxRows", "0")
-    val shuffled = try run()
-    finally System.clearProperty("graft.pr.broadcastMaxRows")
+    val bcast = run(Conf()) // tiny edge set: broadcast regime
+    val shuffled = run(Conf(prBroadcastMaxRows = 0))
     assert(bcast == shuffled)
     assert(bcast(3L) > bcast(1L)) // sanity: same ordering as pageRank
   }
@@ -73,9 +71,8 @@ class AnalyticsSpec extends AnyFunSuite {
       df.select(col("id"), round(col("pagerank"), 6).as("pr")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val bcast = Analytics.pageRankDF(fx, iters = 5) // built, not run
-    System.setProperty("graft.pr.broadcastMaxRows", "0")
-    val shuffled = try ranks(Analytics.pageRankDF(fx, iters = 5))
-    finally System.clearProperty("graft.pr.broadcastMaxRows")
+    val shuffled = ranks(Analytics.pageRankDF(
+      fx.copy(conf = Conf(prBroadcastMaxRows = 0)), iters = 5))
     assert(bcast.queryExecution.executedPlan.toString
       .contains("InMemoryTableScan"),
       "the shuffle-regime build released the broadcast regime's edge cache")
@@ -152,21 +149,19 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("DSU dispatches to the star path past the forest-size threshold") {
     import spark.implicits._
-    System.setProperty("graft.cc.starRows", "0")
-    try {
-      val before = Analytics.starPathRuns.get()
-      val nodes = (1L to 12L).toDF("id")
-      val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L))
-        .toDF("left", "right")
-      val out = Analytics.connectedComponentsDSU(nodes, edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Analytics.starPathRuns.get() > before,
-        "threshold 0 did not engage the star path")
-      assert(out(1L) == 1L && out(2L) == 1L && out(3L) == 1L)
-      assert(out(5L) == 5L && out(6L) == 5L)
-      assert(out(7L) == 7L) // self-loop only
-      assert((8L to 12L).forall(i => out(i) == i)) // isolated
-    } finally System.clearProperty("graft.cc.starRows")
+    val before = Analytics.starPathRuns.get()
+    val nodes = (1L to 12L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L))
+      .toDF("left", "right")
+    val out = Analytics.connectedComponentsDSU(nodes, edges,
+        conf = Conf(ccStarRows = Some(0))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Analytics.starPathRuns.get() > before,
+      "threshold 0 did not engage the star path")
+    assert(out(1L) == 1L && out(2L) == 1L && out(3L) == 1L)
+    assert(out(5L) == 5L && out(6L) == 5L)
+    assert(out(7L) == 7L) // self-loop only
+    assert((8L to 12L).forall(i => out(i) == i)) // isolated
   }
 
   test("direct fan-in and the forced ladder label identically") {
@@ -181,13 +176,11 @@ class AnalyticsSpec extends AnyFunSuite {
     // (8 -> 4 -> 2 -> 1); with the default fanIn=16 an 8-partition
     // forest collapses to 1 in a single step either way and the test
     // would compare identical executions
-    def run(): Map[Long, Long] =
-      Analytics.connectedComponentsDSU(nodes, edges, fanIn = 2).collect()
+    def run(conf: Conf): Map[Long, Long] =
+      Analytics.connectedComponentsDSU(nodes, edges, fanIn = 2, conf).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val direct = run() // small forest: takes the single-level path
-    System.setProperty("graft.cc.directFanInRows", "0")
-    val laddered = try run()
-    finally System.clearProperty("graft.cc.directFanInRows")
+    val direct = run(Conf()) // small forest: takes the single-level path
+    val laddered = run(Conf(ccDirectFanInRows = 0))
     assert(direct == laddered)
     assert(direct(200L) == 1L && direct(700L) == 500L && direct(900L) == 900L)
   }

@@ -34,17 +34,16 @@ class BulkMergeSpec extends AnyFunSuite {
     // outcome or the merged view — pins the 100TB shape ≡ small shape
     val batch = Seq("doc:1" -> "alpha", "doc:3" -> "gamma2",
       "doc:9" -> "fresh")
-    def run() = {
-      val r = BulkMerge.mergeKeyed(baseStore(), batchDf(batch), Seq("name"))
+    def run(conf: Conf) = {
+      val r = BulkMerge.mergeKeyed(baseStore().copy(conf = conf), batchDf(batch),
+        Seq("name"))
       (r.outcomes.select("name", "outcome").collect()
          .map(x => (x.getString(0), x.getString(1))).toSet,
        r.store.current.select("name", "value").collect()
          .map(x => (x.getString(0), x.getString(1))).toSet)
     }
-    val gated = run()
-    sys.props("graft.mergePruneMinBytes") = "0" // force the prune path
-    try assert(run() == gated)
-    finally sys.props.remove("graft.mergePruneMinBytes")
+    val gated = run(Conf())
+    assert(run(Conf(smallStoreBytes = 0)) == gated) // force the prune path
   }
 
   test("mergeKeyed classifies insert / unchanged / versioned like the sequential path") {

@@ -96,6 +96,7 @@ class ParserSpec extends AnyFunSuite {
     "cursor=\"abc\"" -> Constraint(cursorTok = Some("abc")),
     "cursor=null" -> Constraint(),
     "comparator=\"i;octet\"" -> Constraint(comparator = "octet"),
+    "comparator=\"i;\"" -> Constraint(comparator = "i"),
     "comparator=numeric" -> Constraint(comparator = "number"),
     "comparator=unspecified" -> Constraint(comparator = "default"),
     "value-comparator=\"case\"" -> Constraint(valueComparator = Some("case-insensitive")),
@@ -259,6 +260,12 @@ class ParserSpec extends AnyFunSuite {
         ParseError("only one sort-comparator clause per constraint", 26),
       "read (sort=(value) sort-comparator=(a b))" ->
         ParseError("more sort comparators than sorts", 0),
+      "read (comparator=\";\")" ->
+        ParseError("SYNTAX: ';': expected a comparator name", 6),
+      "read (value-comparator=\";;\")" ->
+        ParseError("SYNTAX: ';;': expected a comparator name", 6),
+      "read (sort=(value) sort-comparator=(\";\"))" ->
+        ParseError("SYNTAX: ';': expected a comparator name", 19),
       "read (sort=(()))" -> ParseError("SYNTAX: cannot sort by nested lists.", 12),
       "read (sort=(literal=\"q\"))" -> ParseError("cannot sort by \"q\"", 12),
       "read (sort=bogus)" -> ParseError("bad sort key 'bogus'", 11),

@@ -270,23 +270,17 @@ class PipelineSpec extends AnyFunSuite {
   test("capBuckets: hinted and unhinted regimes agree; hot bucket drops") {
     // one hot key (6 members > cap 3), two cold keys, one null key —
     // the r13 gate decides broadcast-vs-not from plan stats with NO
-    // plan-construction job; forcing maxHotBroadcastRows=0 exercises
+    // plan-construction job; forcing dedupMaxHotBroadcastRows=0 exercises
     // the unhinted (AQE-adaptive) regime against the same input
     val rows = (1L to 6L).map(i => (Some("hot"), i)) ++
       Seq((Some("c1"), 10L), (Some("c1"), 11L), (Some("c2"), 12L),
         (None: Option[String], 13L))
     val df = rows.toDF("k", "m")
-    def run(): Seq[(String, Long)] =
-      Dedup.capBuckets(df, Seq("k"), maxBucket = 3)
+    def run(conf: Conf): Seq[(String, Long)] =
+      Dedup.capBuckets(df, Seq("k"), maxBucket = 3, conf)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
-    val hinted = run()
-    val old = sys.props.put("graft.dedup.maxHotBroadcastRows", "0")
-    val unhinted = try run() finally {
-      old match {
-        case Some(v) => sys.props.put("graft.dedup.maxHotBroadcastRows", v)
-        case None => sys.props.remove("graft.dedup.maxHotBroadcastRows")
-      }
-    }
+    val hinted = run(Conf())
+    val unhinted = run(Conf(dedupMaxHotBroadcastRows = 0))
     assert(hinted == unhinted, "cap regimes must be byte-identical")
     assert(hinted.map(_._1).toSet == Set("c1", "c2"),
       "hot-bucket rows and null keys must drop")
@@ -1034,52 +1028,46 @@ class PipelineSpec extends AnyFunSuite {
   test("incremental dedup: partitioned sketch engages past the size gate, stays exact") {
     // force the gate: a 1-bit single-filter budget rejects every real
     // sketch, and a 32-bit bucket budget splits it into several buckets
-    System.setProperty("graft.bloom.maxSingleBits", "1")
-    System.setProperty("graft.bloom.bucketBits", "32")
-    try {
-      val history = Seq(
-        (1L, "seen before one"), (2L, "seen before two"),
-        (3L, "seen before three"), (4L, "seen before four"),
-        (5L, "seen before five"), (6L, "seen before six"),
-        (7L, "seen before seven"), (8L, "seen before eight")
-      ).toDF("doc_id", "text")
-      val batch = Seq(
-        (10L, "seen  BEFORE one"),    // dup modulo normalization
-        (11L, "genuinely new doc a"),
-        (12L, "genuinely new doc b"),
-        (13L, "seen before three"),   // exact dup
-        (14L, null.asInstanceOf[String]) // null fp: anti-join keeps it
-      ).toDF("doc_id", "text")
-      val before = Dedup.partitionedBloomBuilds.get()
-      val memoBefore = Dedup.bucketBloomMemo.size
-      val out = Dedup.incrementalNew(batch, history, "doc_id", "text")
-        .collect().map(_.getLong(0)).toSet
-      assert(out == Set(11L, 12L, 14L))
-      assert(Dedup.partitionedBloomBuilds.get() > before,
-        "size gate did not route to the partitioned path")
-      assert(Dedup.bucketBloomMemo.size == memoBefore + 1)
-      // second batch against the SAME history reuses the persisted
-      // bucket-filter table (no new memo entry) and stays exact
-      val batch2 = Seq(
-        (20L, "seen before five"), (21L, "another brand new doc")
-      ).toDF("doc_id", "text")
-      val out2 = Dedup.incrementalNew(batch2, history, "doc_id", "text")
-        .collect().map(_.getLong(0)).toSet
-      assert(out2 == Set(21L))
-      assert(Dedup.bucketBloomMemo.size == memoBefore + 1,
-        "repeat batch rebuilt the bucket sketch instead of reusing it")
-      // bucket tables are localCheckpointed, never registered with the
-      // cache manager: evicting one from the memo has nothing to unpersist
-      val tbl = Dedup.buildBucketFilters(Seq("a", "b").toDF("fp"), 2, 1L,
-        0.01, fullHistory = false)
-      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sharedState.cacheManager
-      assert(cm.lookupCachedData(
-        tbl.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
-    } finally {
-      System.clearProperty("graft.bloom.maxSingleBits")
-      System.clearProperty("graft.bloom.bucketBits")
-    }
+    val conf = Conf(bloomMaxSingleBits = 1, bloomBucketBits = 32)
+    val history = Seq(
+      (1L, "seen before one"), (2L, "seen before two"),
+      (3L, "seen before three"), (4L, "seen before four"),
+      (5L, "seen before five"), (6L, "seen before six"),
+      (7L, "seen before seven"), (8L, "seen before eight")
+    ).toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, "seen  BEFORE one"),    // dup modulo normalization
+      (11L, "genuinely new doc a"),
+      (12L, "genuinely new doc b"),
+      (13L, "seen before three"),   // exact dup
+      (14L, null.asInstanceOf[String]) // null fp: anti-join keeps it
+    ).toDF("doc_id", "text")
+    val before = Dedup.partitionedBloomBuilds.get()
+    val memoBefore = Dedup.bucketBloomMemo.size
+    val out = Dedup.incrementalNew(batch, history, "doc_id", "text", conf = conf)
+      .collect().map(_.getLong(0)).toSet
+    assert(out == Set(11L, 12L, 14L))
+    assert(Dedup.partitionedBloomBuilds.get() > before,
+      "size gate did not route to the partitioned path")
+    assert(Dedup.bucketBloomMemo.size == memoBefore + 1)
+    // second batch against the SAME history reuses the persisted
+    // bucket-filter table (no new memo entry) and stays exact
+    val batch2 = Seq(
+      (20L, "seen before five"), (21L, "another brand new doc")
+    ).toDF("doc_id", "text")
+    val out2 = Dedup.incrementalNew(batch2, history, "doc_id", "text", conf = conf)
+      .collect().map(_.getLong(0)).toSet
+    assert(out2 == Set(21L))
+    assert(Dedup.bucketBloomMemo.size == memoBefore + 1,
+      "repeat batch rebuilt the bucket sketch instead of reusing it")
+    // bucket tables are localCheckpointed, never registered with the
+    // cache manager: evicting one from the memo has nothing to unpersist
+    val tbl = Dedup.buildBucketFilters(Seq("a", "b").toDF("fp"), 2, 1L,
+      0.01, fullHistory = false)
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cm.lookupCachedData(
+      tbl.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
   }
 
   test("bloom memo evicts by total bytes, not entry count") {
@@ -1125,31 +1113,27 @@ class PipelineSpec extends AnyFunSuite {
     // no provider: metadata fallback, decoded=false
     val stub = Multimodal.decodeFrameSamples(spark, media, stride = 1).collect()
     assert(stub.nonEmpty && stub.forall(!_.decoded))
-    try {
-      // a crashing provider ahead of the good one must not fail the
-      // task OR mask the good provider
-      System.setProperty("graft.video.decoderClass",
-        "graft.ExplodingVideoDecoder,graft.FakeVideoDecoder")
-      val out = Multimodal.decodeFrameSamples(spark, media, stride = 1)
-        .collect().sortBy(_.frame_idx)
-      assert(out.length == 4)
-      assert(out.forall(f => f.decoded && f.doc_id == 7L &&
-        f.width == 320 && f.height == 240))
-      // MJPEG stays FIRST in the chain: a real MJPEG AVI still decodes
-      // through the built-in walker even with providers installed
-      val avi = Seq(Multimodal.MediaRow(8L, "video",
-        Multimodal.MediaFixtures.mjpegAvi(3, 24, 16, 8L))).toDF()
-      val mj = Multimodal.decodeFrameSamples(spark, avi, stride = 1).collect()
-      assert(mj.forall(f => f.decoded && f.width != 320))
-      // crashing provider ALONE: clean metadata fallback
-      System.setProperty("graft.video.decoderClass",
-        "graft.ExplodingVideoDecoder")
-      val crashed = Multimodal.decodeFrameSamples(spark, media, stride = 1)
-        .collect()
-      assert(crashed.map(f => (f.frame_idx, f.width, f.height, f.decoded))
-        .toSeq == stub.map(f => (f.frame_idx, f.width, f.height, f.decoded))
-        .toSeq)
-    } finally System.clearProperty("graft.video.decoderClass")
+    // a crashing provider ahead of the good one must not fail the
+    // task OR mask the good provider
+    val both = Seq("graft.ExplodingVideoDecoder", "graft.FakeVideoDecoder")
+    val out = Multimodal.decodeFrameSamples(spark, media, stride = 1, both)
+      .collect().sortBy(_.frame_idx)
+    assert(out.length == 4)
+    assert(out.forall(f => f.decoded && f.doc_id == 7L &&
+      f.width == 320 && f.height == 240))
+    // MJPEG stays FIRST in the chain: a real MJPEG AVI still decodes
+    // through the built-in walker even with providers installed
+    val avi = Seq(Multimodal.MediaRow(8L, "video",
+      Multimodal.MediaFixtures.mjpegAvi(3, 24, 16, 8L))).toDF()
+    val mj = Multimodal.decodeFrameSamples(spark, avi, stride = 1, both)
+      .collect()
+    assert(mj.forall(f => f.decoded && f.width != 320))
+    // crashing provider ALONE: clean metadata fallback
+    val crashed = Multimodal.decodeFrameSamples(spark, media, stride = 1,
+      Seq("graft.ExplodingVideoDecoder")).collect()
+    assert(crashed.map(f => (f.frame_idx, f.width, f.height, f.decoded))
+      .toSeq == stub.map(f => (f.frame_idx, f.width, f.height, f.decoded))
+      .toSeq)
   }
 
   test("pcm features decode non-16-bit payloads through format conversion") {

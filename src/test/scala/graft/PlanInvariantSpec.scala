@@ -154,19 +154,23 @@ class PlanInvariantSpec extends AnyFunSuite {
 
   // Index routing is cost-gated like the reference's and-iterator
   // producer choice (check-cost vs next-cost): a store under
-  // graft.indexRouteMinBytes answers `~=` fastest by scanning (one
+  // Conf.smallStoreBytes answers `~=` fastest by scanning (one
   // cached columnar stage), a big one routes through the inverted
   // index — and the routed probe has two shapes
   // (ReadPlanner.applyCandidates, graphd-iterator-fixed.c collapse):
   // a small posting list inlines as an id IN-set pushed into the scan
   // (single stage + row-group pruning, the 100 TB point-read shape);
-  // a large one broadcast-semi-joins. Tests pin each shape via the
-  // sys-props the gate and the collapse read.
-  private def withProps[T](kv: (String, String)*)(body: => T): T = {
-    kv.foreach { case (k, v) => sys.props(k) = v }
-    try body finally kv.foreach { case (k, _) => sys.props.remove(k) }
-  }
-  private val routed = "graft.indexRouteMinBytes" -> "0"
+  // a large one broadcast-semi-joins. Tests pin each shape on the
+  // adapter store under a Conf that forces the gate and the collapse;
+  // g07/g10 are the gate queries' GQL texts.
+  private def routed(fixedMax: Int) = graft.store.GraphAdapter.store(spark, dir)
+    .copy(conf = Conf(smallStoreBytes = 0, fixedMax = fixedMax))
+  private lazy val inlined = routed(Conf().fixedMax)
+  private lazy val joined = routed(fixedMax = 0)
+  private val g07 = """read (type="part" value~="gear" result=((guid value)))"""
+  private val g10 = """read (type="part" value~="gea*" result=((guid value)))"""
+  private def physical(st: graft.store.GraphStore, q: String): String =
+    graft.plan.ReadPlanner.plan(st, q).queryExecution.explainString(SimpleMode)
 
   test("~= on a small store scans — the cost gate skips the index (g07)") {
     val p = physical("g07_gql_match")
@@ -175,38 +179,30 @@ class PlanInvariantSpec extends AnyFunSuite {
   }
 
   test("~= word match collapses index candidates into the scan (g07)") {
-    withProps(routed) {
-      val p = physical("g07_gql_match")
-      assert(p.contains("id#") && (p.contains(" IN ") || p.contains("INSET")),
-        s"expected an inlined candidate id IN-set in:\n$p")
-      assert(!p.contains("LeftSemi"),
-        "small posting list should collapse, not join")
-    }
+    val p = physical(inlined, g07)
+    assert(p.contains("id#") && (p.contains(" IN ") || p.contains("INSET")),
+      s"expected an inlined candidate id IN-set in:\n$p")
+    assert(!p.contains("LeftSemi"),
+      "small posting list should collapse, not join")
   }
 
   test("~= word match falls back to the index semi-join past the cap (g07)") {
-    withProps(routed, "graft.fixedMax" -> "0") {
-      val p = physical("g07_gql_match")
-      assert(p.contains("LeftSemi"),
-        s"expected an index-candidate semi-join in:\n$p")
-      assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-        "index probe should scan the cached word index")
-    }
+    val p = physical(joined, g07)
+    assert(p.contains("LeftSemi"),
+      s"expected an index-candidate semi-join in:\n$p")
+    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
+      "index probe should scan the cached word index")
   }
 
   test("prefix glob routes through the prefix index (g10)") {
-    withProps(routed) {
-      val p = physical("g10_gql_prefix")
-      assert(p.contains("id#") && (p.contains(" IN ") || p.contains("INSET")),
-        s"expected an inlined candidate id IN-set in:\n$p")
-    }
-    withProps(routed, "graft.fixedMax" -> "0") {
-      val pj = physical("g10_gql_prefix")
-      assert(pj.contains("LeftSemi"),
-        s"expected a prefix-index semi-join in:\n$pj")
-      assert(pj.contains("StartsWith") || pj.contains("prefix#") ||
-        pj.contains("prefix ="), s"prefix probe missing in:\n$pj")
-    }
+    val p = physical(inlined, g10)
+    assert(p.contains("id#") && (p.contains(" IN ") || p.contains("INSET")),
+      s"expected an inlined candidate id IN-set in:\n$p")
+    val pj = physical(joined, g10)
+    assert(pj.contains("LeftSemi"),
+      s"expected a prefix-index semi-join in:\n$pj")
+    assert(pj.contains("StartsWith") || pj.contains("prefix#") ||
+      pj.contains("prefix ="), s"prefix probe missing in:\n$pj")
   }
 
   test("decontamination joins broadcast the benchmark side (d06)") {
@@ -228,15 +224,13 @@ class PlanInvariantSpec extends AnyFunSuite {
               |  result=((guid value)))""".stripMargin
     val unrouted = graft.plan.ReadPlanner.plan(st, q).collect()
       .map(_.toString).sorted.toSeq
-    withProps(routed) {
-      val df = graft.plan.ReadPlanner.plan(st, q)
-      val p = df.queryExecution.explainString(SimpleMode)
-      assert(p.contains(" IN ") || p.contains("INSET") ||
-        p.contains("LeftSemi"),
-        s"expected bin-index candidate pruning in:\n$p")
-      assert(df.collect().map(_.toString).sorted.toSeq == unrouted,
-        "bin-routed result diverged from the scan result")
-    }
+    val df = graft.plan.ReadPlanner.plan(inlined, q)
+    val p = df.queryExecution.explainString(SimpleMode)
+    assert(p.contains(" IN ") || p.contains("INSET") ||
+      p.contains("LeftSemi"),
+      s"expected bin-index candidate pruning in:\n$p")
+    assert(df.collect().map(_.toString).sorted.toSeq == unrouted,
+      "bin-routed result diverged from the scan result")
   }
 
   test("sequence packing never plans a global window (p03)") {

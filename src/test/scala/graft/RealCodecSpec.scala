@@ -14,7 +14,7 @@ import graft.video.H264IPcm
   *
   *  - video: [[graft.video.H264IPcmDecoder]], a from-scratch H.264
   *    decoder for Annex-B baseline I_PCM streams, discovered through
-  *    META-INF/services (no decoderClass property set here);
+  *    META-INF/services (no decoder class named here);
   *  - audio: [[graft.audio.AdpcmWavFileReader]] /
   *    [[graft.audio.AdpcmToPcmProvider]], the published IMA ADPCM
   *    codec behind the standard AudioSystem SPIs — the same discovery
@@ -23,57 +23,42 @@ import graft.video.H264IPcm
 class RealCodecSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** run `body` with no decoderClass property: the SPI must be the
-    * only video-provider source, or the test proves nothing about
-    * ServiceLoader discovery
-    */
-  private def withoutDecoderProp[A](body: => A): A = {
-    val old = System.getProperty("graft.video.decoderClass")
-    System.clearProperty("graft.video.decoderClass")
-    try body
-    finally if (old != null) System.setProperty("graft.video.decoderClass", old)
-  }
-
   test("H.264 I_PCM: the ServiceLoader-discovered provider recovers exact pixels, twice") {
     import spark.implicits._
-    withoutDecoderProp {
-      val frames = (0 until 5).map(f => H264IPcm.testFrame(2, 2, seed = 7 + f))
-      val stream = H264IPcm.encode(2, 2, frames)
-      val df = Seq((42L, "video", stream)).toDF("doc_id", "media_type", "media")
-      def run() = Multimodal.decodeFrameSamples(spark, df, stride = 2)
-        .collect().sortBy(_.frame_idx)
-      val got = run()
-      // frames 0, 2, 4 of 5, all really decoded at SPS geometry
-      assert(got.map(_.frame_idx).toSeq == Seq(0, 2, 4))
-      assert(got.forall(f => f.decoded && f.width == 32 && f.height == 32 &&
-        f.doc_id == 42L))
-      // the signature of each sampled frame equals the signature of the
-      // SAMPLES THE ENCODER WROTE — exact pixel recovery through NAL
-      // split, EBSP unescape, Exp-Golomb headers, and I_PCM payloads
-      // (testFrame plants 0x00 runs, so emulation-prevention escapes
-      // are exercised in both directions)
-      val expected = Seq(0, 2, 4).map(i => H264IPcm.pixelSig(frames(i)))
-      assert(got.map(_.frame_sig).toSeq == expected)
-      // decode-twice determinism across fresh plans
-      assert(run().map(_.frame_sig).toSeq == expected)
-    }
+    val frames = (0 until 5).map(f => H264IPcm.testFrame(2, 2, seed = 7 + f))
+    val stream = H264IPcm.encode(2, 2, frames)
+    val df = Seq((42L, "video", stream)).toDF("doc_id", "media_type", "media")
+    def run() = Multimodal.decodeFrameSamples(spark, df, stride = 2)
+      .collect().sortBy(_.frame_idx)
+    val got = run()
+    // frames 0, 2, 4 of 5, all really decoded at SPS geometry
+    assert(got.map(_.frame_idx).toSeq == Seq(0, 2, 4))
+    assert(got.forall(f => f.decoded && f.width == 32 && f.height == 32 &&
+      f.doc_id == 42L))
+    // the signature of each sampled frame equals the signature of the
+    // SAMPLES THE ENCODER WROTE — exact pixel recovery through NAL
+    // split, EBSP unescape, Exp-Golomb headers, and I_PCM payloads
+    // (testFrame plants 0x00 runs, so emulation-prevention escapes
+    // are exercised in both directions)
+    val expected = Seq(0, 2, 4).map(i => H264IPcm.pixelSig(frames(i)))
+    assert(got.map(_.frame_sig).toSeq == expected)
+    // decode-twice determinism across fresh plans
+    assert(run().map(_.frame_sig).toSeq == expected)
   }
 
   test("H.264 provider is strictly validating: a non-subset stream falls through to metadata") {
     import spark.implicits._
-    withoutDecoderProp {
-      val stream = H264IPcm.encode(1, 1, Seq(H264IPcm.testFrame(1, 1, 3)))
-      // corrupt the SPS profile byte (offset 4 start code + 1 NAL
-      // header): profile 100 = High, outside the provider's subset
-      val bad = stream.clone()
-      bad(5) = 100.toByte
-      assert(H264IPcm.decode(bad, 1).isEmpty)
-      val df = Seq((7L, "video", bad)).toDF("doc_id", "media_type", "media")
-      val got = Multimodal.decodeFrameSamples(spark, df, stride = 1).collect()
-      // all-or-nothing: no half-real mix — every row is the metadata
-      // fallback (decoded=false, sig 0)
-      assert(got.nonEmpty && got.forall(f => !f.decoded && f.frame_sig == 0L))
-    }
+    val stream = H264IPcm.encode(1, 1, Seq(H264IPcm.testFrame(1, 1, 3)))
+    // corrupt the SPS profile byte (offset 4 start code + 1 NAL
+    // header): profile 100 = High, outside the provider's subset
+    val bad = stream.clone()
+    bad(5) = 100.toByte
+    assert(H264IPcm.decode(bad, 1).isEmpty)
+    val df = Seq((7L, "video", bad)).toDF("doc_id", "media_type", "media")
+    val got = Multimodal.decodeFrameSamples(spark, df, stride = 1).collect()
+    // all-or-nothing: no half-real mix — every row is the metadata
+    // fallback (decoded=false, sig 0)
+    assert(got.nonEmpty && got.forall(f => !f.decoded && f.frame_sig == 0L))
   }
 
   test("IMA ADPCM WAV: the AudioSystem SPIs drive pcmFeatures with exact codec output") {

@@ -83,7 +83,6 @@ object SessionHarness {
     var pendingReset = false
     // any heredoc marker works (david_4 uses <<END)
     val heredoc = """<<-?\s*'?([A-Za-z_]\w*)'?\s*$""".r
-    val inRedir = """<\s*(\S+\.in)""".r
     def beginBlock(launch: String): Unit = {
       if (pendingReset && sawBlock) body += ResetMark
       pendingReset = false; sawBlock = true

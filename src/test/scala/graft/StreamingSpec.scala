@@ -396,47 +396,41 @@ class StreamingSpec extends AnyFunSuite {
     // force the bucketed sketch with a tiny single-filter gate (and a
     // small bucket budget so numBuckets > 1 — several buckets actually
     // merge per batch)
-    System.setProperty("graft.bloom.maxSingleBits", "1")
-    System.setProperty("graft.bloom.bucketBits", "512")
-    try {
-      val base = Files.createTempDirectory("graft_sdedup_part").toString
-      val feed = s"$base/feed"; val acc = s"$base/accepted"
-      Seq((10L, "aaa"), (20L, "bbb"), (30L, "ccc"), (40L, "seed text"))
-        .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f1")
-      Seq((50L, "aaa"), (60L, "fresh two"))
-        .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f2")
-      val seed = Seq((1L, "seed text")).toDF("doc_id", "text")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      // simulate the crash the retry contract closes: ONE of f1's
-      // three acceptable rows lands before the stream ever ran
-      import graft.operators.TextAnalysis
-      Seq((10L, "aaa")).toDF("doc_id", "text")
-        .select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp"))
-        .coalesce(1).write.mode("append").parquet(acc)
-      val part0 = graft.operators.Dedup.partitionedBloomBuilds.get()
-      // full redelivery under a fresh checkpoint (worst-case
-      // at-least-once): the landed row must classify as history, the
-      // lost ones must backfill, the partitioned path must engage
-      val in = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$feed/f*")
-      Replica.dedupStream(in, "doc_id", "text", seed, acc, s"$base/ckpt")
-        .awaitTermination()
-      assert(graft.operators.Dedup.partitionedBloomBuilds.get() > part0,
-        "bucketed sketch never engaged — the gate sysprops lost their teeth")
-      val got = spark.read.parquet(acc).select("doc_id")
-        .collect().map(_.getLong(0)).sorted.toSeq
-      // 10 pre-landed; 20/30 backfilled; 40 = seed dup; 50 = dup of
-      // 10's fp (cross-batch, against the pre-landed row); 60 fresh
-      assert(got == Seq(10L, 20L, 30L, 60L), s"got $got")
-    } finally {
-      System.clearProperty("graft.bloom.maxSingleBits")
-      System.clearProperty("graft.bloom.bucketBits")
-    }
+    val conf = Conf(bloomMaxSingleBits = 1, bloomBucketBits = 512)
+    val base = Files.createTempDirectory("graft_sdedup_part").toString
+    val feed = s"$base/feed"; val acc = s"$base/accepted"
+    Seq((10L, "aaa"), (20L, "bbb"), (30L, "ccc"), (40L, "seed text"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f1")
+    Seq((50L, "aaa"), (60L, "fresh two"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f2")
+    val seed = Seq((1L, "seed text")).toDF("doc_id", "text")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType)))
+    // simulate the crash the retry contract closes: ONE of f1's
+    // three acceptable rows lands before the stream ever ran
+    import graft.operators.TextAnalysis
+    Seq((10L, "aaa")).toDF("doc_id", "text")
+      .select(col("doc_id"),
+        TextAnalysis.fingerprint(col("text")).as("fp"))
+      .coalesce(1).write.mode("append").parquet(acc)
+    val part0 = graft.operators.Dedup.partitionedBloomBuilds.get()
+    // full redelivery under a fresh checkpoint (worst-case
+    // at-least-once): the landed row must classify as history, the
+    // lost ones must backfill, the partitioned path must engage
+    val in = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$feed/f*")
+    Replica.dedupStream(in, "doc_id", "text", seed, acc, s"$base/ckpt",
+      conf = conf).awaitTermination()
+    assert(graft.operators.Dedup.partitionedBloomBuilds.get() > part0,
+      "bucketed sketch never engaged — the forced Conf lost its teeth")
+    val got = spark.read.parquet(acc).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    // 10 pre-landed; 20/30 backfilled; 40 = seed dup; 50 = dup of
+    // 10's fp (cross-batch, against the pre-landed row); 60 fresh
+    assert(got == Seq(10L, 20L, 30L, 60L), s"got $got")
   }
 
   test("dedupStream: a crash-retried batch with partially-landed rows backfills exactly the lost ones") {

@@ -114,12 +114,10 @@ class VecMathSpec extends AnyFunSuite {
       assert(dsu == gx, s"trial $trial")
       // star alternation on the same random multigraph
       // (self-loops/parallels included by chance)
-      System.setProperty("graft.cc.starRows", "0")
-      try {
-        val star = Analytics.connectedComponentsDSU(nodes, edges, fanIn = 2)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(star == gx, s"star trial $trial")
-      } finally System.clearProperty("graft.cc.starRows")
+      val star = Analytics.connectedComponentsDSU(nodes, edges, fanIn = 2,
+          Conf(ccStarRows = Some(0)))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(star == gx, s"star trial $trial")
     }
   }
 }
