@@ -12,10 +12,9 @@ package graft
   *    fails both passes reports -1; `value` (`total`) sums the rest.
   *  - `qps_*`: serving throughput, each the best of three windows.
   *    `qps_simple`/`qps_sorted` drive 32 concurrent clients through
-  *    [[graft.serve.PointServer]], the `_sharded` pair through a
-  *    3-shard [[graft.serve.ShardRouter]], `qps_spark_path` through
-  *    the Catalyst plan, and `qps_point_batched` resolves 1000 guids
-  *    in one plan.
+  *    [[graft.serve.PointServer]], `qps_spark_path` through the
+  *    Catalyst plan, and `qps_point_batched` resolves 1000 guids in
+  *    one plan.
   *
   * Bench does not classify host noise: comparing two builds is the
   * job of `perfbench/run.py`'s paired runs.
@@ -152,22 +151,6 @@ object Bench {
     // comparator-key path with a page cap
     val sortedQ = (i: Int) =>
       s"""read (type="customer" value~="${1 + i % 997}" sort=value pagesize=10 result=((guid value)))"""
-    // the SHARD ROUTER (3 shards): the serving tier's horizontal story
-    // — each shard holds 1/n of the corpus (plus endpoint-co-located
-    // links), the router scatter-gathers and merges by id.
-    // ShardRouterSpec gates equivalence; this measures routing
-    // overhead. SERVING.md carries the measured scatter-tax model: on
-    // ONE box an unsorted thin read pays k-1 extra fixed probe costs
-    // plus the merge against a probe that is already ~3-7µs, so the
-    // unsorted routed figure structurally trails the single snapshot;
-    // the tier's win is horizontal capacity (per-node memory 1/n) and
-    // the sorted path's per-shard n/k·log(n/k) + page-prefix cap.
-    val sharded = graft.serve.ShardRouter.build(stWarm, 3)
-    def answerSharded(q: String): Long =
-      graft.serve.ShardRouter.serve(sharded, q) match {
-        case Some(s) => s.rows.length.toLong
-        case None => answer(q)
-      }
     // batched point-read throughput: 1000 guid lookups in ONE plan —
     // the way a Spark engine actually serves bulk point reads. Each
     // resolved id corresponds to one reference "simple query".
@@ -194,18 +177,14 @@ object Bench {
     // windows interpreting; then drop the query suite's garbage so the
     // timed windows aren't paying its GC
     drive(256, i => answer(simpleQ(i)))
-    drive(128, i => answerSharded(simpleQ(i)))
     drive(128, i => answer(sortedQ(i)))
-    drive(128, i => answerSharded(sortedQ(i)))
     sparkPathRun(2)
     System.gc()
 
     val windows = (1 to 3).map { _ =>
       val figs = Seq(
         "qps_simple" -> drive(4096, i => answer(simpleQ(i))),
-        "qps_simple_sharded" -> drive(2048, i => answerSharded(simpleQ(i))),
         "qps_sorted" -> drive(2048, i => answer(sortedQ(i))),
-        "qps_sorted_sharded" -> drive(2048, i => answerSharded(sortedQ(i))),
         "qps_spark_path" -> sparkPathRun(8),
         "qps_point_batched" -> batchRun())
       System.gc()

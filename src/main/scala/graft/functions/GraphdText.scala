@@ -987,13 +987,4 @@ object GraphdText {
     flush()
     out.toSeq
   }
-
-  /** three-way compare under a named comparator */
-  def compare(comparator: String, a: String, b: String): Int = {
-    val (ka, kb) = (sortKey(comparator, a), sortKey(comparator, b))
-    if (ka == null && kb == null) 0
-    else if (ka == null) -1
-    else if (kb == null) 1
-    else ka.compareTo(kb)
-  }
 }

@@ -1,8 +1,8 @@
 package graft.gql
 
 /** The columns a read's result pattern yields, named one way on every
-  * read path: the Catalyst plan, the snapshot ([[graft.serve.PointServer]])
-  * and the shard router.
+  * read path: the Catalyst plan and the snapshot
+  * ([[graft.serve.PointServer]]).
   */
 object ResultColumns {
   /** `((guid value))`, the result of a read without `result=` */

@@ -89,12 +89,12 @@ object ReadPlanner {
     * ServeSpec gates both as answering alike.
     */
   private def fromSnapshot(store: GraphStore, c: Constraint): Option[DataFrame] =
-    if (Cursor.refIterCursor.isDefined || !PointServer.servableFor(c)) None
+    if (Cursor.refIterCursor.isDefined) None
     else for {
+      proj <- PointServer.vet(c)
       ix <- store.view.pointIndex
-      proj <- PointServer.flatFor(c)
       schema <- snapshotSchema(proj)
-      served <- PointServer.serve(ix, c)
+      served <- PointServer.answer(ix, c, proj, PointServer.wordProbeKeys(c))
     } yield {
       val rows = new java.util.ArrayList[Row](served.rows.length)
       served.rows.foreach(r => rows.add(Row.fromSeq(r.toSeq)))

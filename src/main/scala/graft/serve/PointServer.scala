@@ -34,17 +34,12 @@ import graft.store.{GraphStore, TypeVocab}
   * Catalyst plan. Correctness is gated by ServeSpec: every servable
   * query must answer identically through both paths.
   *
-  * Callers: the serving entry points below and [[ShardRouter]], and
-  * `ReadPlanner.plan`, which answers servable reads on a store that
-  * carries the driver-resident mirror from the store's own snapshot
+  * Callers: the serving entry points below, and `ReadPlanner.plan`,
+  * which answers servable reads on a store that carries the
+  * driver-resident mirror from the store's own snapshot
   * ([[graft.store.Source.View.pointIndex]]) instead of running a Spark
-  * job.
-  *
-  * Scale: one snapshot holds one shard's hot set (the reference itself
-  * caps a database at 16G primitives, libaddb/addb-istore.h:22). At
-  * 100 TB the same structure shards by id-range/type across serving
-  * nodes, each fed by its partition of the Spark table; nothing here
-  * assumes a global view beyond the shard it serves.
+  * job. Both vet a read once ([[vet]]) and hand its [[Projection]] to
+  * the one serving function, [[answer]].
   */
 object PointServer {
 
@@ -64,29 +59,16 @@ object PointServer {
       val byScope: java.util.HashMap[Long, Array[Int]],
       val words: java.util.TreeMap[String, Array[Int]],
       /** `type=` resolution and the `type` result */
-      val types: TypeVocab,
-      /** home-shard predicate: a sharded snapshot holds FOREIGN rows
-        * for locality (links live in their endpoints' shards too, so
-        * 1-hop child checks never leave the shard) but only answers
-        * for rows it OWNS — the router's dedup contract
-        */
-      val home: Long => Boolean = _ => true) {
+      val types: TypeVocab) {
     def size: Int = ids.length
     def posOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-    def withTypes(t: TypeVocab): Index =
-      new Index(ids, typeguid, name, value, left, right, scope, datatype,
-        timestamp, byType, byLeft, byRight, byScope, words, t, home)
-    def withHome(h: Long => Boolean): Index =
-      new Index(ids, typeguid, name, value, left, right, scope, datatype,
-        timestamp, byType, byLeft, byRight, byScope, words, types, h)
   }
 
   /** Build the snapshot from the store's current view. A store that
     * carries the driver-resident mirror hands over its own snapshot
     * ([[graft.store.Source.View.pointIndex]], no Spark job); any other
     * store pays one collect of the columns the serving paths need (the
-    * materialized-view refresh; on a cluster this is the per-shard
-    * executor-side build).
+    * materialized-view refresh).
     */
   def build(store: GraphStore): Index = store.view.pointIndex.getOrElse {
     import org.apache.spark.sql.functions.col
@@ -174,15 +156,7 @@ object PointServer {
   /** A servable read answered from the snapshot: column names + rows.
     * None = not servable here; run the Catalyst plan instead.
     */
-  final case class Served(columns: Seq[String], rows: Seq[Array[Any]],
-      /** candidate id per row (empty for count results) — the shard
-        * router's merge key */
-      rowIds: Seq[Long] = Nil,
-      /** per-row comparator sort keys (only when the query sorts AND
-        * the caller asked — the shard router's k-way merge keys; each
-        * inner array has one pre-computed key per sort spec, null
-        * meaning nulls-last) */
-      sortKeys: Seq[Array[String]] = Nil)
+  final case class Served(columns: Seq[String], rows: Seq[Array[Any]])
 
   /** text entry — parse + vetting come from the prepared-statement
     * cache (StatementCache): a steady-state server re-answers the same
@@ -191,112 +165,45 @@ object PointServer {
     */
   def serve(ix: Index, query: String): Option[Served] = {
     val p = StatementCache.prepared(query)
-    p.single match {
-      case Some(proj) =>
-        serveVetted(ix, p.c, proj, emitSortKeys = false, p.wordKeys)
-      case None => None
-    }
+    p.proj.flatMap(answer(ix, p.c, _, p.wordKeys))
   }
 
   def serve(ix: Index, c: Constraint): Option[Served] =
-    serve(ix, c, emitSortKeys = false)
-
-  def serve(ix: Index, c: Constraint, emitSortKeys: Boolean)
-      : Option[Served] = {
-    if (!servableFor(c)) return None
-    flatFor(c) match {
-      case Some(proj) => serveVetted(ix, c, proj, emitSortKeys)
-      case None => None
-    }
-  }
-
-  /** Compare two pre-computed sort-key rows under the sort directions:
-    * nulls sort LAST under EITHER direction (the Spark path's
-    * asc_nulls_last/desc_nulls_last) — only the non-null comparison
-    * inverts for descending keys. 0 = equal; callers tiebreak by id.
-    * The ONE ordering shared by the snapshot's own sort and the shard
-    * router's k-way merge — two copies would drift.
-    */
-  private[serve] def keyCompare(ka0: Array[String], kb0: Array[String],
-      dirs: Array[Boolean]): Int = {
-    var r = 0; var k = 0
-    while (r == 0 && k < ka0.length) {
-      val ka = ka0(k); val kb = kb0(k)
-      r =
-        if (ka == null && kb == null) 0
-        else if (ka == null) 1
-        else if (kb == null) -1
-        else {
-          val c0 = ka.compareTo(kb)
-          if (dirs(k)) c0 else -c0
-        }
-      k += 1
-    }
-    r
-  }
-
-  /** query-level servability, index-independent (router and
-    * ReadPlanner pre-check)
-    */
-  private[graft] def servableFor(c: Constraint): Boolean = servableRoot(c)
+    vet(c).flatMap(proj => answer(ix, c, proj, wordProbeKeys(c)))
 
   /** A servable result pattern's leaves and their column names
     * ([[ResultColumns]]), worked out once per query shape.
     */
   final case class Projection(flat: Seq[Pattern], cols: Seq[String])
 
-  /** the projection if every result leaf is servable (router and
-    * ReadPlanner pre-check; shared with the single-snapshot entry)
+  /** Index-independent vetting, once per read: the projection if the
+    * query and every result leaf are servable from a snapshot, None if
+    * the read needs the Catalyst plan.
     */
-  private[graft] def flatFor(c: Constraint): Option[Projection] = {
-    val flat = ResultColumns.leaves(c.result.getOrElse(ResultColumns.default))
-    // the Catalyst plan renders a link's meta against the root's own
-    // linkage ("<-" under a `(<- ...)` root); fieldOf renders "->"
-    def meta(p: Pattern): Boolean = p match {
-      case FieldPat("meta") => true
-      case PickPat(items) => items.exists(meta)
-      case _ => false
-    }
-    val rightLinked = c.effectiveLinkage.contains(ChildPointsToParent("right"))
-    if (flat.exists(p => !servablePat(p) || (rightLinked && meta(p)))) None
-    else Some(Projection(flat, ResultColumns.names(flat)))
-  }
-
-  /** the per-shard entry: query-level servability and result-pattern
-    * flattening already done ONCE by the caller (the shard router
-    * fans one query out to n shards — per-shard re-validation is pure
-    * overhead on the point-read hot path)
-    */
-  private[serve] def serveVetted(ix: Index, c: Constraint,
-      proj: Projection, emitSortKeys: Boolean,
-      wordKeys: Seq[Seq[Either[String, String]]] = null): Option[Served] = {
-    val flat = proj.flat
-    positionsVetted(ix, c, flat, wordKeys).map { case (out, keyed) =>
-      if (flat == Seq(CountPat))
-        Served(Seq("count"), Seq(Array[Any](out.length.toLong)))
-      else {
-        val rows = out.toSeq.map(p => flat.map(f => fieldOf(ix, f, p)).toArray)
-        val sks =
-          if (emitSortKeys && keyed != null) keyed.toSeq
-          else Nil
-        Served(proj.cols, rows, out.toSeq.map(p => ix.ids(p)), sks)
+  private[graft] def vet(c: Constraint): Option[Projection] =
+    if (!servableRoot(c)) None
+    else {
+      val flat = ResultColumns.leaves(c.result.getOrElse(ResultColumns.default))
+      // the Catalyst plan renders a link's meta against the root's own
+      // linkage ("<-" under a `(<- ...)` root); fieldOf renders "->"
+      def meta(p: Pattern): Boolean = p match {
+        case FieldPat("meta") => true
+        case PickPat(items) => items.exists(meta)
+        case _ => false
       }
+      val rightLinked = c.effectiveLinkage.contains(ChildPointsToParent("right"))
+      if (flat.exists(p => !servablePat(p) || (rightLinked && meta(p)))) None
+      else Some(Projection(flat, ResultColumns.names(flat)))
     }
-  }
 
-  /** Stage 1 of [[serveVetted]]: accepted snapshot POSITIONS in final
-    * (sorted, paged) order, plus the per-row comparator keys when the
-    * query sorts — no row materialization. The shard router merges on
-    * these and materializes ONLY the global page's winners, so a
-    * scatter over k shards allocates one page of row arrays instead of
-    * k prefix-pages (the allocation term the 32-thread scatter tax
-    * measured). None = not servable from this snapshot.
+  /** Answer a vetted read from the snapshot: accepted positions, then
+    * sort, start and pagesize, then one row per position. `wordKeys` is
+    * [[wordProbeKeys]] of `c` (cached per text by StatementCache).
+    * None = a sort key the snapshot cannot order by.
     */
-  private[serve] def positionsVetted(ix: Index, c: Constraint,
-      flat: Seq[Pattern],
-      wordKeys: Seq[Seq[Either[String, String]]] = null)
-      : Option[(Array[Int], Array[Array[String]])] = {
-    val wk = if (wordKeys != null) wordKeys else wordProbeKeys(c)
+  private[graft] def answer(ix: Index, c: Constraint, proj: Projection,
+      wordKeys: Seq[Seq[Either[String, String]]]): Option[Served] = {
+    val flat = proj.flat
     // unsorted paged reads are FULLY LAZY: candidates pull through the
     // and-cursor (leapfrog intersect) and the accept loop stops at
     // start+pagesize accepted rows — the reference's iterator
@@ -312,83 +219,89 @@ object PointServer {
             Int.MaxValue.toLong).toInt, 0)
         val buf = new scala.collection.mutable.ArrayBuilder.ofInt
         var n = 0
-        val producers = producersOf(ix, c, wk)
+        val producers = producersOf(ix, c, wordKeys)
         if (producers.isEmpty) {
           // no index prunes: bounded scan of the snapshot
           var p = 0
           while (p < ix.size && n < cap) {
-            if (ix.home(ix.ids(p)) && accepts(ix, c, p)) { buf += p; n += 1 }
+            if (accepts(ix, c, p)) { buf += p; n += 1 }
             p += 1
           }
         } else {
           val cur = new AndCursor(producers.toArray)
           var p = cur.next()
           while (p >= 0 && n < cap) {
-            if (ix.home(ix.ids(p)) && accepts(ix, c, p)) { buf += p; n += 1 }
+            if (accepts(ix, c, p)) { buf += p; n += 1 }
             p = cur.next()
           }
         }
         buf.result()
-      } else {
-        val cand = candidates(ix, c, wk) match {
-          case Some(ps) => ps
-          case None => return None
-        }
-        cand.filter(p => ix.home(ix.ids(p)) && accepts(ix, c, p))
-      }
+      } else candidates(ix, c, wordKeys).filter(p => accepts(ix, c, p))
     // root count result: candidate count, pre-sort/pre-page
-    if (isCount) return Some((out, null))
-    // sort: comparator keys over value/name, id tiebreak. Keys are
-    // MATERIALIZED once per row before sorting — a sortWith that calls
-    // the comparator normalization per COMPARISON would recompute each
-    // row's key O(log n) times on the serving hot path.
-    var keyed: Array[Array[String]] = null // parallel to out, post-sort
-    if (c.sort.nonEmpty || c.pagesize.isDefined || c.start.isDefined) {
-      val keys = c.sort.map { sk =>
-        val cmp = sk.comparator.getOrElse(c.comparator)
-        sk.pat match {
-          case FieldPat("value") => (p: Int) => keyOrNull(cmp, ix.value(p))
-          case FieldPat("name") => (p: Int) => keyOrNull(cmp, ix.name(p))
-          case FieldPat("guid") => (p: Int) => f"${ix.ids(p)}%019d"
-          case FieldPat("timestamp") => (p: Int) => f"${ix.timestamp(p)}%019d"
-          case _ => return None
-        }
-      }.toArray
-      if (c.sort.nonEmpty) {
-        var rows = out.map(p => (p, keys.map(_(p))))
-        // number-comparator sorts over string fields drop rows whose
-        // key is null or non-decoding ("~"-prefixed) from the sorted
-        // set — mirror of ReadPlanner.shapeRoot's filter
-        // (sortnumber/david_10)
-        c.sort.zipWithIndex.foreach { case (sk, k) =>
-          val cmp = sk.comparator.getOrElse(c.comparator)
-          val stringField = sk.pat match {
-            case FieldPat("value") | FieldPat("name") => true
-            case _ => false
-          }
-          if (cmp == "number" && stringField)
-            rows = rows.filter { case (_, ks) =>
-              ks(k) != null && !ks(k).startsWith("~")
-            }
-        }
-        val dirs = c.sort.map(_.ascending).toArray
-        val sorted = rows.sortWith { case ((a, ka0), (b, kb0)) =>
-          val r = keyCompare(ka0, kb0, dirs)
-          if (r != 0) r < 0 else ix.ids(a) < ix.ids(b)
-        }
-        out = sorted.map(_._1)
-        keyed = sorted.map(_._2)
+    if (isCount) return Some(Served(Seq("count"), Seq(Array[Any](out.length.toLong))))
+    if (c.sort.nonEmpty) sorted(ix, c, out) match {
+      case Some(o) => out = o
+      case None => return None
+    }
+    c.start.foreach(s => out = out.drop(s.toInt))
+    c.pagesize.foreach(ps => out = out.take(ps.toInt))
+    Some(Served(proj.cols, out.toSeq.map(p => flat.map(f => fieldOf(ix, f, p)).toArray)))
+  }
+
+  /** `out` in the query's sort order: comparator keys over value/name,
+    * nulls LAST under EITHER direction (the Spark path's
+    * asc_nulls_last/desc_nulls_last — only the non-null comparison
+    * inverts for descending keys), id tiebreak. Keys are MATERIALIZED
+    * once per row before sorting — a sortWith that calls the comparator
+    * normalization per COMPARISON would recompute each row's key
+    * O(log n) times on the serving hot path. None = a sort field the
+    * snapshot has no key for.
+    */
+  private def sorted(ix: Index, c: Constraint, out: Array[Int]): Option[Array[Int]] = {
+    val keys = c.sort.map { sk =>
+      val cmp = sk.comparator.getOrElse(c.comparator)
+      sk.pat match {
+        case FieldPat("value") => (p: Int) => keyOrNull(cmp, ix.value(p))
+        case FieldPat("name") => (p: Int) => keyOrNull(cmp, ix.name(p))
+        case FieldPat("guid") => (p: Int) => f"${ix.ids(p)}%019d"
+        case FieldPat("timestamp") => (p: Int) => f"${ix.timestamp(p)}%019d"
+        case _ => return None
       }
+    }.toArray
+    var rows = out.map(p => (p, keys.map(_(p))))
+    // number-comparator sorts over string fields drop rows whose key is
+    // null or non-decoding ("~"-prefixed) from the sorted set — mirror
+    // of ReadPlanner.shapeRoot's filter (sortnumber/david_10)
+    c.sort.zipWithIndex.foreach { case (sk, k) =>
+      val cmp = sk.comparator.getOrElse(c.comparator)
+      val stringField = sk.pat match {
+        case FieldPat("value") | FieldPat("name") => true
+        case _ => false
+      }
+      if (cmp == "number" && stringField)
+        rows = rows.filter { case (_, ks) => ks(k) != null && !ks(k).startsWith("~") }
     }
-    c.start.foreach { s =>
-      out = out.drop(s.toInt)
-      if (keyed != null) keyed = keyed.drop(s.toInt)
+    val dirs = c.sort.map(_.ascending).toArray
+    def keyCompare(ka0: Array[String], kb0: Array[String]): Int = {
+      var r = 0; var k = 0
+      while (r == 0 && k < ka0.length) {
+        val ka = ka0(k); val kb = kb0(k)
+        r =
+          if (ka == null && kb == null) 0
+          else if (ka == null) 1
+          else if (kb == null) -1
+          else {
+            val c0 = ka.compareTo(kb)
+            if (dirs(k)) c0 else -c0
+          }
+        k += 1
+      }
+      r
     }
-    c.pagesize.foreach { ps =>
-      out = out.take(ps.toInt)
-      if (keyed != null) keyed = keyed.take(ps.toInt)
-    }
-    Some((out, keyed))
+    Some(rows.sortWith { case ((a, ka0), (b, kb0)) =>
+      val r = keyCompare(ka0, kb0)
+      if (r != 0) r < 0 else ix.ids(a) < ix.ids(b)
+    }.map(_._1))
   }
 
   // ---------- eligibility ----------
@@ -468,9 +381,8 @@ object PointServer {
     * exponential-probe + binary-search the big one from a moving lower
     * bound — O(small * log(big)) instead of O(big). This is the serving
     * tier's hot loop: a selective type list intersecting a fat word
-    * posting list (fatter still per shard, where co-located links
-    * duplicate postings) must pay for the SMALL side, or the scatter
-    * path's per-shard cost tracks corpus size instead of shard size.
+    * posting list must pay for the SMALL side, or a point read's cost
+    * tracks corpus size instead of answer size.
     */
   private def intersectSorted(a0: Array[Int], b0: Array[Int]): Array[Int] = {
     val (a, b) = if (a0.length <= b0.length) (a0, b0) else (b0, a0)
@@ -509,19 +421,13 @@ object PointServer {
     java.util.Arrays.copyOf(out, w)
   }
 
-  /** intersect every available access path — the reference's
-    * and-iterator over index streams (graphd/graphd-iterator-and.c):
-    * each producer is a sorted id stream, the AND is their merge; the
-    * per-candidate check then re-verifies everything exactly
-    */
   /** Word/prefix index probe keys for the value predicates — one list
     * of keys per pred that can prune soundly (Left = exact word,
     * Right = prefix range). Constraint-only (regex segmentation of the
     * pattern, no index access), so the prepared-statement cache
-    * derives it ONCE per query shape instead of once per shard per
-    * call on the scatter hot path.
+    * derives it ONCE per query shape instead of once per call.
     */
-  private[serve] def wordProbeKeys(c: Constraint)
+  private[graft] def wordProbeKeys(c: Constraint)
       : Seq[Seq[Either[String, String]]] = {
     val fromMatch = c.value.filter(_.op == OpMatch).flatMap { p =>
       // a null alternative admits NULL-VALUED rows, which no word
@@ -608,8 +514,13 @@ object PointServer {
     producers
   }
 
+  /** intersect every available access path — the reference's
+    * and-iterator over index streams (graphd/graphd-iterator-and.c):
+    * each producer is a sorted id stream, the AND is their merge; the
+    * per-candidate check then re-verifies everything exactly
+    */
   private def candidates(ix: Index, c: Constraint,
-      wordKeys: Seq[Seq[Either[String, String]]]): Option[Array[Int]] = {
+      wordKeys: Seq[Seq[Either[String, String]]]): Array[Int] = {
     val producers = producersOf(ix, c, wordKeys)
     if (producers.nonEmpty) {
       // smallest-first so each merge shrinks the running set fastest
@@ -619,11 +530,10 @@ object PointServer {
       while (k < sorted.length && acc.nonEmpty) {
         acc = intersectSorted(acc, sorted(k)); k += 1
       }
-      Some(acc)
+      acc
     }
-    // full scan of the snapshot — correct, but not a point read; only
-    // sensible for small shards
-    else Some(Array.range(0, ix.size))
+    // full scan of the snapshot — correct, but not a point read
+    else Array.range(0, ix.size)
   }
 
   /** Pull-based sorted intersect over the candidate producers — the
@@ -632,9 +542,8 @@ object PointServer {
     * its batch analog). Leapfrog with galloping advance: each next()
     * costs O(producers · log(posting)) amortized, so an early-
     * terminating consumer (an unsorted paged read) pays for the PAGE,
-    * not for materializing the full intersection — at a 100 TB shard's
-    * posting sizes the eager intersect would dominate every paged
-    * point read.
+    * not for materializing the full intersection — at large posting
+    * sizes the eager intersect would dominate every paged point read.
     */
   private[graft] final class AndCursor(producers: Array[Array[Int]]) {
     private val pos = new Array[Int](producers.length)
@@ -830,7 +739,7 @@ object PointServer {
 
   // ---------- projection ----------
 
-  private[serve] def fieldOf(ix: Index, p: Pattern, pos: Int): Any = p match {
+  private def fieldOf(ix: Index, p: Pattern, pos: Int): Any = p match {
     case FieldPat("guid") => ix.ids(pos)
     case FieldPat("typeguid") => if (ix.typeguid(pos) < 0) null else ix.typeguid(pos)
     case FieldPat("name") => ix.name(pos)

@@ -14,9 +14,9 @@ import graft.gql.{Constraint, Parser}
   * steady-state server answering repeated query shapes (the
   * reference's serving regime, doc/a-brief-tour-of-graphd.md:197-204)
   * would re-derive the same AST and the same vetting millions of
-  * times. One lookup replaces parse + servableFor + result-pattern
-  * flattening + the router's locality analysis. Everything cached is
-  * an immutable AST, safe to share across client threads.
+  * times. One lookup replaces parse + vetting (servability and
+  * result-pattern flattening) + the word-key analysis. Everything
+  * cached is an immutable AST, safe to share across client threads.
   *
   * Bounded by EPOCH FLUSH rather than LRU: hits are lock-free
   * (ConcurrentHashMap.get); when the map passes `cap`
@@ -29,22 +29,16 @@ import graft.gql.{Constraint, Parser}
 private[graft] object StatementCache {
   private final val cap = 1 << 16
 
-  /** one parse, every serving plan derived from it:
-    *  - `single`: the snapshot tier's result leaves and column names
+  /** one parse and the serving plan derived from it:
+    *  - `proj`: the snapshot's result leaves and column names
     *    (None = not servable there; run the Catalyst plan)
-    *  - `routed`: the shard router's scatter plan (None = non-local
-    *    query class; fall back to the single snapshot / Catalyst),
-    *    derived on first use, so a statement only the single snapshot
-    *    serves never pays the router's analysis
+    *  - `wordKeys`: word/prefix probe keys — the regex-heavy constraint
+    *    analysis the candidate producer needs
     */
   final class Prepared(
       val c: Constraint,
-      val single: Option[PointServer.Projection],
-      /** word/prefix probe keys — the regex-heavy constraint analysis
-        * the candidate producer needs, derived once per query shape */
-      val wordKeys: Seq[Seq[Either[String, String]]]) {
-    lazy val routed: Option[ShardRouter.RoutedPlan] = ShardRouter.routedPlan(c)
-  }
+      val proj: Option[PointServer.Projection],
+      val wordKeys: Seq[Seq[Either[String, String]]])
 
   private val map = new ConcurrentHashMap[String, Prepared]()
 
@@ -53,9 +47,7 @@ private[graft] object StatementCache {
     if (hit != null) hit
     else {
       val c = Parser.parseRead(q)
-      val single =
-        if (PointServer.servableFor(c)) PointServer.flatFor(c) else None
-      val p = new Prepared(c, single, PointServer.wordProbeKeys(c))
+      val p = new Prepared(c, PointServer.vet(c), PointServer.wordProbeKeys(c))
       if (map.size >= cap) map.clear()
       map.put(q, p)
       p

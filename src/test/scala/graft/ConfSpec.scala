@@ -41,11 +41,10 @@ class ConfSpec extends AnyFunSuite {
     val st = fx.copy(conf = conf)
     val dir = Files.createTempDirectory("graft_conf").toString
     val batch = spark.createDataFrame(Seq(("a", "z"))).toDF("name", "value")
-    (Seq("asOf" -> st.asOf(10), "asOfTimestamp" -> st.asOfTimestamp(Long.MaxValue),
+    Seq("asOf" -> st.asOf(10), "asOfTimestamp" -> st.asOfTimestamp(Long.MaxValue),
       "Writer.append" -> graft.write.Writer.write(st, """write (value="y")""")._1,
       "BulkMerge" -> graft.write.BulkMerge.mergeKeyed(st, batch, Seq("name")).store,
-      "compact" -> st.compact(s"$dir/compacted")) ++
-      graft.serve.ShardRouter.shardStores(st, 2).map("shard" -> _))
+      "compact" -> st.compact(s"$dir/compacted"))
       .foreach { case (how, d) => assert(d.conf == conf, how) }
   }
 

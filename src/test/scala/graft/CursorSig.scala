@@ -57,6 +57,8 @@ object CursorSig {
       case CountPat => "count"
       case CursorPat => "cursor"
       case EstimateCountPat => "estimate-count"
+      case EstimatePat => "estimate"
+      case IteratorPat => "iterator"
       case ContentsPat => "contents"
       case NonePat => "\"\""
       case VarPat(v) => v

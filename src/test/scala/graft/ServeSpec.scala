@@ -206,6 +206,37 @@ class ServeSpec extends AnyFunSuite {
     assert(counted.rows.head(0) == all.rows.length.toLong)
   }
 
+  test("fixture-corpus point reads: snapshot answers match the Catalyst plan") {
+    // the point-read class at sf0.001 — word and prefix matches, counts,
+    // start/pagesize pages, and sorts under comparators, directions and
+    // two keys — on a distributed store, so `ReadPlanner.plan` is the
+    // Catalyst plan
+    val store = graft.store.GraphAdapter.store(spark, "/root/testdata/sf0.001")
+    val snap = PointServer.build(store)
+    Seq(
+      """read (type="customer" value~="42" result=((guid value)))""",
+      """read (type="customer" result=count)""",
+      """read (type="part" value~="gea*" result=((guid value)))""",
+      """read (any value~="special" result=((guid value)) pagesize=7)""",
+      """read (type="supplier" result=((guid value)) start=3 pagesize=5)""",
+      """read (type="customer" sort=value pagesize=3 result=((value)))""",
+      """read (type="supplier" sort=-value result=((guid value)))""",
+      """read (type="part" sort=(value guid) start=2 pagesize=6 result=((guid value)))""",
+      """read (type="customer" sort-comparator=number sort=value result=((guid value)))""",
+      """read (any value~="special" sort=-guid pagesize=5 result=((guid value)))"""
+    ).foreach { q =>
+      val served = PointServer.serve(snap, q)
+      assert(served.isDefined, s"not served: $q")
+      val df = ReadPlanner.plan(store, q)
+      assert(!isLocal(df), s"planned from a snapshot: $q")
+      assert(served.get.columns == df.columns.toSeq, s"columns differ: $q")
+      val got = served.get.rows.map(_.toSeq.map(norm))
+      val want = rowsOf(df)
+      if (graft.gql.Parser.parseRead(q).sort.nonEmpty) assert(got == want, s"sorted rows differ: $q")
+      else assert(got.sortBy(_.toString) == want.sortBy(_.toString), s"rows differ: $q")
+    }
+  }
+
   test("count result") {
     check("""read (type="person" result=count)""")
     check("""read (typeguid=3 result=count)""")
